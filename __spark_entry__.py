@@ -1117,15 +1117,14 @@ GROUP BY user_id, session_id
 # BagOfWords.scala:9-28, TextEvaluationMetric.scala:9-13): pair each doc
 # with its successor as pred/gold and compute CER + bag-of-words cosine
 # Spark side restructured for execution shape ONLY (the DuckDB twin
-# keeps the original construction; strict float-repr parity verified at
+# keeps the join-based construction; strict float-repr parity verified at
 # sf0.01/sf0.1):
-# * cos: the original joins vec back to toks and sums dot_part over the
-#   JOINED rows — a shared token matches both its 'p' and 'g' toks row,
-#   so each dot product is counted twice. 2*sum(pc*gc) is the same
-#   number EXACTLY (all terms are BIGINT counts — integer math, no
-#   float-order sensitivity), with one aggregation instead of
-#   agg + self-join + agg: the whole toks subtree is evaluated once,
-#   not twice, and two Exchanges + a SortMergeJoin disappear.
+# * cos: the dot product and both norms come from ONE aggregation over
+#   the per-token (pc, gc) vector, where the twin aggregates the dot
+#   product and the norms separately and joins them. Every term is a
+#   BIGINT count (integer math, no float-order sensitivity), so both
+#   give the same number exactly; here the toks subtree is evaluated
+#   once, with no self-join.
 # * lev: levenshtein is O(|pred|·|gold|) per row and ran in the
 #   post-join projection, which AQE coalesces to ONE partition at this
 #   size — the REBALANCE marker (rewritten to an AQE-exempt
@@ -1153,7 +1152,7 @@ vec AS (
 ),
 cos AS (
   SELECT doc_id,
-         (2 * sum(pc * gc)) /
+         sum(pc * gc) /
          (sqrt(sum(pc * pc)) * sqrt(sum(gc * gc))) AS cosine
   FROM vec GROUP BY doc_id
 ),
@@ -1191,13 +1190,18 @@ vec AS (
          token
   FROM toks GROUP BY doc_id, token
 ),
+dot AS (
+  SELECT doc_id, sum(dot_part) AS dot FROM vec GROUP BY doc_id
+),
+norms AS (
+  SELECT doc_id,
+         sqrt(sum(CASE WHEN side='p' THEN c*c ELSE 0 END)) AS pn,
+         sqrt(sum(CASE WHEN side='g' THEN c*c ELSE 0 END)) AS gn
+  FROM toks GROUP BY doc_id
+),
 cos AS (
-  SELECT v.doc_id,
-         sum(v.dot_part) /
-         (sqrt(sum(CASE WHEN t.side='p' THEN t.c*t.c ELSE 0 END)) *
-          sqrt(sum(CASE WHEN t.side='g' THEN t.c*t.c ELSE 0 END))) AS cosine
-  FROM vec v JOIN toks t ON v.doc_id = t.doc_id AND v.token = t.token
-  GROUP BY v.doc_id
+  SELECT d.doc_id, d.dot / (n.pn * n.gn) AS cosine
+  FROM dot d JOIN norms n ON d.doc_id = n.doc_id
 )
 SELECT p.doc_id,
        round(levenshtein(p.pred, p.gold) / length(p.gold), 4) AS cer,
@@ -2274,11 +2278,13 @@ FROM cf
 def _dedup_corpus_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed scale-safe dedup pipeline (operators/dedup
     .dedup_corpus): exact-duplicate pre-collapse → capped MinHash-LSH
-    candidates on representatives → large-star/small-star components →
-    full-domain keep/drop verdicts. The oracle is the NAIVE uncapped
-    construction (all-docs LSH + recursive-CTE closure) — the green row
-    is the proof that pre-collapse + hot-bucket capping leave the output
-    clusters bit-identical while removing the b² pair blowup."""
+    candidates on representatives → connected components over the
+    representative pairs only → full-domain keep/drop verdicts, with
+    exact members labelled by key from their representative (they never
+    enter components). The oracle is the NAIVE uncapped construction
+    (all-docs LSH + recursive-CTE closure) — the green row is the proof
+    that pre-collapse, key labelling and hot-bucket capping leave the
+    output clusters bit-identical while removing the b² pair blowup."""
     from jochre3_ocr_spark.operators.dedup import dedup_corpus
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -2354,8 +2360,8 @@ def _dedup_adversarial_density(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     # materialize the augmented corpus ONCE (5 420 rows): the dedup
-    # pipeline scans its input ~6 times (density probe, collapse reps +
-    # expand, candidates, full-domain verdict join), and each scan would
+    # pipeline scans its input several times (density probe, collapse
+    # reps, members, full-domain verdict join), and each scan would
     # otherwise re-run the single-partition rank window + crossJoins
     corpus = (
         base.unionByName(dup).unionByName(near).localCheckpoint(eager=True)

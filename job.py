@@ -435,12 +435,9 @@ def main(argv=None) -> int:
                 from pyspark.sql import functions as F
 
                 min_tokens = 3 if args.dedup_method == "minhash" else 1
-                if precollapse:
-                    _, banded = _collapse_reps(
-                        docs, "doc_id", "text", min_tokens
-                    )
-                else:
-                    banded = docs
+                _, banded = _collapse_reps(
+                    docs, "doc_id", "text", min_tokens, precollapse
+                )
                 cap = args.max_bucket or None
                 if args.dedup_method == "minhash":
                     stats = lsh_bucket_stats(banded, max_bucket=cap)

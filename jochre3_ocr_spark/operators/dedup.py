@@ -885,6 +885,7 @@ def _cc_driver(spark, pair_schema, rows) -> DataFrame:
     comparison is code-point order == Spark's UTF8 binary order (UTF-8
     preserves code-point ordering), so min-per-component labels are
     identical to the distributed paths'."""
+    import pandas as pd
     from pyspark.sql import types as T
 
     parent: dict = {}
@@ -911,7 +912,15 @@ def _cc_driver(spark, pair_schema, rows) -> DataFrame:
         m = comp_min.get(r)
         if m is None or node < m:
             comp_min[r] = node
-    out = [(n, comp_min[find(n)]) for n in parent]
+    # a pandas frame crosses to the JVM as Arrow batches (with
+    # spark.sql.execution.arrow.pyspark.enabled, set by get_spark); a
+    # list of tuples becomes a pickled Python RDD whose first action
+    # forks a Python worker per core just to unpickle the rows (~60 MB
+    # RSS each, measured)
+    out = pd.DataFrame(
+        [(n, comp_min[find(n)]) for n in parent],
+        columns=["doc_id", "cluster_id"],
+    )
     dtype = pair_schema["a"].dataType
     schema = T.StructType(
         [
@@ -920,7 +929,7 @@ def _cc_driver(spark, pair_schema, rows) -> DataFrame:
         ]
     )
     # createDataFrame is RDD-backed — no size stats, so a downstream
-    # join (e.g. the singletons anti-join in _cluster_verdicts) plans a
+    # join (e.g. the members left join in _cluster_verdicts) plans a
     # SortMergeJoin and shuffles the CORPUS side against this ≤2·cap-row
     # frame. The frame is bounded by construction (≤ ~200k ids ≈ 20 MB),
     # so mark it broadcastable: consumers get a BroadcastHashJoin with
@@ -1040,36 +1049,6 @@ def _cc_propagation(
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
-def _precollapsed_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_tokens: int,
-    candidate_fn,
-) -> DataFrame:
-    """Exact-duplicate pre-collapse for candidate generation.
-
-    The dominant cause of hot LSH/simhash buckets at corpus scale is a
-    giant group of IDENTICAL documents (boilerplate, empty pages) — every
-    member has the same signature, so all of them land in every one of
-    each other's buckets. Collapsing each distinct text to ONE
-    representative (the min doc_id, keyed by md5 so the shuffle carries a
-    32-char hash instead of the text) before signature generation removes
-    that entire class of blowup; ``candidate_fn`` then runs on the
-    representatives only, and the collapsed members are re-attached as
-    star-link edges (rep → member) so connected components downstream see
-    exactly the clusters the naive all-docs construction produces.
-
-    Members are re-attached only when the text yields at least
-    ``min_tokens`` tokens (the n-shingle threshold for MinHash, 1 for
-    SimHash) — mirroring the candidate generators, which never pair docs
-    that produce no signature, identical or not.
-    """
-    expand, rep_rows = _collapse_reps(df, id_col, text_col, min_tokens)
-    pairs = candidate_fn(rep_rows).select("doc1", "doc2")
-    return pairs.unionByName(expand)
-
-
 #: minimum estimated exact-duplicate fraction at which "auto" turns the
 #: exact pre-collapse on: below this, collapsing buys nothing (every text
 #: is its own representative) and the collapse's extra groupBy+joins are
@@ -1157,24 +1136,47 @@ def _resolve_precollapse(
 
 
 def _collapse_reps(
-    df: DataFrame, id_col: str, text_col: str, min_tokens: int
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    min_tokens: int,
+    precollapse: bool,
 ) -> tuple[DataFrame, DataFrame]:
-    """(star-link expand edges, representative rows) for the exact
-    pre-collapse — factored out so callers can also run bucket-stats
-    observability over the SAME representative frame the candidate
-    generator sees (:func:`dedup_corpus` ``warn_hot_buckets``).
+    """(members, reps) for :func:`_cluster_verdicts`. ``reps`` is
+    (doc_id, text), the frame candidate generation runs on — callers
+    also run bucket-stats observability over it (``warn_hot_buckets``,
+    ``job.py``). ``members`` is (doc_id, rep, linked), one row per
+    corpus doc: the doc takes ``rep``'s component label when ``linked``,
+    and is its own singleton otherwise. Without ``precollapse`` every
+    doc is its own linked representative.
 
-    Shuffle shape (guide §2.3): ONE ``groupBy(th)`` computes the
-    representative id AND carries the representative's text via
-    ``min_by(text, doc_id)`` — every row in a ``th`` group has the
-    identical text (``th`` IS md5(text)), so ``min_by`` returns the
-    same bytes the old semi-join fetched, and doc_id ties are
-    impossible (unique ids). The map-side partial agg collapses a
-    giant boilerplate group to ONE (th, rep, text) row per task
-    before the exchange — the old shape shuffled every member's text
-    through a doc_id semi-join (3 Exchanges, text keyed by doc_id);
-    this one shuffles one text per (group, task) keyed by th
-    (1 Exchange + the no-text expand join)."""
+    With ``precollapse`` each distinct text collapses to ONE
+    representative, its minimum doc_id: a giant group of IDENTICAL docs
+    (boilerplate, empty pages) is the dominant cause of hot LSH/simhash
+    buckets, since every member lands in every one of the others'
+    buckets. Members are labelled by key and never enter connected
+    components; because each rep is its group's minimum,
+    ``coalesce(cc_label, rep)`` is exactly the naive construction's
+    component minimum. A member is linked only when the text yields at
+    least ``min_tokens`` tokens (the n-shingle threshold for MinHash, 1
+    for SimHash), mirroring the generators, which never pair docs that
+    produce no signature, identical or not.
+
+    Shuffle shape (guide §2.3): ONE ``groupBy(th)``, th = md5(text),
+    computes the rep AND carries its text via ``min_by(text, doc_id)``
+    (one text per group, ids unique), so the map-side partial agg ships
+    one (th, rep, text) row per group and task. The members side is a
+    text-free LEFT join on ``th``: md5(NULL) is NULL, and an inner join
+    would drop NULL-text docs instead of keeping them as singletons."""
+    if not precollapse:
+        reps = df.select(
+            F.col(id_col).cast("string").alias("doc_id"),
+            F.col(text_col).alias("text"),
+        )
+        members = reps.select(
+            "doc_id", F.col("doc_id").alias("rep"), F.lit(True).alias("linked")
+        )
+        return members, reps
     keyed = df.select(
         F.col(id_col).cast("string").alias("doc_id"),
         F.col(text_col).alias("text"),
@@ -1187,47 +1189,45 @@ def _collapse_reps(
         F.min("doc_id").alias("rep"),
         F.min_by("text", "doc_id").alias("text"),
     )
-    expand = (
+    members = (
         keyed.select("th", "doc_id", "ntok")
-        .join(reps.select("th", "rep"), "th")
-        .filter(
-            (F.col("doc_id") != F.col("rep")) & (F.col("ntok") >= min_tokens)
+        .join(reps.select("th", "rep"), "th", "left")
+        .select(
+            "doc_id",
+            "rep",
+            (
+                (F.col("doc_id") == F.col("rep"))
+                | (F.col("ntok") >= min_tokens)
+            ).alias("linked"),
         )
-        .select(F.col("rep").alias("doc1"), F.col("doc_id").alias("doc2"))
     )
-    rep_rows = reps.select(F.col("rep").alias("doc_id"), "text")
-    return expand, rep_rows
+    return members, reps.select(F.col("rep").alias("doc_id"), "text")
 
 
-def _cluster_verdicts(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    include_singletons: bool,
-) -> DataFrame:
-    """Candidate pairs → components → (doc_id, cluster_id, cluster_size,
-    is_canonical), optionally unioned with singleton rows for unpaired
-    docs."""
-    cc = connected_components(pairs)
-    w = Window.partitionBy("cluster_id")
-    out = (
-        cc.withColumn("cluster_size", F.count("*").over(w))
+def _cluster_verdicts(members: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Representative-level candidate pairs → components → one
+    (doc_id, cluster_id, cluster_size, is_canonical) row per member.
+
+    One left join of the members onto the component labels: a linked
+    member takes ``coalesce(cc_label, rep)``, anything else (short or
+    NULL text) is its own cluster. ``cluster_size`` counts members per
+    cluster, so singletons come out with size 1."""
+    cc = connected_components(pairs).select(
+        F.col("doc_id").alias("rep"), F.col("cluster_id").alias("cc_label")
+    )
+    cluster_id = (
+        F.when(F.col("linked"), F.coalesce("cc_label", "rep"))
+        .otherwise(F.col("doc_id"))
+        .alias("cluster_id")
+    )
+    return (
+        members.join(cc, "rep", "left")
+        .select("doc_id", cluster_id)
+        .withColumn(
+            "cluster_size", F.count("*").over(Window.partitionBy("cluster_id"))
+        )
         .withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
-        .select("doc_id", "cluster_id", "cluster_size", "is_canonical")
     )
-    if include_singletons:
-        singles = (
-            df.select(F.col(id_col).cast("string").alias("doc_id"))
-            .join(cc.select("doc_id"), "doc_id", "left_anti")
-            .select(
-                "doc_id",
-                F.col("doc_id").alias("cluster_id"),
-                F.lit(1).cast("long").alias("cluster_size"),
-                F.lit(True).alias("is_canonical"),
-            )
-        )
-        out = out.unionByName(singles)
-    return out
 
 
 def duplicate_clusters(
@@ -1249,13 +1249,13 @@ def duplicate_clusters(
 
     Scale posture (on by default, both invariant on the OUTPUT clusters):
     ``precollapse_exact`` collapses identical texts to one representative
-    before signature generation and re-attaches members as star-link
-    edges (:func:`_precollapsed_pairs`) — a 10⁶-doc boilerplate group
-    costs 1 signature + 10⁶ edges instead of 10¹² band-join pairs;
-    ``max_bucket`` caps any residual hot band bucket
-    (:func:`_capped_bucket_pairs`). Both only restructure the candidate
-    EDGES; the connected components, and therefore every output row, are
-    identical to the naive uncapped construction.
+    before signature generation; exact members are labelled by key from
+    their representative's component and never enter connected
+    components (:func:`_collapse_reps`) — a 10⁶-doc boilerplate group
+    costs 1 signature and one join row per member instead of 10¹²
+    band-join pairs. ``max_bucket`` caps any residual hot band bucket
+    (:func:`_capped_bucket_pairs`). Every output row is identical to the
+    naive uncapped all-docs construction.
 
     ``precollapse_exact="auto"`` (default) runs one cheap density probe
     (:func:`_exact_dup_density`) and collapses only when the estimated
@@ -1267,28 +1267,24 @@ def duplicate_clusters(
     output-invariant, the probe's decision can never change results —
     pass True/False to skip the probe job when the density is known.
 
-    DOMAIN: by default rows cover only docs that appear in at least one
-    candidate pair — unique docs get NO row, so a consumer filtering
-    ``is_canonical`` directly would drop them. Either left-join this
-    table back to the corpus and ``coalesce(is_canonical, true)`` (the
-    ``corpus_filter_verdicts`` pattern), or pass
-    ``include_singletons=True`` to union every unpaired doc as its own
-    cluster (cluster_size=1, is_canonical=true)."""
-    if _resolve_precollapse(df, id_col, text_col, precollapse_exact):
-        pairs = _precollapsed_pairs(
-            df,
-            id_col,
-            text_col,
-            n,
-            lambda reps: minhash_lsh_candidates(
-                reps, "doc_id", "text", n, num_hashes, band_size, max_bucket
-            ),
-        )
-    else:
-        pairs = minhash_lsh_candidates(
-            df, id_col, text_col, n, num_hashes, band_size, max_bucket
-        )
-    return _cluster_verdicts(df, pairs, id_col, include_singletons)
+    DOMAIN: by default rows cover only docs in a cluster of two or more
+    (``cluster_size > 1``) — unique docs get NO row, so a consumer
+    filtering ``is_canonical`` directly would drop them. Either left-join
+    this table back to the corpus and ``coalesce(is_canonical, true)``
+    (the ``corpus_filter_verdicts`` pattern), or pass
+    ``include_singletons=True`` to keep every doc, unique ones as their
+    own cluster (cluster_size=1, is_canonical=true)."""
+    members, reps = _collapse_reps(
+        df, id_col, text_col, n,
+        _resolve_precollapse(df, id_col, text_col, precollapse_exact),
+    )
+    out = _cluster_verdicts(
+        members,
+        minhash_lsh_candidates(
+            reps, "doc_id", "text", n, num_hashes, band_size, max_bucket
+        ),
+    )
+    return out if include_singletons else out.filter(F.col("cluster_size") > 1)
 
 
 def dedup_corpus(
@@ -1310,8 +1306,10 @@ def dedup_corpus(
     should run instead of assembling the parts: exact-duplicate
     pre-collapse (density-gated, see below) → capped candidate
     generation on representatives (``method="minhash"`` LSH banding or
-    ``method="simhash"`` banded Hamming) → connected components → one
-    verdict row per corpus document.
+    ``method="simhash"`` banded Hamming) → connected components over the
+    representative pairs only → one verdict row per corpus document,
+    exact members labelled by key from their representative
+    (:func:`_collapse_reps`).
 
     ``precollapse_exact`` follows :func:`duplicate_clusters`: "auto"
     (default) probes the exact-duplicate density once and collapses only
@@ -1342,25 +1340,14 @@ def dedup_corpus(
         )
     else:
         raise ValueError(f"unknown method: {method!r}")
-    min_tokens = n if method == "minhash" else 1
-    precollapse_exact = _resolve_precollapse(
-        df, id_col, text_col, precollapse_exact
+    members, reps = _collapse_reps(
+        df, id_col, text_col, n if method == "minhash" else 1,
+        _resolve_precollapse(df, id_col, text_col, precollapse_exact),
     )
-    if precollapse_exact:
-        expand, rep_rows = _collapse_reps(df, id_col, text_col, min_tokens)
-    else:
-        expand = None
-        rep_rows = df.select(
-            F.col(id_col).cast("string").alias("doc_id"),
-            F.col(text_col).alias("text"),
-        )
     if warn_hot_buckets and max_bucket is not None:
-        _warn_hot_buckets(rep_rows, method, n, num_hashes, band_size,
+        _warn_hot_buckets(reps, method, n, num_hashes, band_size,
                           bits, n_bands, max_bucket)
-    pairs = candidate_fn(rep_rows).select("doc1", "doc2")
-    if expand is not None:
-        pairs = pairs.unionByName(expand)
-    out = _cluster_verdicts(df, pairs, id_col, include_singletons=True)
+    out = _cluster_verdicts(members, candidate_fn(reps))
     return out.withColumn("keep", F.col("is_canonical"))
 
 

@@ -542,8 +542,8 @@ def test_dedup_corpus_minhash_matches_naive_full_domain(spark):
 
 
 def test_dedup_corpus_simhash_clusters_identical_docs(spark):
-    """The simhash-backed composition: identical docs cluster (through
-    the exact pre-collapse star-links), uniques stay canonical keeps,
+    """The simhash-backed composition: identical docs cluster (labelled
+    from their exact-group representative), uniques stay canonical keeps,
     and exactly one keep per cluster."""
     from jochre3_ocr_spark.operators.dedup import dedup_corpus
 
@@ -557,6 +557,126 @@ def test_dedup_corpus_simhash_clusters_identical_docs(spark):
     assert sum(r.keep for r in giant) == 1 and by_doc["g000"].keep
     for u in ("u1", "u2", "u3"):
         assert by_doc[u].cluster_size == 1 and by_doc[u].keep
+
+
+def _exact_labelling_corpus(spark):
+    """An exact group whose text is the base of a near-duplicate family
+    (so its members must take a label from OUTSIDE the group: the
+    family's minimum "a00" sorts before the group's representative
+    "e00"), a second exact group on its own, an exact group below the
+    3-shingle threshold (members stay singletons under MinHash), and
+    unique docs."""
+    base = " ".join(f"w{i:02d}" for i in range(20))
+    rows = [(f"a{i:02d}", f"{base} zq{i}") for i in range(12)]
+    rows += [(f"e{i:02d}", base) for i in range(30)]
+    rows += [(f"x{i:02d}", "boilerplate footer text for every page")
+             for i in range(10)]
+    rows += [(f"s{i}", "tiny doc") for i in range(5)]
+    rows += [(f"u{i}", " ".join(f"u{i}t{j}" for j in range(8)))
+             for i in range(6)]
+    return spark.createDataFrame(rows, "doc_id string, text string")
+
+
+@pytest.mark.parametrize("cc_cap", [None, 2])
+def test_dedup_corpus_matches_naive_on_both_cc_routes(
+    spark, monkeypatch, cc_cap
+):
+    """Labelling exact members by key equals the naive all-docs
+    construction (no pre-collapse, no bucket cap) on a corpus with an
+    exact group, a near-duplicate family above ``max_bucket`` and a
+    short exact group — once with the representative graph on the
+    driver union-find, once forced onto the distributed route."""
+    from pyspark.sql import functions as F
+
+    if cc_cap is not None:
+        monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_PAIRS", cc_cap)
+    docs = _exact_labelling_corpus(spark)
+    got = dedup.dedup_corpus(docs, max_bucket=4, precollapse_exact=True)
+    want = dedup.duplicate_clusters(
+        docs, precollapse_exact=False, max_bucket=None,
+        include_singletons=True,
+    ).withColumn("keep", F.col("is_canonical"))
+    got_rows = rows(got)
+    assert got_rows == rows(want)
+    by_doc = {r[0]: r for r in got_rows}
+    assert by_doc["e17"][1] == "a00" and by_doc["e17"][2] == 42
+    assert by_doc["x03"][1] == "x00" and by_doc["x03"][2] == 10
+    assert all(by_doc[f"s{i}"][1:3] == (f"s{i}", 1) for i in range(5))
+
+
+def test_dedup_runs_components_over_representatives_only(
+    spark, monkeypatch
+):
+    """Exact members never reach connected_components: with an exact
+    group alone larger than the driver cap, the pairs CC receives are
+    between representatives only (no rep→member edge), and every member
+    still clusters to the group minimum."""
+    from pyspark.sql import functions as F
+
+    seen = []
+    real_cc = dedup.connected_components
+
+    def spy(pairs, *args, **kwargs):
+        seen.extend(tuple(r) for r in pairs.select("doc1", "doc2").collect())
+        return real_cc(pairs, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_PAIRS", 3)
+    monkeypatch.setattr(dedup, "connected_components", spy)
+    docs = _exact_labelling_corpus(spark)
+    reps = {
+        r.rep
+        for r in docs.groupBy("text").agg(F.min("doc_id").alias("rep"))
+        .collect()
+    }
+    out = {
+        r.doc_id: r
+        for r in dedup.dedup_corpus(
+            docs, max_bucket=4, precollapse_exact=True
+        ).collect()
+    }
+    assert seen and {d for pair in seen for d in pair} <= reps
+    assert all(out[f"x{i:02d}"].cluster_id == "x00" for i in range(10))
+    assert all(out[f"e{i:02d}"].cluster_id == "a00" for i in range(30))
+
+
+@pytest.mark.parametrize("method", ["minhash", "simhash"])
+def test_null_and_empty_text_docs_are_singletons(spark, method):
+    """md5(NULL) is NULL, so NULL-text docs have no exact-group key:
+    they (and empty or blank texts, which yield no tokens) come out as
+    their own size-1 canonical clusters — with the pre-collapse on or
+    off, from dedup_corpus and from the full-domain duplicate_clusters."""
+    good = "one two three four five six seven eight"
+    docs = spark.createDataFrame(
+        [(f"n{i}", None) for i in range(3)]
+        + [(f"m{i}", "") for i in range(3)]
+        + [(f"b{i}", "   ") for i in range(2)]
+        + [(f"g{i}", good) for i in range(4)],
+        "doc_id string, text string",
+    )
+    hostile = [f"n{i}" for i in range(3)] + [f"m{i}" for i in range(3)] + [
+        "b0", "b1"
+    ]
+    outs = [
+        dedup.dedup_corpus(docs, method=method, precollapse_exact=pc)
+        for pc in (True, False)
+    ]
+    if method == "minhash":
+        outs += [
+            dedup.duplicate_clusters(
+                docs, include_singletons=True, precollapse_exact=pc
+            )
+            for pc in (True, False)
+        ]
+    for out in outs:
+        by_doc = {r.doc_id: r for r in out.collect()}
+        assert len(by_doc) == 12
+        for d in hostile:
+            r = by_doc[d]
+            assert (r.cluster_id, r.cluster_size, r.is_canonical) == (
+                d, 1, True
+            )
+        assert all(by_doc[f"g{i}"].cluster_id == "g0" for i in range(4))
+        assert by_doc["g2"].cluster_size == 4
 
 
 def test_simhash_bucket_stats_reports_cap_drops(spark):

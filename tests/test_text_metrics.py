@@ -167,3 +167,28 @@ def test_interleaved_chunks_media_attachment(spark):
     )
     r = interleaved_chunk_documents(short, 8, 2, 5).collect()[0]
     assert r.n_media == 0 and r.media_refs == ""
+
+
+def test_eval_bow_cosine_is_textbook_cosine(spark):
+    """eval_text_metrics pairs each doc with its successor as pred/gold:
+    identical texts give bow_cosine 1.0, disjoint texts 0.0, and counts
+    enter as a plain cosine (pred a b c vs gold a a b → 3/√15), in the
+    Spark query and in its DuckDB twin alike."""
+    import duckdb
+
+    import __spark_entry__ as E
+
+    texts = ["a b c", "a b c", "a a b", "x y"]
+    want = {0: 1.0, 1: round(3 / 15 ** 0.5, 4), 2: 0.0}
+    view = "eval_cosine_docs"
+    spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    ).createOrReplaceTempView(view)
+    got = spark.sql(E._Q_EVAL_SPARK.replace("documents", view)).collect()
+    assert {r.doc_id: r.bow_cosine for r in got} == want
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", list(enumerate(texts)))
+    got = con.execute(E._Q_EVAL_DUCK).fetchall()
+    assert {r[0]: r[3] for r in got} == want
