@@ -18,7 +18,14 @@ plans/       the end-to-end DataFrame pipeline + checkpoint/resume
 streaming/   Trigger.AvailableNow facade over the batch pipeline
 """
 
+from jochre3_ocr_spark.worker import install_zip_cache_trim
+
 __version__ = "0.1.0"
+
+# every Spark Python worker that unpickles one of the package's functions
+# imports this module: from then on each task's start skips re-reading
+# the zip archives on the worker's path (see worker.ZipCacheTrim)
+install_zip_cache_trim()
 
 
 def __getattr__(name):

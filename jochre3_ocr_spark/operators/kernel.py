@@ -97,22 +97,28 @@ def process_document(
     return process_tree(doc, lexicon, config, topk_fn)
 
 
+def error_row(doc_id: str, exc: Exception | str) -> dict:
+    """The quarantine row of a document whose processing raised ``exc``
+    (or failed with the message ``exc``)."""
+    return {
+        "doc_id": doc_id,
+        "spans": [],
+        "text": None,
+        "processed_text": None,
+        "alternatives_json": None,
+        "n_spans": 0,
+        "n_words": 0,
+        "mean_confidence": 0.0,
+        "language": None,
+        "status": "error",
+        "error": exc if isinstance(exc, str) else f"{type(exc).__name__}: {exc}",
+    }
+
+
 def process_document_safe(doc_id: str, spans, lexicon, config=None, topk_fn=identity_topk) -> dict:
     """Error-quarantining wrapper: one bad document must never fail the
     job (SURVEY.md §3.4 — per-doc error column instead of task failure)."""
     try:
         return process_document(doc_id, spans, lexicon, config, topk_fn)
     except Exception as exc:  # noqa: BLE001 — quarantine anything
-        return {
-            "doc_id": doc_id,
-            "spans": [],
-            "text": None,
-            "processed_text": None,
-            "alternatives_json": None,
-            "n_spans": 0,
-            "n_words": 0,
-            "mean_confidence": 0.0,
-            "language": None,
-            "status": "error",
-            "error": f"{type(exc).__name__}: {exc}",
-        }
+        return error_row(doc_id, exc)

@@ -950,7 +950,7 @@ def _cell_pairs_pandas(base: DataFrame, assign: DataFrame, eps: float):
     # test's monkeypatch — the budget must be forceable)
     budget = _GRAM_BUDGET_BYTES
 
-    def gram(key, pdf: pd.DataFrame):
+    def gram(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vid").reset_index(drop=True)
         ids = pdf["vid"].to_numpy()
         x = np.array(

@@ -232,21 +232,32 @@ def _finalize(raw: DataFrame) -> DataFrame:
     )
 
 
+def _kernel_row(doc_id, spans_json, lexicon, config: PipelineConfig) -> dict:
+    """One doc through the kernel, span JSON in and out. The decode runs
+    inside the per-doc quarantine too: a NULL or malformed ``spans_json``
+    becomes an error row, never a failed task."""
+    from jochre3_ocr_spark.operators.kernel import error_row, process_document_safe
+
+    try:
+        spans = _spans_json_to_tuples(spans_json)
+    except Exception as exc:  # noqa: BLE001 — quarantine anything
+        out = error_row(doc_id, exc)
+    else:
+        out = process_document_safe(doc_id, spans, lexicon, config)
+    out["spans_json"] = _tuples_to_json(out.pop("spans"))
+    return out
+
+
 def _make_extract_fn(lexicon_bc, config: PipelineConfig):
     """Build the mapInPandas kernel; the lexicon arrives via broadcast."""
 
     def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from jochre3_ocr_spark.operators.kernel import process_document_safe
-
         lexicon = _get_worker_lexicon(lexicon_bc)
         for batch in batches:
-            rows = []
-            for doc_id, spans_json in zip(batch["doc_id"], batch["spans_json"]):
-                out = process_document_safe(
-                    doc_id, _spans_json_to_tuples(spans_json), lexicon, config
-                )
-                out["spans_json"] = _tuples_to_json(out.pop("spans"))
-                rows.append(out)
+            rows = [
+                _kernel_row(doc_id, spans_json, lexicon, config)
+                for doc_id, spans_json in zip(batch["doc_id"], batch["spans_json"])
+            ]
             yield pd.DataFrame(rows, columns=_OUT_FIELDS)
 
     return extract_batches
@@ -296,48 +307,48 @@ def extract(
 
 
 # ------------------------------------------------------- giant-doc salting
-def _split_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Split each giant doc's span list into chunk rows at top-level
+def _split_spans(spans_json: str) -> list[str]:
+    """Cut one giant doc's span JSON into chunk JSONs at top-level
     block/media boundaries (blocks are independent for every downstream
-    semantic — Page.scala:156-166)."""
+    semantic — Page.scala:156-166). An empty doc is one empty chunk."""
+    chunks: list[list] = [[]]
+    for s in json.loads(spans_json):
+        if (
+            s.get("kind") in ("block", "media")
+            and len(chunks[-1]) >= CHUNK_TARGET_SPANS
+        ):
+            chunks.append([])
+        chunks[-1].append(s)
+    return [json.dumps(chunk, ensure_ascii=False) for chunk in chunks]
+
+
+def _split_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """One row per chunk of each giant doc. A doc whose span JSON does not
+    split (NULL, malformed) passes through as its own single chunk, so the
+    chunk kernel's quarantine turns it into an error row."""
     for batch in batches:
         rows = []
         for doc_id, spans_json in zip(batch["doc_id"], batch["spans_json"]):
-            spans = json.loads(spans_json)
-            chunks: list[list] = [[]]
-            for s in spans:
-                if (
-                    s.get("kind") in ("block", "media")
-                    and len(chunks[-1]) >= CHUNK_TARGET_SPANS
-                ):
-                    chunks.append([])
-                chunks[-1].append(s)
-            for i, chunk in enumerate(chunks):
-                if chunk:
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "chunk_id": i,
-                            "spans_json": json.dumps(chunk, ensure_ascii=False),
-                        }
-                    )
+            try:
+                chunks = _split_spans(spans_json)
+            except Exception:  # noqa: BLE001 — quarantined by the chunk kernel
+                chunks = [spans_json]
+            rows.extend(
+                {"doc_id": doc_id, "chunk_id": i, "spans_json": chunk}
+                for i, chunk in enumerate(chunks)
+            )
         yield pd.DataFrame(rows, columns=["doc_id", "chunk_id", "spans_json"])
 
 
 def _make_chunk_extract_fn(lexicon_bc, config: PipelineConfig):
     def extract_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from jochre3_ocr_spark.operators.kernel import process_document_safe
-
         lexicon = _get_worker_lexicon(lexicon_bc)
         for batch in batches:
             rows = []
             for doc_id, chunk_id, spans_json in zip(
                 batch["doc_id"], batch["chunk_id"], batch["spans_json"]
             ):
-                out = process_document_safe(
-                    doc_id, _spans_json_to_tuples(spans_json), lexicon, config
-                )
-                out["spans_json"] = _tuples_to_json(out.pop("spans"))
+                out = _kernel_row(doc_id, spans_json, lexicon, config)
                 out["chunk_id"] = int(chunk_id)
                 rows.append(out)
             yield pd.DataFrame(rows, columns=["chunk_id", *_OUT_FIELDS])
@@ -355,12 +366,20 @@ def _majority_language(pdf: pd.DataFrame):
     return sorted(counts.items(), key=lambda kv: -kv[1])[0][0]
 
 
-def _reassemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+def _reassemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
     """Merge chunk outputs back into one document row (applyInPandas).
 
     Text joins mirror Page.content / Page.processedContent: "\\n\\n" and
-    "\\n" over text-bearing chunks."""
+    "\\n" over text-bearing chunks. A doc whose every chunk failed gets
+    the narrow path's quarantine row."""
     pdf = pdf.sort_values("chunk_id")
+    errors = [e for e in pdf["error"] if e]
+    if not (pdf["status"] == "ok").any():
+        from jochre3_ocr_spark.operators.kernel import error_row
+
+        out = error_row(key[0], "; ".join(errors))
+        out["spans_json"] = _tuples_to_json(out.pop("spans"))
+        return pd.DataFrame([out], columns=_OUT_FIELDS)
     spans: list[dict] = []
     for chunk_json in pdf["spans_json"]:
         for s in json.loads(chunk_json):
@@ -372,7 +391,6 @@ def _reassemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
     for a in pdf["alternatives_json"]:
         if a:
             alts.update(json.loads(a))
-    errors = [e for e in pdf["error"] if e]
     return pd.DataFrame(
         [
             {
@@ -449,8 +467,12 @@ def extract_with_salting(
         giant = pruned.drop("n_in_spans")
         normal = None
     else:
+        # a NULL count (NULL or malformed span JSON under ANSI) takes the
+        # narrow branch, whose quarantine turns the doc into an error row;
+        # `n <= t` and `n > t` alone would both drop it
         normal = pruned.filter(
-            F.col("n_in_spans") <= giant_threshold
+            F.col("n_in_spans").isNull()
+            | (F.col("n_in_spans") <= giant_threshold)
         ).drop("n_in_spans")
         giant = pruned.filter(F.col("n_in_spans") > giant_threshold).drop(
             "n_in_spans"
@@ -715,6 +737,7 @@ def ocr_corpus(
     lexicon_bc = spark.sparkContext.broadcast(list(lexicon_words))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from jochre3_ocr_spark.operators.kernel import error_row
         from jochre3_ocr_spark.operators.ocr import ocr_document
         from jochre3_ocr_spark.sources.layout_oracle import (
             build_page,
@@ -730,25 +753,12 @@ def ocr_corpus(
                     layout, gt = build_page(int(i), p)
                     layouts.append(layout)
                     lookups.append(glyph_content_lookup(gt))
+                doc_id = f"doc{int(i):08d}"
                 try:
-                    out = ocr_document(
-                        f"doc{int(i):08d}", layouts, lookups, lexicon, config
-                    )
-                    out["spans_json"] = _tuples_to_json(out.pop("spans"))
-                except Exception as exc:  # noqa: BLE001
-                    out = {
-                        "doc_id": f"doc{int(i):08d}",
-                        "spans_json": "[]",
-                        "text": None,
-                        "processed_text": None,
-                        "alternatives_json": None,
-                        "n_spans": 0,
-                        "n_words": 0,
-                        "mean_confidence": 0.0,
-                        "language": None,
-                        "status": "error",
-                        "error": f"{type(exc).__name__}: {exc}",
-                    }
+                    out = ocr_document(doc_id, layouts, lookups, lexicon, config)
+                except Exception as exc:  # noqa: BLE001 — quarantine
+                    out = error_row(doc_id, exc)
+                out["spans_json"] = _tuples_to_json(out.pop("spans"))
                 rows.append(out)
             yield pd.DataFrame(rows, columns=_OUT_FIELDS)
 
@@ -788,6 +798,7 @@ def ocr_documents(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import zlib
 
+        from jochre3_ocr_spark.operators.kernel import error_row
         from jochre3_ocr_spark.operators.ocr import ocr_document
         from jochre3_ocr_spark.sources.layout_oracle import (
             build_pages_from_words,
@@ -815,21 +826,9 @@ def ocr_documents(
                 lookups = [glyph_content_lookup(p[1]) for p in pages]
                 try:
                     out = ocr_document(doc_id, layouts, lookups, lexicon, config)
-                    out["spans_json"] = _tuples_to_json(out.pop("spans"))
                 except Exception as exc:  # noqa: BLE001 — quarantine
-                    out = {
-                        "doc_id": doc_id,
-                        "spans_json": "[]",
-                        "text": None,
-                        "processed_text": None,
-                        "alternatives_json": None,
-                        "n_spans": 0,
-                        "n_words": 0,
-                        "mean_confidence": 0.0,
-                        "language": None,
-                        "status": "error",
-                        "error": f"{type(exc).__name__}: {exc}",
-                    }
+                    out = error_row(doc_id, exc)
+                out["spans_json"] = _tuples_to_json(out.pop("spans"))
                 rows.append(out)
             yield pd.DataFrame(rows, columns=_OUT_FIELDS)
 

@@ -3,6 +3,7 @@ at any parallelism; salting preserves results; resume is idempotent."""
 
 import glob
 import os
+import warnings
 
 import pytest
 
@@ -86,11 +87,84 @@ def test_extract_parallelism_invariant(docs_df, oracle):
 
 
 def test_extract_with_salting_matches_oracle(docs_df, oracle):
-    """Force even small docs through the chunk/split/reassemble path."""
-    out = pipeline.extract_with_salting(
-        docs_df, lexicon_words(), giant_threshold=60, materialize_spans=True
-    )
+    """Force even small docs through the chunk/split/reassemble path.
+    Building the plan emits no warning (an applyInPandas function with
+    partial type hints makes pyspark warn on every call)."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = pipeline.extract_with_salting(
+            docs_df, lexicon_words(), giant_threshold=60, materialize_spans=True
+        )
     assert_matches_oracle(out.collect(), oracle)
+
+
+#: hostile span JSON: (doc_id, spans_json, n_in_spans)
+_HOSTILE = [
+    ("bad_null", None, None),
+    ("bad_malformed", '[{"kind": "word", "text": ', 5),
+    ("bad_malformed_giant", "not json at all", 100_000),
+]
+
+
+def _hostile_runs(spark, tmp_path, df):
+    inp = str(tmp_path / "hostile_in.parquet")
+    outp = str(tmp_path / "hostile_out.parquet")
+    words = lexicon_words()
+    df.write.parquet(inp)
+    pipeline.run_job(spark, inp, outp, words)
+    return {
+        "extract": pipeline.extract(df, words).collect(),
+        "salting": pipeline.extract_with_salting(df, words).collect(),
+        "salting_60": pipeline.extract_with_salting(
+            df, words, giant_threshold=60
+        ).collect(),
+        "run_job": spark.read.parquet(outp).collect(),
+    }
+
+
+@pytest.mark.parametrize("with_count", [True, False])
+def test_hostile_span_json_yields_one_row_per_doc(spark, oracle, tmp_path, with_count):
+    """A NULL or malformed ``spans_json`` is exactly one per-doc error row
+    on every extraction path: the decode runs inside the per-doc
+    quarantine (else one bad doc fails the job), a NULL span count takes
+    the narrow branch (else it passes neither branch filter and the doc
+    vanishes), and a malformed doc whose count sends it down the salted
+    path passes the chunk split as one chunk."""
+    good = [
+        (d["doc_id"], pipeline._tuples_to_json(d["spans"]), len(d["spans"]))
+        for d in generate_docs(6)
+    ]
+    df = spark.createDataFrame(
+        good + _HOSTILE, "doc_id string, spans_json string, n_in_spans int"
+    )
+    if not with_count:
+        df = df.drop("n_in_spans")
+    bad_ids = {doc_id for doc_id, _, _ in _HOSTILE}
+    bad_rows = {}
+    for path, rows in _hostile_runs(spark, tmp_path, df).items():
+        ids = [r["doc_id"] for r in rows]
+        assert sorted(ids) == sorted({i for i, _, _ in good} | bad_ids), path
+        bad = [r for r in rows if r["doc_id"] in bad_ids]
+        assert all(r["status"] == "error" and r["error"] for r in bad), (path, bad)
+        bad_rows[path] = {r["doc_id"]: r.asDict() for r in bad}
+        assert_matches_oracle(
+            [r for r in rows if r["doc_id"] not in bad_ids],
+            {i: oracle[i] for i, _, _ in good},
+        )
+    # the quarantine row is the same whichever branch the doc took (the
+    # giant-count doc goes through split, chunk kernel and reassemble)
+    fields = set.intersection(
+        *(set(next(iter(b.values()))) for b in bad_rows.values())
+    )
+    assert {"text", "processed_text", "alternatives_json", "error"} <= fields
+    expected = {
+        i: {f: v for f, v in row.items() if f in fields}
+        for i, row in bad_rows["extract"].items()
+    }
+    assert all(expected[i]["text"] is None for i in expected), expected
+    for path, bad in bad_rows.items():
+        got = {i: {f: v for f, v in row.items() if f in fields} for i, row in bad.items()}
+        assert got == expected, path
 
 
 def test_resume_is_idempotent(spark, docs_df, oracle, tmp_path):
