@@ -28,7 +28,8 @@ def _write_and_report(
     t0: float | None = None,
 ) -> int:
     """Shared epilogue for the annotate / corpus-op modes: overwrite-
-    write the result, report one JSON line, stop the session.
+    write the result, report one JSON line (its row count observed
+    during the write), stop the session.
 
     Callers whose operator does real work at CONSTRUCTION time must
     pass ``t0`` from before the operator call: under AQE, a
@@ -38,10 +39,11 @@ def _write_and_report(
     (pagerank, bpe-train, CC-based dedup) the rounds run BEFORE the
     write action — a timer started here would miss ~90% of the job
     (measured: 54 of 72 s at 1M-node pagerank/local[2])."""
+    from jochre3_ocr_spark.plans.pipeline import write_parquet_counted
+
     if t0 is None:
         t0 = time.time()
-    out.write.mode("overwrite").parquet(output_path)
-    n = spark.read.parquet(output_path).count()
+    n = write_parquet_counted(out, output_path, mode="overwrite")
     print(json.dumps({
         key: mode,
         "rows": n,

@@ -33,10 +33,11 @@ import hashlib
 import json
 import os
 import re
+from json.encoder import encode_basestring
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.errors import AnalysisException
 
 from jochre3_ocr_spark.schema import PipelineConfig
@@ -144,36 +145,27 @@ def _spans_json_to_tuples(spans_json: str) -> list[tuple]:
     ]
 
 
-_JSON_NEEDS_ESCAPE = re.compile(r'[\x00-\x1f"\\]')
-
-
-def _json_str(s) -> str:
-    if s is None:
-        return "null"
-    if _JSON_NEEDS_ESCAPE.search(s) is None:
-        return '"' + s + '"'
-    return json.dumps(s, ensure_ascii=False)
-
-
 def _tuples_to_json(spans) -> str:
     """Byte-identical to ``json.dumps([{...}, ...], ensure_ascii=False)``
-    over the span dicts (same separators, same escaping — strings
-    needing escapes fall back to json.dumps), ~35% faster by skipping
-    the intermediate dict objects. The span JSON is the engine's hot
-    JVM↔Python transport (~0.4 ms/doc of encode at corpus density)."""
-    parts = []
-    ap = parts.append
-    for k, t, m, o in spans:
-        ap(
-            '{"kind": %s, "text": %s, "media_ref": %s, "offset": %s}'
-            % (
-                _json_str(k),
-                _json_str(t),
-                _json_str(m),
-                "null" if o is None else o,
-            )
+    over the span dicts: same separators, and the same C string escaper
+    (``encode_basestring``) that json.dumps itself calls, without the
+    intermediate dict objects. The span JSON is the engine's hot
+    JVM↔Python transport.
+
+    Giant-doc reassembly (``_splice_spans_json``) shifts offsets by
+    matching the ``, "offset": N}`` this writes last in every span:
+    change the two together."""
+    enc = encode_basestring
+    return "[" + ", ".join([
+        '{"kind": %s, "text": %s, "media_ref": %s, "offset": %s}'
+        % (
+            "null" if k is None else enc(k),
+            "null" if t is None else enc(t),
+            "null" if m is None else enc(m),
+            "null" if o is None else o,
         )
-    return "[" + ", ".join(parts) + "]"
+        for k, t, m, o in spans
+    ]) + "]"
 
 
 # per-worker-process lexicon cache: tasks reuse the Lexicon (and its warm
@@ -366,6 +358,29 @@ def _majority_language(pdf: pd.DataFrame):
     return sorted(counts.items(), key=lambda kv: -kv[1])[0][0]
 
 
+#: the last key of every span ``_tuples_to_json`` writes. A ``"`` inside
+#: a JSON string is always escaped, so this never matches inside one.
+_SPAN_OFFSET = re.compile(r', "offset": (\d+)\}')
+
+
+def _splice_spans_json(chunk_jsons, chunk_n_spans) -> str:
+    """One doc's span JSON from its chunks' (in chunk order), without
+    decoding a span: the arrays are concatenated, and each chunk's
+    offsets (its own 0..n-1) are shifted by the span count before it."""
+    bodies = []
+    base = 0
+    for chunk_json, n in zip(chunk_jsons, chunk_n_spans):
+        if n:
+            body = chunk_json[1:-1]
+            if base:
+                body = _SPAN_OFFSET.sub(
+                    lambda m: f', "offset": {int(m[1]) + base}}}', body
+                )
+            bodies.append(body)
+            base += int(n)
+    return "[" + ", ".join(bodies) + "]"
+
+
 def _reassemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
     """Merge chunk outputs back into one document row (applyInPandas).
 
@@ -380,11 +395,6 @@ def _reassemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         out = error_row(key[0], "; ".join(errors))
         out["spans_json"] = _tuples_to_json(out.pop("spans"))
         return pd.DataFrame([out], columns=_OUT_FIELDS)
-    spans: list[dict] = []
-    for chunk_json in pdf["spans_json"]:
-        for s in json.loads(chunk_json):
-            s["offset"] = len(spans)
-            spans.append(s)
     texts = [t for t in pdf["text"] if t]
     processed = [t for t in pdf["processed_text"] if t]
     alts: dict = {}
@@ -395,11 +405,13 @@ def _reassemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         [
             {
                 "doc_id": key[0],
-                "spans_json": json.dumps(spans, ensure_ascii=False),
+                "spans_json": _splice_spans_json(
+                    pdf["spans_json"], pdf["n_spans"]
+                ),
                 "text": "\n\n".join(texts),
                 "processed_text": "\n".join(processed),
                 "alternatives_json": json.dumps(alts, ensure_ascii=False),
-                "n_spans": len(spans),
+                "n_spans": int(pdf["n_spans"].sum()),
                 "n_words": int(pdf["n_words"].sum()),
                 # exact word-count-weighted mean over chunks (the page
                 # mean is over ALL words, Jochre.scala:365-380)
@@ -878,6 +890,39 @@ def doc_lineage(spark: SparkSession, output_path: str) -> DataFrame:
     )
 
 
+def _read_written(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None when nothing is written
+    there yet: no path at all, or a directory without data files (a first
+    run killed before its first task commit).
+
+    Existence is decided BEFORE reading, so a first run never raises and
+    converts an AnalysisException: once a ``pyspark.sql.Observation`` has
+    run in the session, Spark's ObservationManager logs an ERROR stack
+    trace for every failed analysis. A read failure on an existing table
+    (corrupt parquet, permissions, IO) propagates."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    if not hpath.getFileSystem(sc._jsc.hadoopConfiguration()).exists(hpath):
+        return None
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if _is_missing_read(e, path):
+            return None
+        raise
+
+
+def write_parquet_counted(df: DataFrame, path: str, mode: str = "append") -> int:
+    """Write ``df`` as parquet and return the number of rows written.
+
+    The count is observed during the write itself (a
+    ``pyspark.sql.Observation``, read only after the write has returned),
+    so no second job re-reads the output just to report on it."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode).parquet(path)
+    return obs.get["rows"]
+
+
 def write_partition_metrics(
     spark: SparkSession, output_path: str, metrics_path: str
 ) -> int:
@@ -886,7 +931,7 @@ def write_partition_metrics(
     totals (north_rule: per-partition lineage + metrics enabling
     resume). Incremental: re-running after a resume adds rows only for
     the newly committed files, so totals never double-count. Returns
-    the number of NEW files checkpointed this run.
+    the number of NEW files checkpointed this run (one metrics row each).
 
     Derived from the committed output itself (one cheap column-pruned
     scan), so the metrics are exactly consistent with what a reader of
@@ -903,22 +948,10 @@ def write_partition_metrics(
     # parquet, permission error, transient IO) must propagate: swallowing
     # it would re-append rows for ALL committed files and silently
     # double-count totals on resume (ADVICE r2, medium).
-    fs_path = metrics_path[len("file:"):] if metrics_path.startswith("file:") else metrics_path
-    metrics_exist = (
-        os.path.isdir(fs_path) or os.path.isfile(fs_path)
-        if fs_path.startswith("/")
-        else True  # non-local FS: let the read itself decide
-    )
-    if metrics_exist:
-        try:
-            seen = spark.read.parquet(metrics_path).select("file").distinct()
-        except AnalysisException as e:
-            if _is_missing_read(e):
-                seen = None  # racing first run / empty dir: nothing seen yet
-            else:
-                raise
-        if seen is not None:
-            out = out.join(F.broadcast(seen), "file", "left_anti")
+    metrics = _read_written(spark, metrics_path)
+    if metrics is not None:
+        seen = metrics.select("file").distinct()
+        out = out.join(F.broadcast(seen), "file", "left_anti")
     new = (
         out.groupBy("file")
         .agg(
@@ -930,8 +963,7 @@ def write_partition_metrics(
         )
         .withColumn("committed_at", F.current_timestamp())
     )
-    new.write.mode("append").parquet(metrics_path)
-    return spark.read.parquet(metrics_path).select("file").distinct().count()
+    return write_parquet_counted(new, metrics_path)
 
 
 # ----------------------------------------------------------------- resume
@@ -945,7 +977,11 @@ def run_job(
     metrics_path: str | None = None,
 ) -> int:
     """Resumable batch run: anti-join completed doc_ids, process the rest,
-    append. Returns the total number of completed docs."""
+    append. Returns the number of completed docs: the distinct doc_ids
+    committed before this run plus the rows this run wrote (observed
+    during the write, not re-read). That is exact under FIXTURES.md's
+    unique-``doc_id`` input contract; an input repeating a doc_id counts
+    each written row."""
     # clear stale staging from a killed attempt: with a fresh job about to
     # write, any leftover _temporary content belongs to a dead run and
     # would otherwise be swept into this job's commit (duplicate rows)
@@ -961,23 +997,16 @@ def run_job(
         docs = spark.table(input_path[len("table:"):])
     else:
         docs = spark.read.parquet(input_path)
-    # The missing-output probe catches ONLY the analysis-time "no output
-    # yet" errors. Everything after it runs eager Spark jobs (counts,
-    # shuffles) whose RUNTIME failures must PROPAGATE: a broad except
-    # here would turn e.g. an ENOSPC during the id count into
-    # todo = docs — a silent full reprocess APPENDING millions of
+    # Only "no output yet" means a first run. Everything after it runs
+    # eager Spark jobs (counts, shuffles) whose RUNTIME failures must
+    # PROPAGATE, as must an existing output without a doc_id column: a
+    # broad except here would turn e.g. an ENOSPC during the id count
+    # into todo = docs — a silent full reprocess APPENDING millions of
     # duplicate rows on top of the committed output.
-    try:
-        done = (
-            spark.read.parquet(output_path).select("doc_id").distinct()
-        )
-        done.schema  # force analysis inside the guarded region
-    except AnalysisException as e:
-        if _is_missing_read(e, output_path):
-            done = None  # first run: nothing committed yet
-        else:
-            raise
+    committed = _read_written(spark, output_path)
+    done = None if committed is None else committed.select("doc_id").distinct()
     todo_ids = None
+    n_done = 0
     if done is None:
         todo = docs
     else:
@@ -1017,7 +1046,7 @@ def run_job(
     fn = extract_with_salting if salted else extract
     result = fn(todo, lexicon_words, config)
     try:
-        result.write.mode("append").parquet(output_path)
+        n_written = write_parquet_counted(result, output_path)
     finally:
         if done is not None:
             done.unpersist()
@@ -1025,4 +1054,4 @@ def run_job(
             todo_ids.unpersist()
     if metrics_path:
         write_partition_metrics(spark, output_path, metrics_path)
-    return spark.read.parquet(output_path).select("doc_id").distinct().count()
+    return n_done + n_written

@@ -2,6 +2,7 @@
 at any parallelism; salting preserves results; resume is idempotent."""
 
 import glob
+import json
 import os
 import warnings
 
@@ -167,6 +168,88 @@ def test_hostile_span_json_yields_one_row_per_doc(spark, oracle, tmp_path, with_
         assert got == expected, path
 
 
+#: word texts and media refs that stress the span JSON: quotes,
+#: backslashes, control characters and the reassembly splice's own
+#: pattern (the kernel may rewrite word texts; media refs pass through)
+_HOSTILE_TEXTS = ['"', "\\", "a\nb", "x\x01y", ', "offset": 3}', 'q"}', "שיל"]
+#: lines per block: 15 spans each, so one block is just above
+#: CHUNK_TARGET_SPANS and every block of a doc becomes its own chunk
+_LINES_PER_BLOCK = 1 + pipeline.CHUNK_TARGET_SPANS // 15
+
+
+def _block(i: int, n_lines: int = _LINES_PER_BLOCK, bad: bool = False) -> list[dict]:
+    """One media block plus one text block of hostile words; ``bad`` adds
+    a word whose text is a number, on which the kernel raises."""
+    spans = [
+        {"kind": "media", "media_ref": f'img{i}", "offset": 7}}\\'},
+        {"kind": "block"},
+    ]
+    for _ in range(n_lines):
+        spans.append({"kind": "line"})
+        for t in _HOSTILE_TEXTS:
+            spans += [{"kind": "word", "text": t}, {"kind": "space", "text": " "}]
+    if bad:
+        spans.append({"kind": "word", "text": 5})
+    return spans
+
+
+def _span_doc(doc_id: str, blocks: list[list[dict]]) -> tuple:
+    """(doc_id, spans_json, n_in_spans) of the concatenated blocks."""
+    spans = [
+        {"kind": s["kind"], "text": s.get("text"), "media_ref": s.get("media_ref"), "offset": i}
+        for i, s in enumerate(s for b in blocks for s in b)
+    ]
+    return doc_id, json.dumps(spans, ensure_ascii=False), len(spans)
+
+
+def _assert_same_json(got: str, want: str, doc_id: str) -> None:
+    """Byte equality of two span JSON strings, reporting the first
+    difference (pytest's diff of 300 kB strings takes minutes)."""
+    if got != want:
+        at = next((i for i, (a, b) in enumerate(zip(got, want)) if a != b), min(len(got), len(want)))
+        raise AssertionError(f"{doc_id}: differs at {at}: {got[at - 40:at + 40]!r} vs {want[at - 40:at + 40]!r}")
+
+
+def test_salted_reassembly_is_byte_identical_to_narrow(spark):
+    """Giant-doc reassembly splices the chunks' span JSON without decoding
+    it: the doc's spans_json and n_spans are byte-equal to the narrow
+    path's, over hostile texts, and a failed chunk adds no spans (the
+    doc's spans are those of its other chunks, renumbered)."""
+    docs = [
+        _span_doc("hostile_3_chunks", [_block(0), _block(1), _block(2)]),
+        _span_doc("hostile_1_chunk", [_block(0, n_lines=5)]),
+        _span_doc("failed_last_chunk", [_block(0), _block(1), _block(2, bad=True)]),
+        _span_doc("failed_first_chunk", [_block(0, bad=True), _block(1)]),
+        # the narrow-path twins of the failed docs' surviving chunks
+        _span_doc("ref_failed_last_chunk", [_block(0), _block(1)]),
+        _span_doc("ref_failed_first_chunk", [_block(1)]),
+    ]
+    df = spark.createDataFrame(docs, "doc_id string, spans_json string, n_in_spans int")
+    words = lexicon_words()
+    cols = ["doc_id", "spans_json", "n_spans", "status", "error"]
+    narrow = {r["doc_id"]: r for r in pipeline.extract(df, words).select(cols).collect()}
+    salted = {
+        r["doc_id"]: r
+        for r in pipeline.extract_with_salting(df, words, giant_threshold=60)
+        .select(cols)
+        .collect()
+    }
+    assert len(pipeline._split_spans(docs[0][1])) == 3
+    assert set(salted) == set(narrow) == {d for d, _, _ in docs}
+    for doc_id in ("hostile_3_chunks", "hostile_1_chunk"):
+        assert narrow[doc_id]["status"] == salted[doc_id]["status"] == "ok"
+        _assert_same_json(salted[doc_id]["spans_json"], narrow[doc_id]["spans_json"], doc_id)
+        assert salted[doc_id]["n_spans"] == narrow[doc_id]["n_spans"]
+    # the splice pattern appears inside strings and is left alone there
+    assert ', \\"offset\\": 7}' in narrow["hostile_3_chunks"]["spans_json"]
+    for doc_id in ("failed_last_chunk", "failed_first_chunk"):
+        got, ref = salted[doc_id], narrow["ref_" + doc_id]
+        assert got["status"] == "error" and "TypeError" in got["error"], got
+        assert ref["status"] == "ok"
+        _assert_same_json(got["spans_json"], ref["spans_json"], doc_id)
+        assert got["n_spans"] == ref["n_spans"]
+
+
 def test_resume_is_idempotent(spark, docs_df, oracle, tmp_path):
     inp = str(tmp_path / "docs.parquet")
     outp = str(tmp_path / "out.parquet")
@@ -182,6 +265,60 @@ def test_resume_is_idempotent(spark, docs_df, oracle, tmp_path):
     final = spark.read.parquet(outp)
     assert final.count() == N_DOCS  # no duplicates
     assert_matches_oracle(final.collect(), oracle)
+
+
+def test_run_job_returns_completed_docs(spark, docs_df, tmp_path):
+    """run_job returns the docs committed before it plus the rows it
+    wrote: on a first run, on a resume, and on a resume with nothing
+    left to do."""
+    half_inp = str(tmp_path / "half.parquet")
+    inp = str(tmp_path / "docs.parquet")
+    outp = str(tmp_path / "out.parquet")
+    docs_df.write.parquet(inp)
+    spark.read.parquet(inp).orderBy("doc_id").limit(N_DOCS // 2).write.parquet(half_inp)
+    words = lexicon_words()
+    assert pipeline.run_job(spark, half_inp, outp, words) == N_DOCS // 2
+    assert pipeline.run_job(spark, inp, outp, words) == N_DOCS
+    assert pipeline.run_job(spark, inp, outp, words) == N_DOCS
+    assert spark.read.parquet(outp).count() == N_DOCS
+
+
+def test_run_job_launches_no_job_after_its_write(spark, docs_df, tmp_path, monkeypatch):
+    """The completed-doc count comes from the write itself: no Spark job
+    runs after the output write returns (the count used to re-read and
+    distinct-count the whole output), on a first run or a resume."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    sc = spark.sparkContext
+    group = "run_job_no_job_after_write"
+    tracker = sc.statusTracker()
+
+    def last_job() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
+        return max(tracker.getJobIdsForGroup(group) or [-1])
+
+    after_write = []
+    write_parquet = DataFrameWriter.parquet
+
+    def parquet(self, *args, **kwargs):
+        write_parquet(self, *args, **kwargs)
+        after_write.append(last_job())
+
+    inp = str(tmp_path / "docs.parquet")
+    outp = str(tmp_path / "out.parquet")
+    docs_df.write.parquet(inp)
+    half = spark.read.parquet(inp).limit(N_DOCS // 2)
+    pipeline.extract(half, lexicon_words()).write.parquet(outp)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    sc.setJobGroup(group, "run_job test")
+    try:
+        for out in (str(tmp_path / "first_run.parquet"), outp):
+            pipeline.run_job(spark, inp, out, lexicon_words())
+            assert after_write and after_write[-1] >= 0
+            assert last_job() == after_write[-1], "a job ran after the write"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_partition_metrics_and_lineage(spark, docs_df, tmp_path):
@@ -224,6 +361,19 @@ def test_partition_metrics_and_lineage(spark, docs_df, tmp_path):
     assert {r["file"] for r in lin.select("file").distinct().collect()} == {
         r["file"] for r in m2.collect()
     }
+
+
+def test_partition_metrics_returns_new_files(spark, docs_df, tmp_path):
+    """write_partition_metrics returns the number of files it checkpointed
+    in this call: all committed files the first time, none on a re-run."""
+    outp = str(tmp_path / "out.parquet")
+    mp = str(tmp_path / "metrics.parquet")
+    pipeline.extract(docs_df.repartition(3), lexicon_words()).write.parquet(outp)
+    n_files = len(glob.glob(os.path.join(outp, "part-*.parquet")))
+    assert n_files > 1
+    assert pipeline.write_partition_metrics(spark, outp, mp) == n_files
+    assert pipeline.write_partition_metrics(spark, outp, mp) == 0
+    assert spark.read.parquet(mp).count() == n_files
 
 
 def test_partition_metrics_corrupt_table_raises(spark, docs_df, tmp_path):

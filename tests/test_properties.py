@@ -2,6 +2,7 @@
 must be total, deterministic, and order-invariant on arbitrary inputs —
 one malformed doc must never take down a 100 TB job."""
 
+import json
 import unicodedata
 
 from hypothesis import given, settings, strategies as st
@@ -12,6 +13,7 @@ from jochre3_ocr_spark.functions.simplify import simplify
 from jochre3_ocr_spark.functions.geometry import PredictedBox
 from jochre3_ocr_spark.operators.kernel import process_document_safe
 from jochre3_ocr_spark.operators.segmentation import remove_overlaps
+from jochre3_ocr_spark.plans import pipeline
 
 LEX = Lexicon.from_words(["דער", "געװאָרן"])
 
@@ -340,3 +342,44 @@ def test_pack_walk_matches_recursive_oracle(tokens, capacity):
                 state = (pid, pos + 1, cum_prev + tok)
         cte.append((state[0], state[1]))
     assert fold == cte
+
+
+# span JSON transport: any string, including quotes, backslashes, control
+# characters, non-BMP code points and the splice's own ", \"offset\": N}"
+_json_texts = st.one_of(
+    st.none(),
+    st.text(),
+    st.sampled_from(['"', "\\", "\n", "\x01", ', "offset": 3}', "\U0001f600"]),
+)
+_json_spans = st.lists(
+    st.tuples(_json_texts, _json_texts, _json_texts, st.one_of(st.none(), st.integers(0, 10**6))),
+    max_size=20,
+)
+
+
+def _dumps_spans(spans):
+    return json.dumps(
+        [{"kind": k, "text": t, "media_ref": m, "offset": o} for k, t, m, o in spans],
+        ensure_ascii=False,
+    )
+
+
+@given(_json_spans)
+@settings(max_examples=300, deadline=None)
+def test_span_encoder_is_json_dumps(spans):
+    assert pipeline._tuples_to_json(spans) == _dumps_spans(spans)
+
+
+@given(st.lists(st.lists(st.tuples(_json_texts, _json_texts, _json_texts), max_size=8), max_size=5))
+@settings(max_examples=300, deadline=None)
+def test_chunk_splice_is_decode_renumber_encode(chunks):
+    """Splicing chunk outputs (each numbered 0..n-1, as the kernel
+    writes them) gives the bytes of decoding every chunk, renumbering
+    the offsets across the doc and encoding the whole list again."""
+    encoded = [
+        pipeline._tuples_to_json([(k, t, m, i) for i, (k, t, m) in enumerate(c)])
+        for c in chunks
+    ]
+    flat = [(k, t, m, i) for i, (k, t, m) in enumerate(s for c in chunks for s in c)]
+    got = pipeline._splice_spans_json(encoded, [len(c) for c in chunks])
+    assert got == _dumps_spans(flat)
