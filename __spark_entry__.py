@@ -213,10 +213,11 @@ def _extract_yiddish_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter("n_est > 600")
         .mapInPandas(to_spans, schema=builder_schema)
     )
-    # NOT all_giant: n_est = 1+2W+G OVERCOUNTS the builder's actual
-    # span count (1+2W — text_to_spans emits no glyph spans), so docs
-    # with n_est > 600 but n_in_spans <= 600 exist and must keep taking
-    # the inner whole-doc kernel branch — the single-chunk reassemble
+    # extract_with_salting re-splits on the real span count: n_est =
+    # 1+2W+G OVERCOUNTS the builder's actual span count (1+2W —
+    # text_to_spans emits no glyph spans), so docs with n_est > 600 but
+    # n_in_spans <= 600 exist and must take the inner whole-doc kernel
+    # branch, not the chunk path — the single-chunk reassemble
     # recomputes mean_confidence as (m·n)/n, which is not always == m
     # in IEEE float (round-6 self-review finding)
     out = normal.unionByName(
@@ -1423,17 +1424,15 @@ def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle-replayable configuration (first-8 deterministic
     centroids) — the DuckDB twin replays the ENTIRE pipeline:
     assignment argmax, within-cell cosine pairs above eps, transitive
-    closure (recursive CTE vs the engine's star/propagation CC), and
-    the min-id keeper rule over the full domain."""
+    closure (recursive CTE vs the engine's connected components), and
+    the min-id keeper rule over the full domain. The engine computes
+    within-cell pairs with the numpy gram backend; the oracle replays
+    the exploded SQL join, so the row is also the backend-equality
+    check."""
     from jochre3_ocr_spark.operators.similarity import semantic_dedup
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # the PRODUCTION pandas gram backend (round 6): row-identical to the
-    # join form the DuckDB oracle replays (verified at sf0.001/0.01/0.1
-    # and pinned by tests/test_semdedup.py backend-equality), 2.5×
-    # faster here, and the green driver row now proves the backend that
-    # actually runs at corpus scale against the naive SQL closure
-    return semantic_dedup(emb, eps=0.3, n_cells=8, pair_backend="pandas")
+    return semantic_dedup(emb, eps=0.3, n_cells=8)
 
 
 _Q_SEMDEDUP_DUCK = """
@@ -1797,7 +1796,7 @@ FROM t GROUP BY word
 
 def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster resolution: MinHash-LSH candidate pairs →
-    connected components (iterative min-label propagation) → per-doc
+    connected components → per-doc
     cluster verdicts with a canonical representative
     (operators/dedup.duplicate_clusters). The transitive-closure step
     every dedup pipeline needs after pair generation; oracled by a

@@ -155,11 +155,6 @@ def main(argv=None) -> int:
                    help="PageRank iterations (--corpus-op pagerank)")
     p.add_argument("--eps", type=float, default=0.3,
                    help="cosine threshold (--corpus-op semantic-dedup)")
-    p.add_argument("--pair-backend", default="pandas",
-                   choices=["pandas", "join"],
-                   help="semantic-dedup within-cell pair stage: pandas "
-                   "= vectorized per-cell gram matrix (production); "
-                   "join = exploded equi-join (the oracle shape)")
     p.add_argument("--table-op", default=None,
                    choices=["upsert", "compact"],
                    help="bucket-partitioned table maintenance at "
@@ -763,15 +758,9 @@ def main(argv=None) -> int:
                     "--corpus-op semantic-dedup needs an embeddings table "
                     "(vec_id, embedding array<float>)"
                 )
-            # production mode: sample-trained k-means centroids +
-            # vectorized per-cell pair backend (the join form is the
-            # oracle configuration; its |cell|^2*dim intermediate does
-            # not survive corpus scale)
+            # production mode: sample-trained k-means centroids
             cents = kmeans_centroids_sampled(docs, k=args.n_buckets or 8)
-            out = semantic_dedup(
-                docs, eps=args.eps, centroids=cents,
-                pair_backend=args.pair_backend,
-            )
+            out = semantic_dedup(docs, eps=args.eps, centroids=cents)
         elif args.corpus_op == "pagerank":
             from jochre3_ocr_spark.operators.graphs import (
                 pagerank,

@@ -802,81 +802,55 @@ def connected_components(
     left: str = "doc1",
     right: str = "doc2",
     max_iters: int = 25,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Resolve candidate pairs into duplicate CLUSTERS: connected
     components. Returns (doc_id, cluster_id) for every node appearing in
     ``pairs``, where cluster_id = the smallest doc_id in the component.
     Singleton docs (no candidate pair) do not appear — see
     ``duplicate_clusters(include_singletons=True)`` for the full domain.
+    A pair with a NULL endpoint links nothing and is dropped.
 
     The step after candidate generation in a dedup pipeline: LSH/simhash
     emit pairs, but keeping one doc per GROUP needs the transitive
     closure (a~b, b~c ⇒ keep one of {a,b,c}).
 
-    ``algorithm="star"`` is the alternating large-star / small-star
-    algorithm (Kiveris et al., SOCC'14): O(log² n) rounds worst-case —
-    in practice ≤ ~5 — INDEPENDENT of component diameter, so adversarial
-    templated near-dup chains at 100× scale converge too.
-    ``algorithm="propagation"`` is min-label propagation: O(diameter)
-    rounds, one shuffle each — cheaper per round on the near-clique
-    graphs real near-dup corpora produce (star 3.1 s vs propagation
-    2.1 s on the sf0.1 graph), but O(diameter) rounds on a chain.
-    ``algorithm="auto"`` (default) gets both: run propagation with a
-    small round budget (:data:`_AUTO_PROBE_ROUNDS`); the per-round
-    convergence probe tells us for free whether the graph's diameter is
-    small, and on the rare non-converged (high-diameter) graph the
-    wasted probe work is bounded — ≤ probe_rounds shuffles ∝ |edges| —
-    before star finishes diameter-independently. Labels are identical
-    on every path (min doc_id per component), so the selection never
-    changes output.
+    Two routes, identical labels (min doc_id per component):
 
-    Both paths probe convergence every round (one small agg piggybacked
-    on the checkpointed result) and raise
-    :class:`ConnectedComponentsDidNotConverge` if ``max_iters`` rounds
-    pass while still changing — wrong labels are never silently
-    returned. Lineage is truncated per round (localCheckpoint) so the
-    plan does not grow with iterations.
+    * at most :data:`_CC_DRIVER_MAX_PAIRS` pairs — one bounded driver
+      union-find (:func:`_cc_driver`);
+    * more — the alternating large-star / small-star algorithm (Kiveris
+      et al., SOCC'14): O(log² n) rounds worst-case, in practice ≤ ~5,
+      INDEPENDENT of component diameter, so adversarial templated
+      near-dup chains converge too. It probes convergence every round
+      (one small agg piggybacked on the checkpointed result) and raises
+      :class:`ConnectedComponentsDidNotConverge` if ``max_iters`` rounds
+      pass while still changing — wrong labels are never silently
+      returned. Lineage is truncated per round (localCheckpoint) so the
+      plan does not grow with iterations.
     """
     # materialize the pair source ONCE before symmetrizing: the union
     # reads it twice, and an un-checkpointed candidate generator (LSH)
     # would re-run per branch
-    pairs = pairs.select(
-        F.col(left).alias("a"), F.col(right).alias("b")
-    ).localCheckpoint(eager=True)
-    if algorithm == "auto":
-        # small-graph fast path: every distributed CC round costs a
-        # fixed ~0.5 s of job/shuffle overhead regardless of edge count,
-        # so a pair table under the cap (≈10 MB of ids) resolves faster
-        # as ONE bounded driver union-find — the same bounded-collect
-        # class as the k-means sample trainer and the density probe.
-        # take(cap+1) both answers "is it small?" and, when yes, already
-        # holds the full edge list (one job, no separate count). Labels
-        # are identical on every path (min id per component); the
-        # explicit algorithm="star"/"propagation" selections are
-        # untouched so their round structure stays testable.
-        head = pairs.take(_CC_DRIVER_MAX_PAIRS + 1)
-        if len(head) <= _CC_DRIVER_MAX_PAIRS:
-            return _cc_driver(pairs.sparkSession, pairs.schema, head)
-        labels = _cc_propagation(
-            pairs, _AUTO_PROBE_ROUNDS, raise_on_fail=False
-        )
-        if labels is not None:
-            return labels
-        return _cc_star(pairs, max_iters)
-    if algorithm == "star":
-        return _cc_star(pairs, max_iters)
-    if algorithm == "propagation":
-        return _cc_propagation(pairs, max_iters)
-    raise ValueError(f"unknown algorithm: {algorithm!r}")
+    pairs = (
+        pairs.select(F.col(left).alias("a"), F.col(right).alias("b"))
+        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+        .localCheckpoint(eager=True)
+    )
+    # every distributed round costs a fixed ~0.5 s of job/shuffle
+    # overhead regardless of edge count, so a pair table under the cap
+    # resolves faster as ONE bounded driver union-find. take(cap+1) both
+    # answers "is it small?" and, when yes, already holds the full edge
+    # list (one job, no separate count).
+    head = pairs.take(_CC_DRIVER_MAX_PAIRS + 1)
+    if len(head) <= _CC_DRIVER_MAX_PAIRS:
+        return _cc_driver(pairs.sparkSession, pairs.schema, head)
+    return _cc_star(pairs, max_iters)
 
 
-#: algorithm="auto" driver fast path cap: below this many candidate
-#: pairs the graph is a fixed-cost problem, not a scale problem —
-#: resolve it with one bounded collect instead of 2+ distributed rounds.
-#: 100k pairs ≈ 10 MB of string ids on the driver; at corpus scale the
-#: take() probe returns cap+1 rows from the first partitions and the
-#: distributed rounds run exactly as before.
+#: driver union-find cap: below this many candidate pairs the graph is
+#: a fixed-cost problem, not a scale problem. 100k pairs ≈ 10 MB of
+#: string ids on the driver; at corpus scale the take() probe returns
+#: cap+1 rows from the first partitions and star runs.
 _CC_DRIVER_MAX_PAIRS = 100_000
 
 
@@ -884,7 +858,7 @@ def _cc_driver(spark, pair_schema, rows) -> DataFrame:
     """Union-find over a collected (bounded) pair list. Python string
     comparison is code-point order == Spark's UTF8 binary order (UTF-8
     preserves code-point ordering), so min-per-component labels are
-    identical to the distributed paths'."""
+    identical to the star route's."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -938,13 +912,6 @@ def _cc_driver(spark, pair_schema, rows) -> DataFrame:
     return F.broadcast(spark.createDataFrame(out, schema))
 
 
-#: propagation-round budget for algorithm="auto": real near-dup graphs
-#: are near-cliques that converge in 2-3 min-label rounds; a graph still
-#: changing after this many rounds has non-trivial diameter and goes to
-#: the diameter-independent star path instead
-_AUTO_PROBE_ROUNDS = 4
-
-
 def _cc_star(pairs: DataFrame, max_iters: int) -> DataFrame:
     nodes = (
         pairs.select(F.col("a").alias("node"))
@@ -977,8 +944,7 @@ def _cc_star(pairs: DataFrame, max_iters: int) -> DataFrame:
     for _ in range(max_iters):
         # LAZY checkpoint: the probe's agg is the action that materializes
         # it, so each round costs ONE job (round-3 profiling: the eager
-        # checkpoint + separate probe paid ~2 fixed-cost jobs/round,
-        # 4.45 s vs propagation's 2.85 s on the sf0.1 graph)
+        # checkpoint + separate probe paid ~2 fixed-cost jobs/round)
         new_edges = _star_round(edges).localCheckpoint(eager=False)
         cur = _probe(new_edges)
         edges = new_edges
@@ -999,54 +965,6 @@ def _cc_star(pairs: DataFrame, max_iters: int) -> DataFrame:
         F.col("node").alias("doc_id"),
         F.coalesce("v", "node").alias("cluster_id"),
     )
-
-
-def _cc_propagation(
-    pairs: DataFrame, max_iters: int, raise_on_fail: bool = True
-) -> DataFrame | None:
-    sym = pairs.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).union(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    edges = sym.distinct().localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    converged = False
-    for _ in range(max_iters):
-        nbr_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        stepped = labels.join(
-            nbr_min, labels.node == nbr_min.src, "left"
-        ).select(
-            "node",
-            F.least(
-                F.col("label"), F.coalesce("nbr_min", F.col("label"))
-            ).alias("label"),
-            (F.coalesce("nbr_min", F.col("label")) < F.col("label")).alias(
-                "changed"
-            ),
-        )
-        # lazy checkpoint: the convergence agg below materializes it —
-        # one job per round instead of two (same merge as the star path)
-        stepped = stepped.localCheckpoint(eager=False)
-        labels = stepped
-        if stepped.agg(F.max("changed")).collect()[0][0] is not True:
-            converged = True
-            break
-    if not converged:
-        if not raise_on_fail:
-            return None  # algorithm="auto" probe: caller falls back to star
-        raise ConnectedComponentsDidNotConverge(
-            f"min-label propagation did not converge in {max_iters} "
-            f"rounds (component diameter > max_iters) — use "
-            f'algorithm="star" or raise max_iters'
-        )
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
 #: minimum estimated exact-duplicate fraction at which "auto" turns the

@@ -935,13 +935,11 @@ _GRAM_BUDGET_BYTES = 256 * 2**20
 
 
 def _cell_pairs_pandas(base: DataFrame, assign: DataFrame, eps: float):
-    """(v1, v2) above-eps cosine pairs within each cell — the
-    vectorized production backend of :func:`semantic_dedup`: one
+    """(v1, v2) above-eps cosine pairs within each cell — the pair
+    stage of :func:`semantic_dedup`: one
     applyInPandas per cell, gram matrix in numpy, row-chunked under a
     byte budget so only ``_GRAM_BUDGET_BYTES`` of gram buffer live at
-    once; only qualifying pairs are ever emitted (the join backend
-    materializes |cell|²·dim intermediate rows before its
-    aggregate)."""
+    once; only qualifying pairs are ever emitted."""
     import numpy as np
     import pandas as pd
 
@@ -985,7 +983,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: list | None = None,
-    pair_backend: str = "pandas",
 ) -> DataFrame:
     """Semantic deduplication (Abbas et al., "SemDeDup: Data-efficient
     learning at web-scale through semantic deduplication",
@@ -1006,30 +1003,20 @@ def semantic_dedup(
 
     100 TB shape: assignment is one bounded-side join (first-K) or
     broadcast argmin (k-means list); pairs form ONLY within a cell;
-    components come from the star/propagation CC (diameter-independent,
-    refuses to lie); the keeper rule is one agg over (node, cluster).
+    components come from :func:`dedup.connected_components`
+    (diameter-independent, refuses to lie); the keeper rule is one agg
+    over (node, cluster).
 
-    ``pair_backend`` picks how within-cell pairs materialize:
-    ``"join"`` (the oracle configuration) explodes vectors and
-    equi-joins on (pos, cell) — pure SQL, replayable, but the join
-    intermediate is |cell|²·dim rows; ``"pandas"`` runs one
-    applyInPandas per cell computing the gram matrix in numpy with a
-    row-chunked loop (|chunk|·|cell| floats live at once) and emits
-    ONLY the above-eps pairs — the production path at corpus scale,
-    where |cell|²·dim through a shuffle is the difference between
-    minutes and never (measured: the join form cannot finish 1M docs,
-    the pandas form does — BENCH.md round-5 semantic soak). The pandas
-    form is therefore the DEFAULT (VERDICT r5 "what's wrong" item 1:
-    a library caller must not inherit the backend that cannot finish
-    at scale); the driver's dedup_semantic query also runs the
-    pandas backend (round 6) — its oracle replays the join
-    construction, and the green row doubles as the backend-equality
-    proof at driver scale.  Both
-    backends emit the same pair SET (tested) up to float summation
+    Within-cell pairs come from one applyInPandas per cell that
+    computes the gram matrix in numpy with a row-chunked loop
+    (|chunk|·|cell| floats live at once) and emits ONLY the above-eps
+    pairs; an exploded SQL equi-join would shuffle |cell|²·dim rows and
+    does not finish 1M docs (BENCH.md round-5 semantic soak). The
+    DuckDB oracle replays that join, so the dedup_semantic row checks
+    the gram backend against it. The two agree up to float summation
     order: a pair whose cosine lands within ~1 ulp of ``eps`` could in
-    principle cross the threshold in one backend only — pick ``eps``
-    with margin to the data, as any float-threshold operator
-    requires."""
+    principle cross the threshold in one only — pick ``eps`` with
+    margin to the data, as any float-threshold operator requires."""
     from pyspark.sql.window import Window
 
     from jochre3_ocr_spark.operators.dedup import connected_components
@@ -1055,47 +1042,7 @@ def semantic_dedup(
             "vid", "cell"
         )
 
-    if pair_backend not in ("pandas", "join"):
-        # a typo silently falling through to the join backend would
-        # die hours later at corpus scale with no hint why (review r5)
-        raise ValueError(f"unknown pair_backend {pair_backend!r}")
-    if pair_backend == "pandas":
-        pairs = _cell_pairs_pandas(base, assign, eps)
-    else:
-        ex = _exploded(base, "vid", "emb", "vid")
-        a = (
-            ex.join(assign, "vid")
-            .select(F.col("vid").alias("v1"), "pos",
-                    F.col("v").alias("x1"), "cell")
-            .alias("a")
-        )
-        b = (
-            ex.join(assign, "vid")
-            .select(F.col("vid").alias("v2"), "pos",
-                    F.col("v").alias("x2"),
-                    F.col("cell").alias("cell2"))
-            .alias("b")
-        )
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.pos") == F.col("b.pos"))
-                & (F.col("a.cell") == F.col("b.cell2"))
-                & (F.col("a.v1") < F.col("b.v2")),
-            )
-            .groupBy("v1", "v2")
-            .agg(
-                (
-                    F.sum(F.col("a.x1") * F.col("b.x2"))
-                    / (
-                        F.sqrt(F.sum(F.col("a.x1") * F.col("a.x1")))
-                        * F.sqrt(F.sum(F.col("b.x2") * F.col("b.x2")))
-                    )
-                ).alias("cos")
-            )
-            .filter(F.col("cos") > eps)
-            .select("v1", "v2")
-        )
+    pairs = _cell_pairs_pandas(base, assign, eps)
     comp = connected_components(pairs, left="v1", right="v2").select(
         F.col("doc_id").alias("vid"), "cluster_id"
     )

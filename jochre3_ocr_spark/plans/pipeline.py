@@ -440,7 +440,6 @@ def extract_with_salting(
     config: PipelineConfig | None = None,
     giant_threshold: int = GIANT_THRESHOLD_SPANS,
     materialize_spans: bool = False,
-    all_giant: bool = False,
 ) -> DataFrame:
     """Skew-aware extraction: normal docs stay on the narrow zero-shuffle
     path; giant docs are split into block-aligned chunks, spread across
@@ -464,38 +463,24 @@ def extract_with_salting(
     # work, so materialize it once instead (lazy local checkpoint: the
     # first branch's action computes it, the second reads it back).
     if (
-        not all_giant
-        and not pruned.isStreaming  # localCheckpoint is batch-only
+        not pruned.isStreaming  # localCheckpoint is batch-only
         and not _rescans_cheaply(pruned)
     ):
         pruned = pruned.localCheckpoint(eager=False)
 
-    # ``all_giant``: the caller asserts every input doc exceeds the
-    # threshold (e.g. it already split upstream on a closed-form span
-    # estimate). The normal branch would be provably empty — but each
-    # branch re-executes the input subtree, so an empty branch over a
-    # Python-built input still pays a full builder pass for zero rows.
-    if all_giant:
-        giant = pruned.drop("n_in_spans")
-        normal = None
-    else:
-        # a NULL count (NULL or malformed span JSON under ANSI) takes the
-        # narrow branch, whose quarantine turns the doc into an error row;
-        # `n <= t` and `n > t` alone would both drop it
-        normal = pruned.filter(
-            F.col("n_in_spans").isNull()
-            | (F.col("n_in_spans") <= giant_threshold)
-        ).drop("n_in_spans")
-        giant = pruned.filter(F.col("n_in_spans") > giant_threshold).drop(
-            "n_in_spans"
-        )
+    # a NULL count (NULL or malformed span JSON under ANSI) takes the
+    # narrow branch, whose quarantine turns the doc into an error row;
+    # `n <= t` and `n > t` alone would both drop it
+    normal = pruned.filter(
+        F.col("n_in_spans").isNull()
+        | (F.col("n_in_spans") <= giant_threshold)
+    ).drop("n_in_spans")
+    giant = pruned.filter(F.col("n_in_spans") > giant_threshold).drop(
+        "n_in_spans"
+    )
 
-    raw_normal = (
-        None
-        if normal is None
-        else _spread_small_input(normal).mapInPandas(
-            _make_extract_fn(lexicon_bc, config), schema=_RAW_OUT_DDL
-        )
+    raw_normal = _spread_small_input(normal).mapInPandas(
+        _make_extract_fn(lexicon_bc, config), schema=_RAW_OUT_DDL
     )
 
     chunks = giant.mapInPandas(_split_chunks, schema=_CHUNK_DDL)
@@ -518,11 +503,7 @@ def extract_with_salting(
     raw_giant = chunk_out.groupBy("doc_id").applyInPandas(
         _reassemble, schema=_RAW_OUT_DDL
     )
-    raw = (
-        raw_giant
-        if raw_normal is None
-        else raw_normal.unionByName(raw_giant)
-    )
+    raw = raw_normal.unionByName(raw_giant)
     return _finalize(raw) if materialize_spans else raw
 
 

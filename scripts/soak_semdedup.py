@@ -1,8 +1,6 @@
 #!/usr/bin/env python3
 """SemDeDup macro drive: packaged `job.py --corpus-op semantic-dedup`
-over 1M synthetic embeddings at two parallelism levels, plus a
-budgeted demonstration that the oracle-shaped join backend cannot
-survive this scale.
+over 1M synthetic embeddings at two parallelism levels.
 
 Scenario: 1 000 000 16-dim embeddings — 10 designed semantic-duplicate
 families of 1 000 members each (within-family cosine ≥ 0.9999) spread
@@ -16,12 +14,10 @@ Verification:
   * group recovery — each designed family resolves to ONE cluster
     whose keeper is its minimum vec_id and whose member count is
     exactly 1 000 (accidental random clusters are counted separately);
-  * scaling — throughput efficiency between the two levels;
-  * join-backend budget run — the |cell|²·dim exploded construction
-    against the SAME input under a kill budget.
+  * scaling — throughput efficiency between the two levels.
 
 Usage: python scripts/soak_semdedup.py [--n 1000000] [--cells 64]
-       [--eps 0.95] [--join-budget-sec 300]
+       [--eps 0.95]
 """
 
 from __future__ import annotations
@@ -48,7 +44,6 @@ def main() -> int:
     p.add_argument("--eps", type=float, default=0.95)
     p.add_argument("--cores-small", type=int, default=2)
     p.add_argument("--cores-big", type=int, default=8)
-    p.add_argument("--join-budget-sec", type=int, default=300)
     args = p.parse_args()
 
     os.makedirs(WORK, exist_ok=True)
@@ -155,40 +150,6 @@ def main() -> int:
     }
     print(json.dumps(verdict), flush=True)
 
-    # the join backend under a budget: the |cell|^2 * dim exploded
-    # intermediate (~7.6G pairs x 16 positions here) vs the kill timer
-    t0 = time.time()
-    child = subprocess.Popen(
-        [
-            "spark-submit", "--master", f"local[{args.cores_big}]",
-            "--driver-memory", "8g", "--py-files", engine_zip, "job.py",
-            "--corpus-op", "semantic-dedup", "--pair-backend", "join",
-            "--n-buckets", str(args.cells), "--eps", str(args.eps),
-            "--shuffle-partitions", str(args.cores_big * 4),
-            "--input", emb_path, "--output", f"{WORK}/verdicts_join.parquet",
-        ],
-        cwd=REPO, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-        text=True,
-    )
-    try:
-        out_s, _ = child.communicate(timeout=args.join_budget_sec)
-        produced = os.path.exists(
-            f"{WORK}/verdicts_join.parquet/_SUCCESS"
-        )
-        join_res = {
-            "finished": child.returncode == 0 and produced,
-            "rc": child.returncode,
-            "output_committed": produced,
-            "sec": round(time.time() - t0, 1),
-            "tail": out_s[-300:],
-        }
-    except subprocess.TimeoutExpired:
-        child.kill()
-        child.communicate()
-        join_res = {"finished": False,
-                    "killed_after_sec": args.join_budget_sec}
-    print(json.dumps({"phase": "join_backend_budget", **join_res}),
-          flush=True)
     return 0 if verdict["ok"] else 1
 
 

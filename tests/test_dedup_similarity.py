@@ -351,15 +351,21 @@ def test_decontaminate_flags_ngram_overlap(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def _cc_rows(pairs):
+    from jochre3_ocr_spark.operators.dedup import connected_components
+
+    return {tuple(r) for r in connected_components(pairs).collect()}
+
+
 def test_connected_components_chain_triangle_pair(spark):
-    """Min-label propagation must close transitive chains (multi-
-    iteration), triangles (cycles), and isolated pairs; cluster_id is
-    the lexicographic min of each component."""
+    """Connected components must close transitive chains, triangles
+    (cycles), and isolated pairs; cluster_id is the lexicographic min of
+    each component."""
     from jochre3_ocr_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [
-            # chain a-b-c-d-e (diameter 4: takes >1 propagation round)
+            # chain a-b-c-d-e (diameter 4)
             ("b", "a"), ("b", "c"), ("c", "d"), ("d", "e"),
             # triangle with a cycle
             ("x", "y"), ("y", "z"), ("z", "x"),
@@ -379,33 +385,18 @@ def test_connected_components_chain_triangle_pair(spark):
     }
 
 
-def test_connected_components_star_matches_propagation(spark):
-    """Both algorithms resolve the same components on a mixed graph."""
-    from jochre3_ocr_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [("b", "a"), ("b", "c"), ("c", "d"), ("d", "e"),
-         ("x", "y"), ("y", "z"), ("z", "x"), ("m", "n")],
-        "doc1 string, doc2 string",
-    )
-    star = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(pairs, algorithm="star").collect()
-    }
-    prop = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(pairs, algorithm="propagation").collect()
-    }
-    assert star == prop
-
-
-def test_connected_components_long_chain_beyond_diameter(spark):
+def test_connected_components_long_chain_beyond_diameter(
+    spark, monkeypatch
+):
     """VERDICT r2 item 1: a chain whose DIAMETER exceeds max_iters must
     still resolve correctly under the star algorithm (round count scales
     with log n, not diameter) — the adversarial templated-near-dup-chain
-    case that silently mis-clustered under truncated propagation."""
+    case that silently mis-clustered under a truncated round count. Cap 0
+    forces the star route."""
+    from jochre3_ocr_spark.operators import dedup
     from jochre3_ocr_spark.operators.dedup import connected_components
 
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_PAIRS", 0)
     # path graph n000-n001-...-n060: diameter 60 >> max_iters=8
     n = 61
     edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(n - 1)]
@@ -417,22 +408,38 @@ def test_connected_components_long_chain_beyond_diameter(spark):
     assert got == {f"n{i:03d}": "n000" for i in range(n)}
 
 
-def test_connected_components_propagation_raises_not_truncates(spark):
-    """The propagation variant must REFUSE to return wrong labels when
-    the diameter exceeds max_iters (was: silent truncation)."""
+def test_connected_components_star_raises_not_truncates(spark, monkeypatch):
+    """The star route must REFUSE to return wrong labels when it has not
+    reached a fixed point within max_iters (one round cannot even
+    confirm a fixed point on a 31-node chain)."""
     import pytest as _pytest
 
+    from jochre3_ocr_spark.operators import dedup
     from jochre3_ocr_spark.operators.dedup import (
         ConnectedComponentsDidNotConverge,
         connected_components,
     )
 
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_PAIRS", 0)
     edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(30)]
     pairs = spark.createDataFrame(edges, "doc1 string, doc2 string")
     with _pytest.raises(ConnectedComponentsDidNotConverge):
-        connected_components(
-            pairs, max_iters=3, algorithm="propagation"
-        ).collect()
+        connected_components(pairs, max_iters=1).collect()
+
+
+def test_connected_components_null_endpoint_dropped(spark, monkeypatch):
+    """A pair with a NULL endpoint links nothing: both routes drop it and
+    return the same rows."""
+    from jochre3_ocr_spark.operators import dedup
+
+    pairs = spark.createDataFrame(
+        [("b", None), ("a", "b"), (None, "c"), (None, None), ("d", "e")],
+        "doc1 string, doc2 string",
+    )
+    want = {("a", "a"), ("b", "a"), ("d", "d"), ("e", "d")}
+    assert _cc_rows(pairs) == want
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_PAIRS", 0)
+    assert _cc_rows(pairs) == want
 
 
 def test_duplicate_clusters_include_singletons(spark):
@@ -756,52 +763,44 @@ def test_exact_dup_density_probe_and_auto_decision(spark):
     assert rows(auto) == rows(forced)
 
 
-def test_connected_components_auto_selects_per_graph(spark, monkeypatch):
-    """algorithm="auto" (VERDICT r4 next-round item 5): identical labels
-    on both regimes — a near-clique that converges inside the
-    propagation probe budget, and a 60-diameter chain that exhausts the
-    probe and falls back to the diameter-independent star path. The
-    driver fast path is disabled (cap 0) so this test keeps pinning the
-    distributed probe/fallback structure it documents."""
+def test_connected_components_default_matches_star_per_graph(
+    spark, monkeypatch
+):
+    """The default route (driver union-find at this size) and the star
+    route (forced with cap 0) give identical labels on a near-clique
+    and on a 60-diameter chain."""
     from jochre3_ocr_spark.operators import dedup
-    from jochre3_ocr_spark.operators.dedup import connected_components
 
-    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_PAIRS", 0)
     clique = spark.createDataFrame(
         [(f"c{i}", f"c{j}") for i in range(8) for j in range(i)]
         + [("m", "n")],
         "doc1 string, doc2 string",
     )
-    got = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(clique, algorithm="auto").collect()
-    }
-    want = {f"c{i}": "c0" for i in range(8)} | {"m": "m", "n": "m"}
-    assert got == want
-
     chain = spark.createDataFrame(
         [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(60)],
         "doc1 string, doc2 string",
     )
-    got = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(chain, algorithm="auto").collect()
+    want_clique = {(f"c{i}", "c0") for i in range(8)} | {
+        ("m", "m"), ("n", "m")
     }
-    assert got == {f"n{i:03d}": "n000" for i in range(61)}
+    want_chain = {(f"n{i:03d}", "n000") for i in range(61)}
+    assert _cc_rows(clique) == want_clique
+    assert _cc_rows(chain) == want_chain
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_PAIRS", 0)
+    assert _cc_rows(clique) == want_clique
+    assert _cc_rows(chain) == want_chain
 
 
 def test_connected_components_driver_fast_path_matches_distributed(
     spark, monkeypatch
 ):
-    """The algorithm="auto" small-graph driver union-find (round-6 CC
-    fixed-cost optimization) returns EXACTLY the distributed labels on a
-    seeded random graph with self-loops, cliques, chains and singleton-
-    by-self-pair nodes — and the cap gate falls back to the distributed
-    path when exceeded."""
+    """The small-graph driver union-find (round-6 CC fixed-cost
+    optimization) returns EXACTLY the star route's labels on a seeded
+    random graph with self-loops, cliques, chains and singleton-by-
+    self-pair nodes."""
     import random
 
     from jochre3_ocr_spark.operators import dedup
-    from jochre3_ocr_spark.operators.dedup import connected_components
 
     rng = random.Random(7)
     edges = [(f"d{rng.randrange(120):03d}", f"d{rng.randrange(120):03d}")
@@ -810,29 +809,9 @@ def test_connected_components_driver_fast_path_matches_distributed(
     edges += [(f"ch{i:02d}", f"ch{i + 1:02d}") for i in range(12)]
     pairs = spark.createDataFrame(edges, "doc1 string, doc2 string")
 
-    fast = {
-        (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs, algorithm="auto").collect()
-    }
-    star = {
-        (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs, algorithm="star").collect()
-    }
-    prop = {
-        (r.doc_id, r.cluster_id)
-        for r in connected_components(
-            pairs, algorithm="propagation"
-        ).collect()
-    }
-    assert fast == star == prop
-
-    # over-cap graphs take the distributed path and agree too
-    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_PAIRS", 10)
-    over = {
-        (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs, algorithm="auto").collect()
-    }
-    assert over == fast
+    fast = _cc_rows(pairs)
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_PAIRS", 0)
+    assert _cc_rows(pairs) == fast
 
 
 def _adversarial_tail_family(n=400):

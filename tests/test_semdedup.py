@@ -119,72 +119,28 @@ def test_semdedup_partitioning_invariance(spark):
     assert a == b
 
 
-def test_semdedup_pandas_backend_matches_join(spark):
-    """The vectorized gram-matrix pair backend must produce the
-    identical full-domain output as the oracle-checked join backend."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    # both backends named EXPLICITLY: the default flipped to pandas in
-    # round 6, and an implicit default here would silently compare
-    # pandas against itself
-    a = sorted(
-        tuple(r)
-        for r in semantic_dedup(
-            emb, eps=0.3, n_cells=8, pair_backend="join"
-        ).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in semantic_dedup(
-            emb, eps=0.3, n_cells=8, pair_backend="pandas"
-        ).collect()
-    )
-    assert a == b
-
-
 def test_semdedup_pandas_backend_multi_chunk(spark, monkeypatch):
     """Row-chunked gram loop: a byte budget that forces chunk=1 in
     EVERY cell (the maximal-chunking boundary) must not change pairs
     (the _overlap_map_sweep chunk-boundary lesson — make chunking
     testable and test it)."""
+    from collections import Counter
+
     from jochre3_ocr_spark.operators import similarity as S
 
-    monkeypatch.setattr(S, "_GRAM_BUDGET_BYTES", 8)
     rows = [
         (i, [1.0 + 0.001 * i, 0.01 * (i % 7), 0.02 * (i % 3)])
         for i in range(40)
     ]
     df = _vecs(spark, rows)
-    a = sorted(
-        tuple(r)
-        for r in semantic_dedup(
-            df, eps=0.999, n_cells=4, pair_backend="pandas"
-        ).collect()
-    )
-    b = sorted(
+    # reference under the default budget: one chunk per cell
+    want = sorted(
         tuple(r) for r in semantic_dedup(df, eps=0.999, n_cells=4).collect()
     )
-    assert a == b
+    assert max(Counter(r[2] for r in want).values()) > 1
 
-
-def test_semdedup_rejects_unknown_backend(spark):
-    import pytest
-
-    df = _vecs(spark, [(0, [1.0, 0.0])])
-    with pytest.raises(ValueError, match="pair_backend"):
-        semantic_dedup(df, pair_backend="Pandas")
-
-
-def test_default_pair_backend_is_the_scale_safe_one():
-    """VERDICT r5 "what's wrong" item 1: a library caller must get the
-    pandas gram backend by default — the join form crashed the 1M-
-    embedding soak with zero output. The driver's dedup_semantic query
-    also runs the pandas backend (round 6); its DuckDB oracle replays
-    the join construction, so the green driver row doubles as the
-    backend-equality proof (pinned locally by
-    test_semdedup_pandas_backend_matches_join)."""
-    import inspect
-
-    from jochre3_ocr_spark.operators.similarity import semantic_dedup
-
-    sig = inspect.signature(semantic_dedup)
-    assert sig.parameters["pair_backend"].default == "pandas"
+    monkeypatch.setattr(S, "_GRAM_BUDGET_BYTES", 8)
+    got = sorted(
+        tuple(r) for r in semantic_dedup(df, eps=0.999, n_cells=4).collect()
+    )
+    assert got == want
