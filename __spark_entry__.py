@@ -2134,11 +2134,6 @@ def _html_extraction_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     bridged = html_spans_to_doc_spans(
         html_extract(synthesize_html_corpus(docs), min_content_chars=1)
     )
-    # the salted extractor evaluates its input once per branch
-    # (normal/giant) — cheap for a column-pruned parquet scan, but here
-    # the producer is two Python stages; checkpoint so synthesize+parse
-    # run ONCE (halves this query's wall-clock)
-    bridged = bridged.localCheckpoint(eager=False)
     out = extract_with_salting(bridged, lexicon_words())
     return out.selectExpr(
         "doc_id",

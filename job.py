@@ -817,11 +817,11 @@ def main(argv=None) -> int:
     formats = [f.strip() for f in args.formats.split(",") if f.strip()]
     extra = [f for f in formats if f != "spans"]
     if extra:
-        from jochre3_ocr_spark.plans.pipeline import _finalize
+        from jochre3_ocr_spark.plans.pipeline import finalize
         from jochre3_ocr_spark.sources.sinks import write_alto, write_text
 
         out = spark.read.parquet(args.output)
-        fin = _finalize(out) if "spans_json" in out.columns else out
+        fin = finalize(out) if "spans_json" in out.columns else out
         if "text" in extra:
             write_text(fin, args.output + "_text", column="text")
         if "processed" in extra:

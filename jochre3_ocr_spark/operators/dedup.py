@@ -1295,7 +1295,6 @@ def incremental_dedup_verdicts(
     num_hashes: int = 8,
     band_size: int = 2,
     max_bucket: int | None = 64,
-    broadcast_shard: bool = True,
 ) -> DataFrame:
     """Dedup a NEW shard against an EXISTING corpus's band table plus
     itself, touching corpus text zero times.
@@ -1316,19 +1315,18 @@ def incremental_dedup_verdicts(
 
     Returns (doc_id, cluster_id, keep, duplicate_of) over the full
     shard domain.  Scale shape: the shard side of the corpus-probe
-    join is broadcast by default (``broadcast_shard``) — the
-    10¹²-row band table is never shuffled, each of its partitions
-    streams against the in-memory shard bands; within-shard candidate
-    generation is the usual capped-bucket construction.  Append the
-    kept docs' band rows to the state table afterwards
-    (:func:`minhash_band_table` over the kept subset).
+    join is always broadcast — the 10¹²-row band table is never
+    shuffled, each of its partitions streams against the in-memory
+    shard bands; within-shard candidate generation is the usual
+    capped-bucket construction.  Append the kept docs' band rows to the
+    state table afterwards (:func:`minhash_band_table` over the kept
+    subset).
     """
     bands_new = _minhash_bands(
         new_docs, id_col, text_col, n, num_hashes, band_size
     ).localCheckpoint(eager=False)
-    probe = F.broadcast(bands_new) if broadcast_shard else bands_new
     hits = (
-        probe.alias("s")
+        F.broadcast(bands_new).alias("s")
         .join(
             band_table.alias("c"),
             (F.col("s.band") == F.col("c.band"))

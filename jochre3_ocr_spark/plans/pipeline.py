@@ -207,8 +207,9 @@ def _get_worker_lexicon(lexicon_bc):
     return lex
 
 
-def _finalize(raw: DataFrame) -> DataFrame:
-    """Restore the array<struct> spans column from JSON (JVM-side)."""
+def finalize(raw: DataFrame) -> DataFrame:
+    """Restore the array<struct> spans column of an extraction output
+    from its ``spans_json`` (JVM-side ``from_json``)."""
     return raw.select(
         "doc_id",
         F.from_json("spans_json", _SPAN_ARRAY_DDL).alias("spans"),
@@ -281,21 +282,21 @@ def extract(
     docs: DataFrame,
     lexicon_words: list[str],
     config: PipelineConfig | None = None,
-    materialize_spans: bool = False,
 ) -> DataFrame:
     """Narrow extraction over a docs DataFrame — no shuffle.
 
     Column-prunes to (doc_id, spans) so parquet/Iceberg scans read only
-    what the kernel needs. With ``materialize_spans`` the output spans
-    come back as array<struct> (from_json, JVM); default keeps them as a
-    JSON string column — ~2× cheaper end-to-end at high span density.
+    what the kernel needs. The output spans stay a JSON string column
+    (``spans_json``) — ~2× cheaper end-to-end at high span density than
+    array<struct>; :func:`finalize` restores the struct column.
     """
     config = config or PipelineConfig()
     spark = docs.sparkSession
     lexicon_bc = spark.sparkContext.broadcast(list(lexicon_words))
     pruned = _spread_small_input(_prune_to_json(docs).drop("n_in_spans"))
-    raw = pruned.mapInPandas(_make_extract_fn(lexicon_bc, config), schema=_RAW_OUT_DDL)
-    return _finalize(raw) if materialize_spans else raw
+    return pruned.mapInPandas(
+        _make_extract_fn(lexicon_bc, config), schema=_RAW_OUT_DDL
+    )
 
 
 # ------------------------------------------------------- giant-doc salting
@@ -439,7 +440,6 @@ def extract_with_salting(
     lexicon_words: list[str],
     config: PipelineConfig | None = None,
     giant_threshold: int = GIANT_THRESHOLD_SPANS,
-    materialize_spans: bool = False,
 ) -> DataFrame:
     """Skew-aware extraction: normal docs stay on the narrow zero-shuffle
     path; giant docs are split into block-aligned chunks, spread across
@@ -456,15 +456,16 @@ def extract_with_salting(
     lexicon_bc = spark.sparkContext.broadcast(list(lexicon_words))
     pruned = _prune_to_json(docs)
     # The two-branch split re-executes the input subtree once per
-    # branch. For a bare parquet scan that is the RIGHT trade (column-
-    # pruned compressed rescan beats materializing — measured ~40%
-    # faster at sf0.1, round 5); for a DERIVED input (Python corpus
-    # generator, a bridge with joins) the re-execution repeats real
+    # branch. For a narrow plan (a scan under projections and filters)
+    # that is the RIGHT trade (column-pruned compressed rescan beats
+    # materializing — measured ~40% faster at sf0.1, round 5); for a
+    # DERIVED input (Python corpus generator, a bridge with joins, any
+    # node outside the narrow whitelist) the re-execution repeats real
     # work, so materialize it once instead (lazy local checkpoint: the
     # first branch's action computes it, the second reads it back).
     if (
         not pruned.isStreaming  # localCheckpoint is batch-only
-        and not _rescans_cheaply(pruned)
+        and _first_wide_node(pruned) is not None
     ):
         pruned = pruned.localCheckpoint(eager=False)
 
@@ -503,8 +504,7 @@ def extract_with_salting(
     raw_giant = chunk_out.groupBy("doc_id").applyInPandas(
         _reassemble, schema=_RAW_OUT_DDL
     )
-    raw = raw_normal.unionByName(raw_giant)
-    return _finalize(raw) if materialize_spans else raw
+    return raw_normal.unionByName(raw_giant)
 
 
 # ----------------------------------------------- plain-text ingestion path
@@ -536,7 +536,6 @@ def extract_text_df(
     config: PipelineConfig | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize_spans: bool = False,
 ) -> DataFrame:
     """Run the extraction engine over a plain-text document table
     (e.g. the driver's ``documents`` parquet): tokenize → spans → kernel.
@@ -563,61 +562,32 @@ def extract_text_df(
                 rows.append(out)
             yield pd.DataFrame(rows, columns=_OUT_FIELDS)
 
-    raw = pruned.mapInPandas(extract_batches, schema=_RAW_OUT_DDL)
-    return _finalize(raw) if materialize_spans else raw
+    return pruned.mapInPandas(extract_batches, schema=_RAW_OUT_DDL)
 
 
-def _rescans_cheaply(df: DataFrame) -> bool:
-    """True when re-executing ``df``'s plan is essentially a columnar
-    file rescan: no Python stage, shuffle, join, aggregate or window
-    upstream. Consumers with multiple branches over the same input use
-    this to choose between re-scanning (cheap for parquet — the
-    round-5 measurement) and materializing once (right for derived
-    inputs). Conservative on any introspection failure: re-scan, the
-    long-proven shape. A localCheckpoint'ed input shows as a bare RDD
-    scan — correctly 'cheap'."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:  # noqa: BLE001 — introspection only
-        return True
-    markers = (
-        "MapInPandas",
-        "ArrowEvalPython",
-        "BatchEvalPython",
-        "PythonMapInArrow",
-        "FlatMapGroupsInPandas",
-        "Join",
-        "Aggregate",
-        "Repartition",
-        "Sort",
-        "Window",
-        "Union",
-        "Generate",
-    )
-    return not any(m in plan for m in markers)
-
-
-#: logical-plan markers whose presence means the frame's partitioning is
-#: produced by a stage boundary (shuffle/Python/AQE-sized), not by the
-#: file scan — ``df.rdd`` on such a frame EXECUTES the upstream stages
-#: under AQE (AdaptiveSparkPlanExec materializes every shuffle stage at
-#: RDD-construction time), so the partition-count probe below must never
-#: touch it.
-_WIDE_PLAN_MARKERS = (
-    "Repartition",
-    "Rebalance",  # RebalancePartitions — AQE-coalescible, probe-unsafe
-    "Aggregate",
-    "Join",
-    "Window",
-    "Sort",
-    "InPandas",  # MapInPandas, FlatMap(Co)GroupsInPandas, …
-    "InArrow",
-    "EvalPython",
-    "Generate",
-    "Union",
-    "GlobalLimit",
-    "Offset",
+#: logical nodes that neither shuffle nor run Python: a plan made of
+#: these alone re-executes as a plain scan, and ``df.rdd`` on it
+#: schedules nothing. A whitelist on purpose — an unknown node can hide
+#: upstream stages (a persisted aggregate's plan is one leaf,
+#: ``InMemoryRelation``, and ``df.rdd`` on it runs a job).
+_NARROW_NODES = frozenset(
+    ("Project", "Filter", "LogicalRelation", "LogicalRDD", "LocalRelation", "Range")
 )
+
+
+def _first_wide_node(df: DataFrame):
+    """The topmost node of ``df``'s optimized logical plan that is not in
+    ``_NARROW_NODES`` (a py4j handle), or None when the walk down from
+    the root reaches a narrow leaf. Narrow nodes have at most one child,
+    so the walk follows one path; it reads node classes, never the
+    rendered plan, so attribute names cannot look like nodes."""
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.nodeName() in _NARROW_NODES:
+        children = node.children()
+        if children.isEmpty():
+            return None
+        node = children.head()
+    return node
 
 
 def _spread_small_input(df: DataFrame) -> DataFrame:
@@ -631,17 +601,18 @@ def _spread_small_input(df: DataFrame) -> DataFrame:
     the narrow-plan guarantee holds exactly when it matters).
 
     Probe discipline (round 6): ``df.rdd.getNumPartitions()`` is only
-    safe on a scan/narrow subtree — under AQE, constructing the RDD of
-    a frame with an upstream shuffle EXECUTES that shuffle's map
-    stages at query-CONSTRUCTION time (measured: one full job per
-    probe; at corpus scale that is a double execution of the whole
-    upstream aggregation). For derived inputs the decision therefore
-    comes from the plan alone:
+    safe on a narrow plan (:func:`_first_wide_node` is None) — under
+    AQE, constructing the RDD of a frame with an upstream shuffle
+    EXECUTES that shuffle's map stages at query-CONSTRUCTION time
+    (measured: one full job per probe). Otherwise the topmost wide node
+    decides, from the plan alone:
 
-    * the only wide node is an explicit ``Repartition(n >= slots)``
-      (an upstream caller already spread this subtree, only narrow
-      ops above it) → no-op;
-    * otherwise use Catalyst's free ``sizeInBytes`` estimate — AQE's
+    * a keyed ``RepartitionByExpression`` (with or without a count) is
+      the caller's layout → no-op; a round-robin on top would destroy
+      its co-partitioning;
+    * a coalesce (``Repartition``, no shuffle) only pins → spread;
+    * a shuffle ``Repartition(n >= slots)`` is already spread → no-op;
+    * anything else: Catalyst's free ``sizeInBytes`` estimate — AQE's
       byte-based coalescing can pin a frame below ``slots`` partitions
       ONLY when it is byte-small, so a frame estimated ≫
       slots × advisory-partition-size keeps its natural width and
@@ -655,53 +626,22 @@ def _spread_small_input(df: DataFrame) -> DataFrame:
     spread their input stay composable under readStream)."""
     if df.isStreaming:
         return df
-    spark = df.sparkSession
-    slots = spark.sparkContext.defaultParallelism
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        plan_str = plan.toString()
-    except Exception:  # noqa: BLE001 — introspection only
-        plan_str = None
-    if plan_str is None or not any(
-        m in plan_str for m in _WIDE_PLAN_MARKERS
-    ):
-        # scan/narrow subtree: RDD construction schedules nothing
+    slots = df.sparkSession.sparkContext.defaultParallelism
+    node = _first_wide_node(df)
+    if node is None:
         if df.rdd.getNumPartitions() < slots:
             return df.repartition(slots)
         return df
-    import re
-
-    # Already-spread check (two review rounds hardened it): a shuffle
-    # repartition prints `Repartition n, true`, a keyed one
-    # `RepartitionByExpression [cols], n` — both spread to n
-    # partitions (and a keyed one must NOT get a round-robin stacked
-    # on top, which would destroy the caller's co-partitioning). A
-    # coalesce prints `Repartition n, false`, only REDUCES partitions,
-    # and pins the frame regardless of what sits below it — its
-    # presence anywhere disqualifies the skip (the size path below
-    # then decides: byte-small frames get the explicit spread, undoing
-    # the pin).
-    counts = [
-        int(n) for n in re.findall(r"Repartition (\d+), true", plan_str)
-    ] + [
-        int(n)
-        for n in re.findall(
-            r"RepartitionByExpression \[[^\]]*\], (\d+)", plan_str
-        )
-    ]
-    has_coalesce = re.search(r"Repartition \d+, false", plan_str)
-    only_repartition = not any(
-        m in plan_str for m in _WIDE_PLAN_MARKERS if m != "Repartition"
-    )
-    if (
-        only_repartition
-        and counts
-        and max(counts) >= slots
-        and not has_coalesce
-    ):
+    name = node.nodeName()
+    if name == "RepartitionByExpression":
         return df
+    if name == "Repartition":
+        if not node.shuffle():
+            return df.repartition(slots)
+        if node.numPartitions() >= slots:
+            return df
     try:
-        raw = plan.stats().sizeInBytes()
+        raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         # py4j converts scala.math.BigInt to a Python int when it
         # fits; larger values come back as a JavaObject
         size = raw if isinstance(raw, int) else int(raw.toString())

@@ -123,9 +123,6 @@ class PipelineConfig:
     segmenter_type: str = "full"
     # "full-segmentation" | "block" | "unsegmented-page"
     guesser_type: str = "full-segmentation"
-    # scale knobs (ours)
-    shuffle_partitions: int = 32
-    docs_per_arrow_batch: int = 64
 
     @property
     def left_to_right(self) -> bool:

@@ -3,7 +3,7 @@ incremental_dedup_verdicts) — the never-re-signature-the-corpus path.
 
 Pins the verdict semantics on a hand-built corpus/shard pair (corpus
 hit, within-shard dup, contaminated component, unique doc, short doc),
-the canonical-wins rule, cap invariance, and the broadcast toggle.
+the canonical-wins rule and cap invariance.
 """
 
 import pytest
@@ -71,14 +71,13 @@ class TestIncrementalDedup:
         assert v["s5"].cluster_id == "s5" and v["s6"].cluster_id == "s5"
         assert v["s7"].cluster_id == "s7"
 
-    def test_cap_invariance_and_broadcast_toggle(self, split):
+    def test_cap_invariance(self, split):
         """max_bucket=2 (forces the star-link tail path on the
-        4-member identical-band buckets) and broadcast_shard=False must
+        4-member identical-band buckets) and an uncapped build must
         produce byte-identical verdicts."""
         corpus, shard = split
         base = _verdicts(corpus, shard)
-        for kw in ({"max_bucket": 2}, {"max_bucket": None},
-                   {"broadcast_shard": False}):
+        for kw in ({"max_bucket": 2}, {"max_bucket": None}):
             got = _verdicts(corpus, shard, **kw)
             assert {k: tuple(r) for k, r in got.items()} == {
                 k: tuple(r) for k, r in base.items()

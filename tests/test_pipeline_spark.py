@@ -76,14 +76,16 @@ def assert_matches_oracle(rows, oracle):
 
 
 def test_extract_matches_oracle(docs_df, oracle):
-    out = pipeline.extract(docs_df, lexicon_words(), materialize_spans=True)
+    out = pipeline.finalize(pipeline.extract(docs_df, lexicon_words()))
     assert_matches_oracle(out.collect(), oracle)
 
 
 def test_extract_parallelism_invariant(docs_df, oracle):
     """Same results regardless of partitioning (determinism under
     parallelism — SURVEY.md §7.4)."""
-    out = pipeline.extract(docs_df.repartition(7), lexicon_words(), materialize_spans=True)
+    out = pipeline.finalize(
+        pipeline.extract(docs_df.repartition(7), lexicon_words())
+    )
     assert_matches_oracle(out.collect(), oracle)
 
 
@@ -93,8 +95,10 @@ def test_extract_with_salting_matches_oracle(docs_df, oracle):
     partial type hints makes pyspark warn on every call)."""
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        out = pipeline.extract_with_salting(
-            docs_df, lexicon_words(), giant_threshold=60, materialize_spans=True
+        out = pipeline.finalize(
+            pipeline.extract_with_salting(
+                docs_df, lexicon_words(), giant_threshold=60
+            )
         )
     assert_matches_oracle(out.collect(), oracle)
 
@@ -441,8 +445,8 @@ def test_extract_with_beam_confusions_matches_oracle(spark, docs_df):
         )
         for d in generate_docs(N_DOCS)
     }
-    out = pipeline.extract(
-        docs_df, lexicon_words(), config=cfg, materialize_spans=True
+    out = pipeline.finalize(
+        pipeline.extract(docs_df, lexicon_words(), config=cfg)
     )
     assert_matches_oracle(out.collect(), expected)
 
@@ -472,7 +476,7 @@ def test_run_job_clears_stale_staging(spark, docs_df, tmp_path):
 def test_output_has_page_confidence_and_language(spark, docs_df):
     """Per-page mean word confidence (Jochre.scala:365-386) and the
     voted page language ride the output schema."""
-    out = pipeline.extract(docs_df.limit(8), lexicon_words(), materialize_spans=True)
+    out = pipeline.finalize(pipeline.extract(docs_df.limit(8), lexicon_words()))
     rows = out.collect()
     assert all(0.0 <= r.mean_confidence <= 1.0 for r in rows)
     ok = [r for r in rows if r.status == "ok" and r.n_words > 0]
@@ -500,71 +504,126 @@ def test_run_job_raises_on_incompatible_output_not_reprocess(spark, tmp_path):
         run_job(spark, inp, out, lexicon_words(), metrics_path=None)
 
 
-def test_spread_small_input_probe_discipline(spark):
+def test_spread_small_input_probe_discipline(spark, tmp_path):
     """_spread_small_input must (a) spread a compact scan, (b) be a
     no-op on a subtree an upstream caller already spread, and (c)
     decide for derived (wide-topped) frames WITHOUT scheduling a job —
     under AQE, df.rdd on a frame with an upstream shuffle executes the
     shuffle's map stages at construction time (one full job per probe,
-    corpus-sized at scale)."""
+    corpus-sized at scale). No decision below may launch a job."""
     from pyspark.sql import functions as F
 
-    from jochre3_ocr_spark.plans.pipeline import _spread_small_input
+    from jochre3_ocr_spark.plans.pipeline import (
+        _first_wide_node,
+        _spread_small_input,
+    )
 
     slots = spark.sparkContext.defaultParallelism
+    tracker = spark.sparkContext.statusTracker()
+
+    def spread(df):
+        before = len(tracker.getJobIdsForGroup(None) or [])
+        out = _spread_small_input(df)
+        after = len(tracker.getJobIdsForGroup(None) or [])
+        assert after == before, "spread decision scheduled a Spark job"
+        return out
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    top_spread = f"Repartition {slots}, true"
     small = spark.range(0, 100, 1, 1).select(
         F.col("id").cast("string").alias("doc_id"),
         F.concat(F.lit("w"), F.col("id").cast("string")).alias("text"),
     )
 
     # (a) narrow/compact: explicit repartition(slots) added
-    spread = _spread_small_input(small)
-    assert f"Repartition {slots}" in (
-        spread._jdf.queryExecution().optimizedPlan().toString()
-    )
+    spread_small = spread(small)
+    assert plan(spread_small).startswith(top_spread)
 
     # (b) already spread upstream, only narrow ops above: unchanged
-    again = _spread_small_input(spread.filter("doc_id != '-1'"))
-    plan = again._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("Repartition") == 1
+    again = spread_small.filter("doc_id != '-1'")
+    assert spread(again) is again
 
-    # (c) aggregate-topped: no job may run during the decision, and a
-    # byte-small aggregate still gets the explicit spread
+    # (c) aggregate-topped: a byte-small aggregate still gets the
+    # explicit spread
     agg = small.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    out = _spread_small_input(agg)
-    after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after == before, "spread probe scheduled a Spark job"
-    assert f"Repartition {slots}" in (
-        out._jdf.queryExecution().optimizedPlan().toString()
-    )
+    assert plan(spread(agg)).startswith(top_spread)
 
     # (d) a coalesce ABOVE a qualifying repartition pins the frame —
-    # the already-spread skip must not fire; the size path re-spreads
-    pinned = spread.filter("doc_id != '-1'").coalesce(1)
-    replan = _spread_small_input(pinned)._jdf.queryExecution()
-    assert f"Repartition {slots}" in (
-        replan.optimizedPlan().toString().splitlines()[0]
-    ), "coalesce-pinned frame was not re-spread"
+    # the already-spread skip must not fire
+    pinned = spread_small.filter("doc_id != '-1'").coalesce(1)
+    assert plan(spread(pinned)).startswith(top_spread), (
+        "coalesce-pinned frame was not re-spread"
+    )
 
     # (e) rebalance-topped frames must not reach the rdd probe (it
     # would execute the rebalance's map stages as a job)
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    _spread_small_input(small.hint("rebalance"))
-    after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after == before, "rebalance probe scheduled a Spark job"
+    spread(small.hint("rebalance"))
 
     # (f) a keyed repartition(n >= slots) is already spread — no
     # round-robin may be stacked on top (it would destroy the caller's
     # co-partitioning)
-    keyed = small.repartition(slots, F.col("doc_id")).filter(
-        "doc_id != '-1'"
+    keyed = small.repartition(slots, F.col("doc_id")).filter("doc_id != '-1'")
+    assert spread(keyed) is keyed
+
+    # (g) ... and so is a keyed repartition without a count
+    keyed_nocount = small.repartition(F.col("doc_id"))
+    assert spread(keyed_nocount) is keyed_nocount
+
+    # (h) the TOPMOST repartition decides: a small count over a large
+    # one (not adjacent, so Catalyst keeps both) pins the frame
+    narrowed = (
+        small.repartition(64, F.col("doc_id"))
+        .withColumn("x", F.lit(1))
+        .repartition(2)
     )
-    plan = (
-        _spread_small_input(keyed)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
+    assert plan(spread(narrowed)).startswith(top_spread)
+
+    # (i) a coalesce pins a byte-LARGE frame too (its size estimate
+    # alone would leave it at one partition)
+    big = (
+        spark.range(10**5)
+        .crossJoin(spark.range(10**5).withColumnRenamed("id", "j"))
+        .coalesce(1)
     )
-    assert plan.count("Repartition") == 1
+    assert plan(spread(big)).startswith(top_spread)
+
+    # (j) node classes decide, not plan text: a scan already split
+    # slots-wide whose column names and filter literal read like wide
+    # nodes is narrow, and is left alone
+    path = str(tmp_path / "marker_names.parquet")
+    small.select("doc_id", F.lit(1).alias("Sort"), F.lit(2).alias("Join")
+                 ).repartition(2 * slots).write.parquet(path)
+    scan = spark.read.parquet(path).filter("doc_id != 'Aggregate'")
+    assert scan.rdd.getNumPartitions() >= slots
+    assert spread(scan) is scan
+
+    # (k) a persisted aggregate's plan is one InMemoryRelation leaf;
+    # df.rdd on it runs the aggregate, so it must not count as narrow
+    cached = small.groupBy("text").agg(F.max("doc_id").alias("doc_id")).persist()
+    try:
+        derived = cached.select("doc_id", "text")
+        assert _first_wide_node(derived).nodeName() == "InMemoryRelation"
+        spread(derived)
+    finally:
+        cached.unpersist()
+
+
+def test_salting_checkpoints_only_narrow_inputs(spark, docs_df, tmp_path):
+    """extract_with_salting rescans a narrow input once per branch and
+    checkpoints (a LogicalRDD in the plan) anything else. Node classes
+    decide: a filter literal that reads like a node name stays a
+    rescan, and a rebalance hint is not narrow."""
+    path = str(tmp_path / "docs.parquet")
+    docs_df.write.parquet(path)
+    docs = spark.read.parquet(path)
+
+    def checkpointed(df):
+        out = pipeline.extract_with_salting(df, lexicon_words())
+        return "LogicalRDD" in (
+            out._jdf.queryExecution().optimizedPlan().toString()
+        )
+
+    assert not checkpointed(docs.filter("doc_id != 'Join'"))
+    assert checkpointed(docs.hint("rebalance"))

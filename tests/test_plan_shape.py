@@ -1,10 +1,10 @@
 """Physical-plan assertions: the extraction plan must stay narrow, scans
-must prune and push down, bucketed joins must not shuffle — the
-SURVEY.md §4 guarantees, checked on the actual executed plans."""
+must prune and push down, small sides must broadcast — the SURVEY.md §4
+guarantees, checked on the actual executed plans."""
 
 import pytest
 
-from jochre3_ocr_spark.plans import bucketing, pipeline
+from jochre3_ocr_spark.plans import pipeline
 from jochre3_ocr_spark.schema import DOCS_SCHEMA
 from jochre3_ocr_spark.sources.corpus import generate_docs, lexicon_words
 
@@ -57,22 +57,6 @@ def test_filter_pushdown_reaches_scan(spark, docs_path):
     docs = spark.read.parquet(docs_path).filter("doc_id = 'doc00000003'")
     plan = _plan(docs)
     assert "PushedFilters" in plan and "doc00000003" in plan
-
-
-def test_bucketed_join_shuffle_free(spark, docs_path, tmp_path):
-    docs = spark.read.parquet(docs_path)
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    bucketing.write_bucketed(
-        docs.select("doc_id", "spans"), "docs_a", buckets=4,
-        path=str(tmp_path / "a"),
-    )
-    bucketing.write_bucketed(
-        docs.select("doc_id").withColumn("flag", docs.doc_id.isNotNull()),
-        "docs_b", buckets=4, path=str(tmp_path / "b"),
-    )
-    assert bucketing.bucketed_join_is_shuffle_free(spark, "docs_a", "docs_b")
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
 def test_ivf_topk_plan_prunes_before_scoring(spark):

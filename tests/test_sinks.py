@@ -160,7 +160,7 @@ def test_zip_lexicon_roundtrip(tmp_path):
 
 
 def test_write_alto_sink(spark, tmp_path):
-    from jochre3_ocr_spark.plans.pipeline import extract
+    from jochre3_ocr_spark.plans.pipeline import extract, finalize
     from jochre3_ocr_spark.schema import DOCS_SCHEMA
     from jochre3_ocr_spark.sources.corpus import generate_docs, lexicon_words
     from jochre3_ocr_spark.sources.sinks import write_alto
@@ -176,7 +176,7 @@ def test_write_alto_sink(spark, tmp_path):
         for d in generate_docs(5)
     ]
     docs = spark.createDataFrame(rows, schema=DOCS_SCHEMA)
-    fin = extract(docs, lexicon_words(), materialize_spans=True)
+    fin = finalize(extract(docs, lexicon_words()))
     outp = str(tmp_path / "alto_out")
     write_alto(fin, outp)
     back = spark.read.parquet(outp)
@@ -197,7 +197,7 @@ def test_alto_zip_sink_roundtrip(spark, tmp_path):
     import io
     import zipfile
 
-    from jochre3_ocr_spark.plans.pipeline import extract
+    from jochre3_ocr_spark.plans.pipeline import extract, finalize
     from jochre3_ocr_spark.schema import DOCS_SCHEMA
     from jochre3_ocr_spark.sources.alto_xml import parse_alto
     from jochre3_ocr_spark.sources.corpus import generate_docs, lexicon_words
@@ -214,7 +214,7 @@ def test_alto_zip_sink_roundtrip(spark, tmp_path):
         for d in generate_docs(4)
     ]
     docs = spark.createDataFrame(rows, schema=DOCS_SCHEMA)
-    fin = extract(docs, lexicon_words(), materialize_spans=True)
+    fin = finalize(extract(docs, lexicon_words()))
     zipped = {r["doc_id"]: bytes(r["alto_zip"]) for r in alto_zip_bytes(fin).collect()}
     texts = {r["doc_id"]: r["text"] for r in fin.collect()}
     assert set(zipped) == set(texts)
