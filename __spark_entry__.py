@@ -2309,9 +2309,9 @@ def _dedup_adversarial_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT-duplicate group (the first doc's text replicated verbatim) and
     a 120-member NEAR-duplicate family (the second doc's text + one
     distinct tail token each — one hot LSH bucket of ~121 > max_bucket),
-    then run the composed scale-safe pipeline. At this density the
-    density probe turns the exact pre-collapse ON (~33% duplicates) and
-    the hot-bucket cap engages on genuinely non-identical docs — while
+    then run the composed scale-safe pipeline. The exact pre-collapse
+    absorbs the exact group and the hot-bucket cap engages on genuinely
+    non-identical docs — while
     the DuckDB oracle is the NAIVE uncapped all-docs construction, so
     the green row proves BOTH scale features output-invariant exactly
     where they activate. Reference shape being matched at corpus scale:
@@ -2354,9 +2354,9 @@ def _dedup_adversarial_density(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     # materialize the augmented corpus ONCE (5 420 rows): the dedup
-    # pipeline scans its input several times (density probe, collapse
-    # reps, members, full-domain verdict join), and each scan would
-    # otherwise re-run the single-partition rank window + crossJoins
+    # pipeline scans its input several times (collapse reps, members,
+    # full-domain verdict join), and each scan would otherwise re-run
+    # the single-partition rank window + crossJoins
     corpus = (
         base.unionByName(dup).unionByName(near).localCheckpoint(eager=True)
     )

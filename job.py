@@ -232,10 +232,6 @@ def main(argv=None) -> int:
     p.add_argument("--max-bucket", type=int, default=64,
                    help="dedup-verdicts hot-bucket cap; 0 = uncapped "
                    "(the b² blowup — only for small corpora / A-B runs)")
-    p.add_argument("--precollapse", default="auto",
-                   choices=["auto", "on", "off"],
-                   help="dedup-verdicts exact pre-collapse; auto = "
-                   "density-probe gated (output-invariant either way)")
     p.add_argument(
         "--predict-http",
         default=None,
@@ -408,33 +404,21 @@ def main(argv=None) -> int:
         elif args.corpus_op == "dedup-verdicts":
             from jochre3_ocr_spark.operators.dedup import (
                 _collapse_reps,
-                _resolve_precollapse,
                 dedup_corpus,
                 lsh_bucket_stats,
                 simhash_bucket_stats,
             )
 
-            # resolve the density-gated collapse decision ONCE here so
-            # the detailed report below describes the SAME frame the
-            # pipeline bands (auto might leave the collapse off), and
-            # the pipeline itself skips a second probe job
-            precollapse = _resolve_precollapse(
-                docs, "doc_id", "text",
-                {"auto": "auto", "on": True, "off": False}[args.precollapse],
-            )
             if args.report_hot_buckets:
                 # detailed observability (opt-in: costs one extra LSH
                 # banding pass): machine-readable cap activity over the
                 # frame the pipeline actually bands — the pre-collapsed
-                # representatives when the collapse is on (a report then
-                # means a REAL residual hot bucket, not an exact-dup
-                # group the collapse absorbed), the raw corpus otherwise
+                # representatives, so a report means a REAL residual hot
+                # bucket, not an exact-dup group the collapse absorbed
                 from pyspark.sql import functions as F
 
                 min_tokens = 3 if args.dedup_method == "minhash" else 1
-                _, banded = _collapse_reps(
-                    docs, "doc_id", "text", min_tokens, precollapse
-                )
+                _, banded = _collapse_reps(docs, "doc_id", "text", min_tokens)
                 cap = args.max_bucket or None
                 if args.dedup_method == "minhash":
                     stats = lsh_bucket_stats(banded, max_bucket=cap)
@@ -448,7 +432,6 @@ def main(argv=None) -> int:
                 if hot["mx"] is not None:
                     print(json.dumps({
                         "dedup_hot_buckets": True,
-                        "precollapsed": precollapse,
                         "max_bucket_size": int(hot["mx"]),
                         "pairs_uncapped": int(hot["pu"] or 0),
                         "pairs_after_cap": int(hot["pc"] or 0),
@@ -463,7 +446,6 @@ def main(argv=None) -> int:
                 method=args.dedup_method,
                 max_bucket=args.max_bucket or None,
                 warn_hot_buckets=not args.report_hot_buckets,
-                precollapse_exact=precollapse,
             )
         elif args.corpus_op == "html-extract":
             from jochre3_ocr_spark.operators.html_extract import (

@@ -967,118 +967,29 @@ def _cc_star(pairs: DataFrame, max_iters: int) -> DataFrame:
     )
 
 
-#: minimum estimated exact-duplicate fraction at which "auto" turns the
-#: exact pre-collapse on: below this, collapsing buys nothing (every text
-#: is its own representative) and the collapse's extra groupBy+joins are
-#: pure overhead — the +40% dedup_clusters_full tax measured at sf0.1's
-#: ~0 duplicate density (BENCH.md round 4). The probe uses
-#: approx_count_distinct at rsd=0.05 (sketch cost note at the
-#: call site), so 5% clears the combined estimator+sampling noise band.
-_AUTO_PRECOLLAPSE_MIN_DENSITY = 0.05
-
-
-def _exact_dup_density(
-    df: DataFrame, id_col: str, text_col: str, fraction: float = 0.1
-) -> float:
-    """Estimated fraction of rows whose text is an exact duplicate of
-    another row: 1 − distinct(md5(text))/count(*), measured over a
-    deterministic ``fraction``-sized doc sample (md5(doc_id) threshold —
-    partition-independent and resume-stable, the corpus_sample
-    construction) so the probe costs a fraction of a scan, not a full
-    pass. Sampling UNDERestimates density contributed by small duplicate
-    groups (a pair survives the sample only when both members do), which
-    errs exactly the safe way: the pre-collapse this probe gates exists
-    for GIANT boilerplate groups, and a 10⁵-member group keeps ~its full
-    density under any fraction, while a missed small group is bounded by
-    ``max_bucket`` downstream regardless. One HLL agg over a narrow
-    projection; decision threshold in
-    :data:`_AUTO_PRECOLLAPSE_MIN_DENSITY`."""
-    agg = [
-        # rsd 0.05, not 0.01: Spark sizes the HLL++ sketch ~(1/rsd)², so
-        # rsd 0.01 allocates a huge register array PER partial-agg
-        # buffer — measured 0.66 s vs 0.14 s for the same probe at
-        # sf0.1. The probe feeds a 5%-density GATE whose outcome is
-        # output-invariant either way; 5% relative error on the
-        # distinct count is far inside the sampling error it already
-        # tolerates.
-        F.approx_count_distinct(F.md5(F.col(text_col)), 0.05).alias("d"),
-        F.count(F.col(text_col)).alias("n"),
-    ]
-    sampled = df.filter(
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        < F.lit(int(fraction * 0xFFFFFFFF))
-    )
-    row = sampled.agg(*agg).collect()[0]
-    if row["n"] < _PROBE_MIN_ROWS:
-        # corpus too small for the sample to be meaningful — the full
-        # probe on a corpus this size is trivially cheap anyway
-        row = df.agg(*agg).collect()[0]
-    if not row["n"]:
-        return 0.0
-    return max(0.0, 1.0 - row["d"] / row["n"])
-
-
-#: below this many sampled rows the density probe re-runs on the full
-#: frame: the sampled estimate would be noise, and a corpus small enough
-#: to sample under this is small enough to probe outright. 200 rows
-#: resolves density to ~±2% against the 5% decision threshold.
-_PROBE_MIN_ROWS = 200
-
-
-def _resolve_precollapse(
-    df: DataFrame, id_col: str, text_col: str, value
-) -> bool:
-    """Resolve a ``precollapse_exact`` argument to a concrete bool: True
-    and False pass through; "auto" runs the sampled density probe once.
-    Any other string is a hard error (a mistyped "Auto" or a CLI-plumbed
-    "false" must not silently truthiness-coerce into forcing the
-    collapse ON).
-
-    Probe cost caveat: the md5(doc_id)-threshold filter cannot prune
-    upstream lineage, so on a DERIVED frame (anything behind a
-    mapInPandas/shuffle rather than a parquet scan) the probe evaluates
-    the full input DAG once before the pipeline evaluates it again —
-    pass an explicit True/False (or persist the frame first) when the
-    input is expensive to recompute."""
-    if value is True or value is False:
-        return value
-    if value == "auto":
-        return (
-            _exact_dup_density(df, id_col, text_col)
-            >= _AUTO_PRECOLLAPSE_MIN_DENSITY
-        )
-    raise ValueError(
-        f"precollapse_exact must be True, False or 'auto', got {value!r}"
-    )
-
-
 def _collapse_reps(
     df: DataFrame,
     id_col: str,
     text_col: str,
     min_tokens: int,
-    precollapse: bool,
 ) -> tuple[DataFrame, DataFrame]:
     """(members, reps) for :func:`_cluster_verdicts`. ``reps`` is
     (doc_id, text), the frame candidate generation runs on — callers
     also run bucket-stats observability over it (``warn_hot_buckets``,
     ``job.py``). ``members`` is (doc_id, rep, linked), one row per
     corpus doc: the doc takes ``rep``'s component label when ``linked``,
-    and is its own singleton otherwise. Without ``precollapse`` every
-    doc is its own linked representative.
+    and is its own singleton otherwise.
 
-    With ``precollapse`` each distinct text collapses to ONE
-    representative, its minimum doc_id: a giant group of IDENTICAL docs
-    (boilerplate, empty pages) is the dominant cause of hot LSH/simhash
-    buckets, since every member lands in every one of the others'
-    buckets. Members are labelled by key and never enter connected
-    components; because each rep is its group's minimum,
-    ``coalesce(cc_label, rep)`` is exactly the naive construction's
-    component minimum. A member is linked only when the text yields at
-    least ``min_tokens`` tokens (the n-shingle threshold for MinHash, 1
-    for SimHash), mirroring the generators, which never pair docs that
-    produce no signature, identical or not.
+    Each distinct text collapses to ONE representative, its minimum
+    doc_id: a giant group of IDENTICAL docs (boilerplate, empty pages)
+    is the dominant cause of hot LSH/simhash buckets, since every member
+    lands in every one of the others' buckets. Members are labelled by
+    key and never enter connected components; because each rep is its
+    group's minimum, ``coalesce(cc_label, rep)`` is exactly the naive
+    construction's component minimum. A member is linked only when the
+    text yields at least ``min_tokens`` tokens (the n-shingle threshold
+    for MinHash, 1 for SimHash), mirroring the generators, which never
+    pair docs that produce no signature, identical or not.
 
     Shuffle shape (guide §2.3): ONE ``groupBy(th)``, th = md5(text),
     computes the rep AND carries its text via ``min_by(text, doc_id)``
@@ -1086,15 +997,6 @@ def _collapse_reps(
     one (th, rep, text) row per group and task. The members side is a
     text-free LEFT join on ``th``: md5(NULL) is NULL, and an inner join
     would drop NULL-text docs instead of keeping them as singletons."""
-    if not precollapse:
-        reps = df.select(
-            F.col(id_col).cast("string").alias("doc_id"),
-            F.col(text_col).alias("text"),
-        )
-        members = reps.select(
-            "doc_id", F.col("doc_id").alias("rep"), F.lit(True).alias("linked")
-        )
-        return members, reps
     keyed = df.select(
         F.col(id_col).cast("string").alias("doc_id"),
         F.col(text_col).alias("text"),
@@ -1157,33 +1059,23 @@ def duplicate_clusters(
     band_size: int = 2,
     include_singletons: bool = False,
     max_bucket: int | None = 64,
-    precollapse_exact: bool | str = "auto",
 ) -> DataFrame:
     """End-to-end near-duplicate clustering: MinHash LSH candidate pairs
     → connected components → (doc_id, cluster_id, cluster_size,
     is_canonical). ``is_canonical`` marks the doc to KEEP (smallest
     doc_id per cluster) — the pipeline's "drop duplicates, keep one
-    representative" verdict table.
+    representative" verdict table. This is :func:`dedup_corpus` with
+    ``method="minhash"`` and without its ``keep`` column.
 
-    Scale posture (on by default, both invariant on the OUTPUT clusters):
-    ``precollapse_exact`` collapses identical texts to one representative
-    before signature generation; exact members are labelled by key from
-    their representative's component and never enter connected
-    components (:func:`_collapse_reps`) — a 10⁶-doc boilerplate group
-    costs 1 signature and one join row per member instead of 10¹²
-    band-join pairs. ``max_bucket`` caps any residual hot band bucket
+    Scale posture (both invariant on the OUTPUT clusters): identical
+    texts collapse to one representative before signature generation;
+    exact members are labelled by key from their representative's
+    component and never enter connected components
+    (:func:`_collapse_reps`) — a 10⁶-doc boilerplate group costs 1
+    signature and one join row per member instead of 10¹² band-join
+    pairs. ``max_bucket`` caps any residual hot band bucket
     (:func:`_capped_bucket_pairs`). Every output row is identical to the
     naive uncapped all-docs construction.
-
-    ``precollapse_exact="auto"`` (default) runs one cheap density probe
-    (:func:`_exact_dup_density`) and collapses only when the estimated
-    exact-duplicate fraction reaches
-    :data:`_AUTO_PRECOLLAPSE_MIN_DENSITY` — at ~0 density the collapse
-    is pure overhead (the +40% ``dedup_clusters_full`` tax at sf0.1,
-    BENCH.md round 4), while the boilerplate-heavy corpora it protects
-    against sit far above the threshold. Because the collapse is
-    output-invariant, the probe's decision can never change results —
-    pass True/False to skip the probe job when the density is known.
 
     DOMAIN: by default rows cover only docs in a cluster of two or more
     (``cluster_size > 1``) — unique docs get NO row, so a consumer
@@ -1192,16 +1084,10 @@ def duplicate_clusters(
     (the ``corpus_filter_verdicts`` pattern), or pass
     ``include_singletons=True`` to keep every doc, unique ones as their
     own cluster (cluster_size=1, is_canonical=true)."""
-    members, reps = _collapse_reps(
-        df, id_col, text_col, n,
-        _resolve_precollapse(df, id_col, text_col, precollapse_exact),
-    )
-    out = _cluster_verdicts(
-        members,
-        minhash_lsh_candidates(
-            reps, "doc_id", "text", n, num_hashes, band_size, max_bucket
-        ),
-    )
+    out = dedup_corpus(
+        df, id_col, text_col, "minhash", n, num_hashes, band_size,
+        max_bucket=max_bucket,
+    ).drop("keep")
     return out if include_singletons else out.filter(F.col("cluster_size") > 1)
 
 
@@ -1218,21 +1104,14 @@ def dedup_corpus(
     n_bands: int = 4,
     max_bucket: int | None = 64,
     warn_hot_buckets: bool = False,
-    precollapse_exact: bool | str = "auto",
 ) -> DataFrame:
     """The composed, scale-safe corpus dedup pipeline — what a user
     should run instead of assembling the parts: exact-duplicate
-    pre-collapse (density-gated, see below) → capped candidate
-    generation on representatives (``method="minhash"`` LSH banding or
-    ``method="simhash"`` banded Hamming) → connected components over the
-    representative pairs only → one verdict row per corpus document,
-    exact members labelled by key from their representative
-    (:func:`_collapse_reps`).
-
-    ``precollapse_exact`` follows :func:`duplicate_clusters`: "auto"
-    (default) probes the exact-duplicate density once and collapses only
-    when ≥ :data:`_AUTO_PRECOLLAPSE_MIN_DENSITY` — output-invariant
-    either way, so the probe only moves cost, never results.
+    pre-collapse → capped candidate generation on representatives
+    (``method="minhash"`` LSH banding or ``method="simhash"`` banded
+    Hamming) → connected components over the representative pairs only
+    → one verdict row per corpus document, exact members labelled by key
+    from their representative (:func:`_collapse_reps`).
 
     ``warn_hot_buckets=True`` additionally runs the matching bucket-stats
     report (:func:`lsh_bucket_stats` / :func:`simhash_bucket_stats`) over
@@ -1259,8 +1138,7 @@ def dedup_corpus(
     else:
         raise ValueError(f"unknown method: {method!r}")
     members, reps = _collapse_reps(
-        df, id_col, text_col, n if method == "minhash" else 1,
-        _resolve_precollapse(df, id_col, text_col, precollapse_exact),
+        df, id_col, text_col, n if method == "minhash" else 1
     )
     if warn_hot_buckets and max_bucket is not None:
         _warn_hot_buckets(reps, method, n, num_hashes, band_size,

@@ -13,8 +13,9 @@ boilerplate group and a 10⁴-member pairwise NEAR-duplicate group
            job.py --corpus-op dedup-verdicts over the corpus, with
            aggregate-RSS sampling; verify the exact expected cluster
            structure (2 giant clusters, exact keep count, full domain)
-  phase 4  the UNCAPPED / NON-COLLAPSED configuration on the same
-           input under a wall-clock budget — expected NOT to complete
+  phase 4  the naive UNCAPPED / NON-COLLAPSED construction (public
+           operators: uncapped LSH pairs → connected components) on the
+           same input under a wall-clock budget — expected NOT to complete
            (b²/2 ≈ 5×10⁹ pairs through one bucket key × 4 bands)
 
 Results go to stdout as JSON lines; BENCH.md records the round-5 run.
@@ -218,20 +219,27 @@ def main() -> int:
     if not ok:
         return 1
 
-    # ---- phase 4: the uncapped / non-collapsed configuration under a
-    # budget — demonstrating WHY the defaults exist
+    # ---- phase 4: the naive uncapped / non-collapsed construction
+    # under a budget — demonstrating WHY the defaults exist. Built from
+    # public operators: uncapped LSH pairs over every doc → connected
+    # components, each doc in no pair its own cluster.
     if args.skip_uncapped:
         return 0
     code = (
         "import sys; sys.path.insert(0, %r)\n"
+        "from pyspark.sql import functions as F\n"
         "from jochre3_ocr_spark.plans.pipeline import get_spark\n"
-        "from jochre3_ocr_spark.operators.dedup import dedup_corpus\n"
+        "from jochre3_ocr_spark.operators.dedup import (\n"
+        "    connected_components, minhash_lsh_candidates)\n"
         "spark = get_spark('soak-uncapped', master='local[32]',"
         " shuffle_partitions=32)\n"
         "spark.sparkContext.setLogLevel('ERROR')\n"
-        "docs = spark.read.parquet(%r)\n"
-        "out = dedup_corpus(docs, max_bucket=None,"
-        " precollapse_exact=False)\n"
+        "docs = spark.read.parquet(%r).select("
+        "F.col('doc_id').cast('string').alias('doc_id'), 'text')\n"
+        "labels = connected_components(\n"
+        "    minhash_lsh_candidates(docs, max_bucket=None))\n"
+        "out = docs.join(labels, 'doc_id', 'left').select(\n"
+        "    'doc_id', F.coalesce('cluster_id', 'doc_id'))\n"
         "print('UNCAPPED_DONE', out.count())\n" % (REPO, corpus_path)
     )
     stop = threading.Event()

@@ -23,6 +23,28 @@ def rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _naive_clusters(docs):
+    """The naive all-docs clustering, built from public operators only:
+    uncapped MinHash LSH pairs over every doc → connected components,
+    with a doc that is in no pair as its own cluster. The reference the
+    scale-safe pipeline (exact pre-collapse + bucket cap) must equal."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    docs = docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    labels = dedup.connected_components(
+        dedup.minhash_lsh_candidates(docs, max_bucket=None)
+    ).withColumnRenamed("cluster_id", "label")
+    return (
+        docs.join(labels, "doc_id", "left")
+        .select("doc_id", F.coalesce("label", "doc_id").alias("cluster_id"))
+        .withColumn(
+            "cluster_size", F.count("*").over(Window.partitionBy("cluster_id"))
+        )
+        .withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
+    )
+
+
 def test_exact_dedup_matches_sql(spark, documents):
     api = dedup.exact_dedup(documents, prefix=40).select(
         "text_hash", "n_docs", "keeper"
@@ -520,13 +542,7 @@ def test_duplicate_clusters_precollapse_equals_naive(spark):
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     safe = duplicate_clusters(docs, include_singletons=True)
-    naive = duplicate_clusters(
-        docs,
-        include_singletons=True,
-        precollapse_exact=False,
-        max_bucket=None,
-    )
-    assert rows(safe) == rows(naive)
+    assert rows(safe) == rows(_naive_clusters(docs))
 
 
 def test_dedup_corpus_minhash_matches_naive_full_domain(spark):
@@ -534,17 +550,11 @@ def test_dedup_corpus_minhash_matches_naive_full_domain(spark):
     clustering + the keep verdict column."""
     from pyspark.sql import functions as F
 
-    from jochre3_ocr_spark.operators.dedup import (
-        dedup_corpus,
-        duplicate_clusters,
-    )
+    from jochre3_ocr_spark.operators.dedup import dedup_corpus
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     got = dedup_corpus(docs)
-    want = duplicate_clusters(
-        docs, include_singletons=True, precollapse_exact=False,
-        max_bucket=None,
-    ).withColumn("keep", F.col("is_canonical"))
+    want = _naive_clusters(docs).withColumn("keep", F.col("is_canonical"))
     assert rows(got) == rows(want)
 
 
@@ -598,11 +608,8 @@ def test_dedup_corpus_matches_naive_on_both_cc_routes(
     if cc_cap is not None:
         monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_PAIRS", cc_cap)
     docs = _exact_labelling_corpus(spark)
-    got = dedup.dedup_corpus(docs, max_bucket=4, precollapse_exact=True)
-    want = dedup.duplicate_clusters(
-        docs, precollapse_exact=False, max_bucket=None,
-        include_singletons=True,
-    ).withColumn("keep", F.col("is_canonical"))
+    got = dedup.dedup_corpus(docs, max_bucket=4)
+    want = _naive_clusters(docs).withColumn("keep", F.col("is_canonical"))
     got_rows = rows(got)
     assert got_rows == rows(want)
     by_doc = {r[0]: r for r in got_rows}
@@ -637,21 +644,52 @@ def test_dedup_runs_components_over_representatives_only(
     }
     out = {
         r.doc_id: r
-        for r in dedup.dedup_corpus(
-            docs, max_bucket=4, precollapse_exact=True
-        ).collect()
+        for r in dedup.dedup_corpus(docs, max_bucket=4).collect()
     }
     assert seen and {d for pair in seen for d in pair} <= reps
     assert all(out[f"x{i:02d}"].cluster_id == "x00" for i in range(10))
     assert all(out[f"e{i:02d}"].cluster_id == "a00" for i in range(30))
 
 
+def test_exact_collapse_runs_by_default_at_low_density(spark, monkeypatch):
+    """The exact pre-collapse is unconditional: on a corpus of 300 unique
+    docs plus one 5-member exact group (under 2 % duplicates), the LSH
+    candidate generator still receives one row per distinct text, from
+    dedup_corpus and from duplicate_clusters, and the group clusters to
+    its minimum doc_id."""
+    seen = []
+    real = dedup.minhash_lsh_candidates
+
+    def spy(df, *args, **kwargs):
+        seen.append([r.text for r in df.select("text").collect()])
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "minhash_lsh_candidates", spy)
+    rows_in = [
+        (f"u{i:03d}", " ".join(f"u{i}t{j}" for j in range(6)))
+        for i in range(300)
+    ]
+    rows_in += [(f"e{i}", "one exact text, five docs") for i in range(5)]
+    docs = spark.createDataFrame(rows_in, "doc_id string, text string")
+    outs = [
+        dedup.dedup_corpus(docs),
+        dedup.duplicate_clusters(docs, include_singletons=True),
+    ]
+    for out in outs:
+        by_doc = {r.doc_id: r for r in out.collect()}
+        assert len(by_doc) == 305
+        assert all(by_doc[f"e{i}"].cluster_id == "e0" for i in range(5))
+    assert len(seen) == 2
+    for texts in seen:
+        assert len(texts) == len(set(texts)) == 301
+
+
 @pytest.mark.parametrize("method", ["minhash", "simhash"])
 def test_null_and_empty_text_docs_are_singletons(spark, method):
     """md5(NULL) is NULL, so NULL-text docs have no exact-group key:
     they (and empty or blank texts, which yield no tokens) come out as
-    their own size-1 canonical clusters — with the pre-collapse on or
-    off, from dedup_corpus and from the full-domain duplicate_clusters."""
+    their own size-1 canonical clusters, from dedup_corpus and from the
+    full-domain duplicate_clusters."""
     good = "one two three four five six seven eight"
     docs = spark.createDataFrame(
         [(f"n{i}", None) for i in range(3)]
@@ -663,17 +701,9 @@ def test_null_and_empty_text_docs_are_singletons(spark, method):
     hostile = [f"n{i}" for i in range(3)] + [f"m{i}" for i in range(3)] + [
         "b0", "b1"
     ]
-    outs = [
-        dedup.dedup_corpus(docs, method=method, precollapse_exact=pc)
-        for pc in (True, False)
-    ]
+    outs = [dedup.dedup_corpus(docs, method=method)]
     if method == "minhash":
-        outs += [
-            dedup.duplicate_clusters(
-                docs, include_singletons=True, precollapse_exact=pc
-            )
-            for pc in (True, False)
-        ]
+        outs.append(dedup.duplicate_clusters(docs, include_singletons=True))
     for out in outs:
         by_doc = {r.doc_id: r for r in out.collect()}
         assert len(by_doc) == 12
@@ -708,59 +738,37 @@ def test_simhash_bucket_stats_reports_cap_drops(spark):
 
 
 def test_dedup_corpus_warn_hot_buckets(spark):
-    """warn_hot_buckets: a residual hot bucket (cap exceeded AFTER the
-    configured collapse behavior) emits one warning; when the exact
-    pre-collapse absorbs the group, no warning fires — the warning
-    reflects what the candidate generator actually sees."""
+    """warn_hot_buckets: a residual hot bucket (cap exceeded by the
+    representatives the candidate generator sees) emits one warning — a
+    near-duplicate group, which the exact pre-collapse cannot absorb;
+    when the hot group is exact, the collapse absorbs it and no warning
+    fires."""
     import warnings as W
 
     import pytest as _pytest
 
     from jochre3_ocr_spark.operators.dedup import dedup_corpus
 
-    docs = _hot_bucket_corpus(spark)
+    shared = " ".join(f"s{j:02d}" for j in range(30))
+    near = spark.createDataFrame(
+        [(f"n{i:03d}", f"{shared} t{i}") for i in range(40)],
+        "doc_id string, text string",
+    )
     with _pytest.warns(UserWarning, match="exceed max_bucket=5"):
         dedup_corpus(
-            docs, method="simhash", max_bucket=5,
-            precollapse_exact=False, warn_hot_buckets=True,
+            near, method="simhash", max_bucket=5, warn_hot_buckets=True,
         ).collect()
+    docs = _hot_bucket_corpus(spark)
     with W.catch_warnings(record=True) as caught:
         W.simplefilter("always")
         dedup_corpus(
-            docs, method="simhash", max_bucket=5,
-            precollapse_exact=True, warn_hot_buckets=True,
+            docs, method="simhash", max_bucket=5, warn_hot_buckets=True,
         ).collect()
     # assert the ABSENCE of the specific cap warning only — erroring on
     # every warning would break on unrelated dependency deprecations
     assert not [
         w for w in caught if "exceed max_bucket" in str(w.message)
     ]
-
-
-def test_exact_dup_density_probe_and_auto_decision(spark):
-    """precollapse_exact="auto" (VERDICT r4 next-round item 4): the
-    density probe reads ~0.9 on a boilerplate-heavy corpus (collapse on)
-    and ~0 on the synthetic documents table (collapse off — removing the
-    toy-scale tax), and both decisions produce identical output because
-    the collapse is output-invariant."""
-    from jochre3_ocr_spark.operators.dedup import (
-        _AUTO_PRECOLLAPSE_MIN_DENSITY,
-        _exact_dup_density,
-        duplicate_clusters,
-    )
-
-    hot = _hot_bucket_corpus(spark)
-    assert _exact_dup_density(hot, "doc_id", "text") > 0.8
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    assert (
-        _exact_dup_density(docs, "doc_id", "text")
-        < _AUTO_PRECOLLAPSE_MIN_DENSITY
-    )
-    auto = duplicate_clusters(hot, include_singletons=True)
-    forced = duplicate_clusters(
-        hot, include_singletons=True, precollapse_exact=True
-    )
-    assert rows(auto) == rows(forced)
 
 
 def test_connected_components_default_matches_star_per_graph(
