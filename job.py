@@ -7,7 +7,7 @@ Packaging (BASELINE.md):
     spark-submit --py-files engine.zip job.py \
         --input  /path/to/docs_parquet_or_iceberg \
         --output /path/to/spans_out \
-        [--lexicon /path/to/lexicon.txt] [--no-salting] [--generate N]
+        [--lexicon /path/to/lexicon.txt] [--generate N]
 
 Resumable: re-running with the same --output anti-joins already-written
 doc_ids and processes only the remainder (plans/pipeline.run_job).
@@ -61,7 +61,6 @@ def main(argv=None) -> int:
     p.add_argument("--lexicon", default=None, help="text file, one word per line")
     p.add_argument("--generate", type=int, default=0,
                    help="generate N synthetic docs into --input first")
-    p.add_argument("--no-salting", action="store_true")
     # reference CLI knobs (core/JochreCLI.scala / reference.conf)
     p.add_argument("--beam-width", type=int, default=5)
     p.add_argument("--unknown-word-factor", type=float, default=0.5)
@@ -793,7 +792,6 @@ def main(argv=None) -> int:
         args.output,
         words,
         config=config,
-        salted=not args.no_salting,
         metrics_path=metrics_path,
     )
     formats = [f.strip() for f in args.formats.split(",") if f.strip()]

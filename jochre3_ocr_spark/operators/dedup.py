@@ -577,16 +577,17 @@ def _simhash_votes(
     return toks.groupBy("doc_id").agg(*aggs)
 
 
-def _signature_expr(bits: int):
-    """Signed-BIGINT signature from the vote columns v0..v{bits-1}:
-    bit b contributes 2^b (python-literal, exact) when v{b} >= 0; bit 63
-    contributes -2^63 (two's complement) so 64 bits fit a BIGINT."""
+def _pack_votes(vote_cols: list[str]):
+    """Signed-BIGINT packing of per-bit vote columns: the j-th column
+    contributes 2^j (python-literal, exact) when its vote is >= 0; j = 63
+    contributes -2^63 (two's complement), since 1 << 63 overflows a
+    BIGINT literal, so 64 bits fit one BIGINT."""
     contrib = [
         F.when(
-            F.col(f"v{b}") >= 0,
-            F.lit(_LONG_MIN if b == 63 else (1 << b)),
+            F.col(c) >= 0,
+            F.lit(_LONG_MIN if j == 63 else (1 << j)),
         ).otherwise(F.lit(0))
-        for b in range(bits)
+        for j, c in enumerate(vote_cols)
     ]
     expr = contrib[0]
     for c in contrib[1:]:
@@ -608,7 +609,7 @@ def simhash(
     token×bits row explosion (see :func:`_simhash_votes`)."""
     votes = _simhash_votes(df, id_col, text_col, bits)
     return votes.select(
-        "doc_id", _signature_expr(bits).alias("simhash")
+        "doc_id", _pack_votes([f"v{b}" for b in range(bits)]).alias("simhash")
     )
 
 
@@ -624,26 +625,15 @@ def _simhash_bands(
     band_bits = bits // n_bands
     votes = _simhash_votes(df, id_col, text_col, bits)
 
-    def _band_expr(k: int):
-        # j == 63 only when band_bits == 64 (n_bands=1): the band IS the
-        # signature, so its top bit needs the same two's-complement
-        # treatment as _signature_expr — 1 << 63 overflows a literal
-        contrib = [
-            F.when(
-                F.col(f"v{k * band_bits + j}") >= 0,
-                F.lit(_LONG_MIN if j == 63 else (1 << j)),
-            ).otherwise(F.lit(0))
-            for j in range(band_bits)
-        ]
-        e = contrib[0]
-        for c in contrib[1:]:
-            e = e + c
-        return e.cast("bigint")
-
     with_sig = votes.select(
         "doc_id",
-        _signature_expr(bits).alias("simhash"),
-        *[_band_expr(k).alias(f"bv{k}") for k in range(n_bands)],
+        _pack_votes([f"v{b}" for b in range(bits)]).alias("simhash"),
+        *[
+            _pack_votes(
+                [f"v{k * band_bits + j}" for j in range(band_bits)]
+            ).alias(f"bv{k}")
+            for k in range(n_bands)
+        ],
     )
     return with_sig.select(
         "doc_id",

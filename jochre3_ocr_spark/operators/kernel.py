@@ -91,7 +91,9 @@ def process_document(
 ) -> dict:
     """Run the full text pipeline on one document's flat span list.
 
-    Returns a dict matching SPANS_OUT_SCHEMA field names.
+    Returns one output row as a dict: the columns of
+    ``plans/pipeline._RAW_OUT_DDL``, with the rewritten ``spans`` (tuples)
+    in place of their JSON encoding ``spans_json``.
     """
     doc = parse_spans(doc_id, spans)
     return process_tree(doc, lexicon, config, topk_fn)
@@ -117,7 +119,9 @@ def error_row(doc_id: str, exc: Exception | str) -> dict:
 
 def process_document_safe(doc_id: str, spans, lexicon, config=None, topk_fn=identity_topk) -> dict:
     """Error-quarantining wrapper: one bad document must never fail the
-    job (SURVEY.md §3.4 — per-doc error column instead of task failure)."""
+    job (SURVEY.md §3.4 — per-doc error column instead of task failure).
+    For in-process callers; the Spark stage (``plans/pipeline
+    ._kernel_stage``) puts the same quarantine around its whole row."""
     try:
         return process_document(doc_id, spans, lexicon, config, topk_fn)
     except Exception as exc:  # noqa: BLE001 — quarantine anything

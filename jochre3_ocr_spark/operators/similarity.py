@@ -182,9 +182,8 @@ def kmeans_centroids_sampled(
     """Sample-trained spherical k-means — the practical 100 TB quantizer:
     train on a deterministic sample (lowest ``sample_size`` ids, one
     collect), Lloyd's in numpy on the driver, then the caller assigns the
-    FULL corpus distributed (assign_cells). Farthest-first init, same
-    semantics as the all-distributed variant but one Spark job instead of
-    k+iters."""
+    FULL corpus distributed (assign_cells). Deterministic farthest-first
+    init, one Spark job."""
     return [
         list(map(float, row))
         for row in _lloyd(
@@ -207,98 +206,6 @@ def _sample_matrix(df, sample_size: int, id_col: str, vec_col: str):
         .collect()
     )
     return np.array([r["v"] for r in rows], dtype=np.float64)
-
-
-def kmeans_centroids(
-    df: DataFrame,
-    k: int = 8,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list:
-    """Deterministic Lloyd's k-means for IVF coarse quantization.
-
-    Init: the k lowest-id vectors (deterministic — no RNG, resumable).
-    Each iteration is one distributed pass: assign every vector to its
-    nearest centroid with a JVM expression over a BROADCAST literal of
-    k·d floats (no join, no shuffle on the big side), then one groupBy
-    to re-average. Driver holds only k·d floats. Returns the centroids
-    as a list of lists (floats).
-
-    Iterative algorithms loop on the driver by design; the per-iteration
-    plan is scan → project(argmin) → partial+final aggregate.
-    """
-    # spherical k-means: unit-normalize so L2 argmin ≡ cosine argmax —
-    # the same metric the IVF probe scores with
-    base = df.select(
-        F.col(id_col).alias("vid"),
-        _unit_vec(vec_col).alias("v"),
-    )
-
-    # deterministic farthest-first init (k-means++ without RNG): seed at
-    # the lowest id, then repeatedly take the point farthest from its
-    # nearest chosen centroid (ties broken by lowest id). First-k init
-    # fails when the first k points share a cluster — all centroids land
-    # in it and Lloyd's cannot escape.
-    first = base.orderBy("vid").limit(1).collect()[0]
-    centroids = [list(first["v"])]
-    while len(centroids) < k:
-        cent_lit = F.array(
-            *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
-        )
-        far = (
-            base.withColumn("_cents", cent_lit)
-            .select(
-                "vid",
-                "v",
-                F.expr(
-                    "array_min(transform(_cents, c -> aggregate(zip_with(v, c,"
-                    " (a, b) -> (a - b) * (a - b)), 0.0D, (acc, x) -> acc + x)))"
-                ).alias("d"),
-            )
-            .orderBy(F.desc("d"), F.asc("vid"))
-            .limit(1)
-            .collect()[0]
-        )
-        centroids.append(list(far["v"]))
-    for _ in range(iters):
-        cent_lit = F.array(
-            *[
-                F.array(*[F.lit(float(x)) for x in c])
-                for c in centroids
-            ]
-        )
-        # squared L2 distance to each centroid, argmin via aggregate
-        assigned = base.withColumn("_cents", cent_lit).select(
-            "vid",
-            "v",
-            F.expr(
-                "CAST(array_position("
-                "  transform(_cents, c -> aggregate(zip_with(v, c,"
-                "    (a, b) -> (a - b) * (a - b)), 0.0D, (acc, x) -> acc + x)),"
-                "  array_min(transform(_cents, c -> aggregate(zip_with(v, c,"
-                "    (a, b) -> (a - b) * (a - b)), 0.0D, (acc, x) -> acc + x)))"
-                ") AS INT) - 1"
-            ).alias("cell"),
-        )
-        dim = len(centroids[0])
-        means = (
-            assigned.groupBy("cell")
-            .agg(
-                *[
-                    F.avg(F.col("v")[i]).alias(f"m{i}")
-                    for i in range(dim)
-                ],
-            )
-            .collect()
-        )
-        new_centroids = list(centroids)
-        for r in means:
-            new_centroids[int(r["cell"])] = [float(r[f"m{i}"]) for i in range(dim)]
-        if new_centroids == centroids:
-            break
-        centroids = new_centroids
-    return centroids
 
 
 # above this many k·d floats, embedding centroids as expression-tree
@@ -457,23 +364,20 @@ def ivf_kmeans_topk(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    sample_size: int | None = 4096,
+    sample_size: int = 4096,
 ) -> DataFrame:
     """IVF top-k over k-means cells (the production coarse quantizer;
     ivf_topk's first-K-vectors centroids are the degenerate fallback).
     Same pruned plan: the scoring join carries (pos, cell). Queries
     multi-probe their ``n_probe`` nearest cells (recall knob: probe cost
     scales linearly, still |n_probe·cell| ≪ |corpus|). The quantizer
-    trains on a deterministic sample by default (one Spark job);
-    ``sample_size=None`` trains all-distributed (k+iters passes)."""
+    trains on a deterministic sample of ``sample_size`` vectors (one
+    Spark job)."""
     from pyspark.sql.window import Window
 
-    if sample_size:
-        centroids = kmeans_centroids_sampled(
-            df, n_cells, kmeans_iters, sample_size, id_col, vec_col
-        )
-    else:
-        centroids = kmeans_centroids(df, n_cells, kmeans_iters, id_col, vec_col)
+    centroids = kmeans_centroids_sampled(
+        df, n_cells, kmeans_iters, sample_size, id_col, vec_col
+    )
     assign = assign_cells(df, centroids, id_col, vec_col)
     q_assign = assign_cells(df, centroids, id_col, vec_col, n_probe=n_probe)
 

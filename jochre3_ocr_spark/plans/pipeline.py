@@ -22,6 +22,10 @@ Design notes for 100 TB / 1000 executors:
   a 200-page document becomes ~N chunk rows spread across executors;
   correctness of reassembly relies on block independence (content joins
   are per top-level block: Page.scala:156-166);
+* every entry point (extract, both salting branches, extract_text_df,
+  ocr_documents) runs the kernel through ONE stage, ``_kernel_stage``,
+  which owns the worker lexicon, the per-doc quarantine, the span-JSON
+  encode and the output batch;
 * the lexicon ships once per executor via SparkContext.broadcast;
 * resume is an anti-join against completed doc_ids derived from
   committed output — idempotent because task files commit atomically.
@@ -33,6 +37,7 @@ import hashlib
 import json
 import os
 import re
+from functools import partial
 from json.encoder import encode_basestring
 from typing import Iterator
 
@@ -52,24 +57,21 @@ GIANT_THRESHOLD_SPANS = 8_000
 #: unprocessed and the shuffle is proportionate to the remaining work
 RESUME_BROADCAST_MAX_IDS = 5_000_000
 
-_OUT_FIELDS = (
-    "doc_id spans_json text processed_text alternatives_json n_spans "
-    "n_words mean_confidence language status error".split()
-)
-
 _SPAN_ARRAY_DDL = (
     "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 )
 
+#: the one declaration of an extraction output row; the kernel stage's
+#: batches and :func:`finalize` take their columns from it
 _RAW_OUT_DDL = (
     "doc_id string, spans_json string, text string, processed_text string, "
     "alternatives_json string, n_spans int, n_words int, "
     "mean_confidence double, language string, "
     "status string, error string"
 )
+_OUT_FIELDS = [field.split(" ", 1)[0] for field in _RAW_OUT_DDL.split(", ")]
 
 _CHUNK_DDL = "doc_id string, chunk_id int, spans_json string"
-_CHUNK_OUT_DDL = "chunk_id int, " + _RAW_OUT_DDL
 
 
 def get_spark(
@@ -210,50 +212,55 @@ def _get_worker_lexicon(lexicon_bc):
 def finalize(raw: DataFrame) -> DataFrame:
     """Restore the array<struct> spans column of an extraction output
     from its ``spans_json`` (JVM-side ``from_json``)."""
-    return raw.select(
-        "doc_id",
-        F.from_json("spans_json", _SPAN_ARRAY_DDL).alias("spans"),
-        "text",
-        "processed_text",
-        "alternatives_json",
-        "n_spans",
-        "n_words",
-        "mean_confidence",
-        "language",
-        "status",
-        "error",
-    )
+    return raw.select(*[
+        F.from_json(c, _SPAN_ARRAY_DDL).alias("spans") if c == "spans_json" else c
+        for c in _OUT_FIELDS
+    ])
 
 
-def _kernel_row(doc_id, spans_json, lexicon, config: PipelineConfig) -> dict:
-    """One doc through the kernel, span JSON in and out. The decode runs
-    inside the per-doc quarantine too: a NULL or malformed ``spans_json``
-    becomes an error row, never a failed task."""
-    from jochre3_ocr_spark.operators.kernel import error_row, process_document_safe
+def _kernel_stage(df: DataFrame, lexicon_bc, row_fn) -> DataFrame:
+    """The one mapInPandas stage that runs the kernel, shared by every
+    extraction entry point. ``df`` holds ``doc_id``, optionally
+    ``chunk_id``, and the payload as its LAST column; ``row_fn(doc_id,
+    payload, lexicon)`` returns one kernel output dict with its spans as
+    tuples. The stage owns the rest: the worker's lexicon (shipped by
+    ``lexicon_bc``), one per-doc quarantine around the whole of
+    ``row_fn`` — decode and page building included, so a NULL or
+    malformed input becomes an error row, never a failed task (SURVEY.md
+    §3.4) — the ``spans_json`` encode and the output batch. A
+    ``chunk_id`` column rides onto every row, error rows included."""
+    payload = df.columns[-1]
+    carry = "chunk_id" in df.columns
 
-    try:
-        spans = _spans_json_to_tuples(spans_json)
-    except Exception as exc:  # noqa: BLE001 — quarantine anything
-        out = error_row(doc_id, exc)
-    else:
-        out = process_document_safe(doc_id, spans, lexicon, config)
-    out["spans_json"] = _tuples_to_json(out.pop("spans"))
-    return out
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from jochre3_ocr_spark.operators.kernel import error_row
 
-
-def _make_extract_fn(lexicon_bc, config: PipelineConfig):
-    """Build the mapInPandas kernel; the lexicon arrives via broadcast."""
-
-    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         lexicon = _get_worker_lexicon(lexicon_bc)
         for batch in batches:
-            rows = [
-                _kernel_row(doc_id, spans_json, lexicon, config)
-                for doc_id, spans_json in zip(batch["doc_id"], batch["spans_json"])
-            ]
-            yield pd.DataFrame(rows, columns=_OUT_FIELDS)
+            rows = []
+            for doc_id, value in zip(batch["doc_id"], batch[payload]):
+                try:
+                    out = row_fn(doc_id, value, lexicon)
+                except Exception as exc:  # noqa: BLE001 — quarantine anything
+                    out = error_row(doc_id, exc)
+                out["spans_json"] = _tuples_to_json(out.pop("spans"))
+                rows.append(out)
+            out_batch = pd.DataFrame(rows, columns=_OUT_FIELDS)
+            if carry:
+                out_batch.insert(0, "chunk_id", batch["chunk_id"].to_numpy())
+            yield out_batch
 
-    return extract_batches
+    schema = "chunk_id int, " + _RAW_OUT_DDL if carry else _RAW_OUT_DDL
+    return df.mapInPandas(run, schema=schema)
+
+
+def _spans_row(config: PipelineConfig, doc_id, spans_json, lexicon) -> dict:
+    """The kernel over one doc's span JSON."""
+    from jochre3_ocr_spark.operators.kernel import process_document
+
+    return process_document(
+        doc_id, _spans_json_to_tuples(spans_json), lexicon, config
+    )
 
 
 def _prune_to_json(docs: DataFrame) -> DataFrame:
@@ -291,12 +298,9 @@ def extract(
     array<struct>; :func:`finalize` restores the struct column.
     """
     config = config or PipelineConfig()
-    spark = docs.sparkSession
-    lexicon_bc = spark.sparkContext.broadcast(list(lexicon_words))
+    lexicon_bc = docs.sparkSession.sparkContext.broadcast(list(lexicon_words))
     pruned = _spread_small_input(_prune_to_json(docs).drop("n_in_spans"))
-    return pruned.mapInPandas(
-        _make_extract_fn(lexicon_bc, config), schema=_RAW_OUT_DDL
-    )
+    return _kernel_stage(pruned, lexicon_bc, partial(_spans_row, config))
 
 
 # ------------------------------------------------------- giant-doc salting
@@ -331,22 +335,6 @@ def _split_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 for i, chunk in enumerate(chunks)
             )
         yield pd.DataFrame(rows, columns=["doc_id", "chunk_id", "spans_json"])
-
-
-def _make_chunk_extract_fn(lexicon_bc, config: PipelineConfig):
-    def extract_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lexicon = _get_worker_lexicon(lexicon_bc)
-        for batch in batches:
-            rows = []
-            for doc_id, chunk_id, spans_json in zip(
-                batch["doc_id"], batch["chunk_id"], batch["spans_json"]
-            ):
-                out = _kernel_row(doc_id, spans_json, lexicon, config)
-                out["chunk_id"] = int(chunk_id)
-                rows.append(out)
-            yield pd.DataFrame(rows, columns=["chunk_id", *_OUT_FIELDS])
-
-    return extract_chunks
 
 
 def _majority_language(pdf: pd.DataFrame):
@@ -480,9 +468,8 @@ def extract_with_salting(
         "n_in_spans"
     )
 
-    raw_normal = _spread_small_input(normal).mapInPandas(
-        _make_extract_fn(lexicon_bc, config), schema=_RAW_OUT_DDL
-    )
+    row = partial(_spans_row, config)
+    raw_normal = _kernel_stage(_spread_small_input(normal), lexicon_bc, row)
 
     chunks = giant.mapInPandas(_split_chunks, schema=_CHUNK_DDL)
     # spread chunks of the same giant doc across executors (the salt).
@@ -498,9 +485,7 @@ def extract_with_salting(
         spark.sparkContext.defaultParallelism,
     )
     chunks = chunks.repartition(n_salt, F.col("doc_id"), F.col("chunk_id"))
-    chunk_out = chunks.mapInPandas(
-        _make_chunk_extract_fn(lexicon_bc, config), schema=_CHUNK_OUT_DDL
-    )
+    chunk_out = _kernel_stage(chunks, lexicon_bc, row)
     raw_giant = chunk_out.groupBy("doc_id").applyInPandas(
         _reassemble, schema=_RAW_OUT_DDL
     )
@@ -541,28 +526,25 @@ def extract_text_df(
     (e.g. the driver's ``documents`` parquet): tokenize → spans → kernel.
     Narrow (zero-shuffle) like :func:`extract`."""
     config = config or PipelineConfig()
-    spark = docs.sparkSession
-    lexicon_bc = spark.sparkContext.broadcast(list(lexicon_words))
-    pruned = docs.select(
-        F.col(id_col).cast("string").alias("doc_id"), F.col(text_col).alias("text")
+    lexicon_bc = docs.sparkSession.sparkContext.broadcast(list(lexicon_words))
+
+    def row(doc_id, text, lexicon):
+        from jochre3_ocr_spark.operators.kernel import process_document
+
+        return process_document(doc_id, text_to_spans(text), lexicon, config)
+
+    return _kernel_stage(_text_frame(docs, id_col, text_col), lexicon_bc, row)
+
+
+def _text_frame(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, text) of a plain-text document table, spread over the
+    cluster's slots."""
+    return _spread_small_input(
+        docs.select(
+            F.col(id_col).cast("string").alias("doc_id"),
+            F.col(text_col).alias("text"),
+        )
     )
-    pruned = _spread_small_input(pruned)
-
-    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from jochre3_ocr_spark.operators.kernel import process_document_safe
-
-        lexicon = _get_worker_lexicon(lexicon_bc)
-        for batch in batches:
-            rows = []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                out = process_document_safe(
-                    doc_id, text_to_spans(text), lexicon, config
-                )
-                out["spans_json"] = _tuples_to_json(out.pop("spans"))
-                rows.append(out)
-            yield pd.DataFrame(rows, columns=_OUT_FIELDS)
-
-    return pruned.mapInPandas(extract_batches, schema=_RAW_OUT_DDL)
 
 
 #: logical nodes that neither shuffle nor run Python: a plan made of
@@ -655,50 +637,6 @@ def _spread_small_input(df: DataFrame) -> DataFrame:
 
 
 # ------------------------------------------------------- vision-path OCR
-def ocr_corpus(
-    spark: SparkSession,
-    n_docs: int,
-    lexicon_words: list[str],
-    config: PipelineConfig | None = None,
-    partitions: int | None = None,
-    pages_per_doc: int = 2,
-) -> DataFrame:
-    """Distributed end-to-end OCR over layout-oracle pages: each row is a
-    document; the kernel segments its pages, classifies glyphs, runs the
-    guesser and transformer (operators/ocr.py). Narrow — zero shuffle."""
-    config = config or PipelineConfig()
-    lexicon_bc = spark.sparkContext.broadcast(list(lexicon_words))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from jochre3_ocr_spark.operators.kernel import error_row
-        from jochre3_ocr_spark.operators.ocr import ocr_document
-        from jochre3_ocr_spark.sources.layout_oracle import (
-            build_page,
-            glyph_content_lookup,
-        )
-
-        lexicon = _get_worker_lexicon(lexicon_bc)
-        for batch in batches:
-            rows = []
-            for i in batch["id"]:
-                layouts, lookups = [], []
-                for p in range(pages_per_doc):
-                    layout, gt = build_page(int(i), p)
-                    layouts.append(layout)
-                    lookups.append(glyph_content_lookup(gt))
-                doc_id = f"doc{int(i):08d}"
-                try:
-                    out = ocr_document(doc_id, layouts, lookups, lexicon, config)
-                except Exception as exc:  # noqa: BLE001 — quarantine
-                    out = error_row(doc_id, exc)
-                out["spans_json"] = _tuples_to_json(out.pop("spans"))
-                rows.append(out)
-            yield pd.DataFrame(rows, columns=_OUT_FIELDS)
-
-    rng = spark.range(n_docs, numPartitions=partitions)
-    return rng.mapInPandas(run, schema=_RAW_OUT_DDL)
-
-
 def ocr_documents(
     docs: DataFrame,
     lexicon_words: list[str],
@@ -719,53 +657,35 @@ def ocr_documents(
     blocks of ``words_per_line * lines_per_block`` — an independently
     SQL-derivable oracle for the whole vision path."""
     config = config or PipelineConfig()
-    spark = docs.sparkSession
-    lexicon_bc = spark.sparkContext.broadcast(list(lexicon_words))
-    pruned = _spread_small_input(
-        docs.select(
-            F.col(id_col).cast("string").alias("doc_id"),
-            F.col(text_col).alias("text"),
-        )
-    )
+    lexicon_bc = docs.sparkSession.sparkContext.broadcast(list(lexicon_words))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, text, lexicon):
         import zlib
 
-        from jochre3_ocr_spark.operators.kernel import error_row
         from jochre3_ocr_spark.operators.ocr import ocr_document
         from jochre3_ocr_spark.sources.layout_oracle import (
             build_pages_from_words,
             glyph_content_lookup,
         )
 
-        lexicon = _get_worker_lexicon(lexicon_bc)
-        for batch in batches:
-            rows = []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                words = [w for w in (text or "").split(" ") if w]
-                seed_ix = (
-                    int(doc_id)
-                    if doc_id.isdigit()
-                    else zlib.crc32(doc_id.encode())
-                )
-                pages = build_pages_from_words(
-                    seed_ix,
-                    words,
-                    words_per_line=words_per_line,
-                    lines_per_block=lines_per_block,
-                    blocks_per_page=blocks_per_page,
-                )
-                layouts = [p[0] for p in pages]
-                lookups = [glyph_content_lookup(p[1]) for p in pages]
-                try:
-                    out = ocr_document(doc_id, layouts, lookups, lexicon, config)
-                except Exception as exc:  # noqa: BLE001 — quarantine
-                    out = error_row(doc_id, exc)
-                out["spans_json"] = _tuples_to_json(out.pop("spans"))
-                rows.append(out)
-            yield pd.DataFrame(rows, columns=_OUT_FIELDS)
+        words = [w for w in (text or "").split(" ") if w]
+        seed_ix = (
+            int(doc_id)
+            if doc_id.isdigit()
+            else zlib.crc32(doc_id.encode())
+        )
+        pages = build_pages_from_words(
+            seed_ix,
+            words,
+            words_per_line=words_per_line,
+            lines_per_block=lines_per_block,
+            blocks_per_page=blocks_per_page,
+        )
+        layouts = [p[0] for p in pages]
+        lookups = [glyph_content_lookup(p[1]) for p in pages]
+        return ocr_document(doc_id, layouts, lookups, lexicon, config)
 
-    return pruned.mapInPandas(run, schema=_RAW_OUT_DDL)
+    return _kernel_stage(_text_frame(docs, id_col, text_col), lexicon_bc, row)
 
 
 # ------------------------------------------- lineage / partition metrics
@@ -894,7 +814,6 @@ def run_job(
     output_path: str,
     lexicon_words: list[str],
     config: PipelineConfig | None = None,
-    salted: bool = True,
     metrics_path: str | None = None,
 ) -> int:
     """Resumable batch run: anti-join completed doc_ids, process the rest,
@@ -964,8 +883,7 @@ def run_job(
                 )
             else:
                 todo = docs.join(done, "doc_id", "left_anti")
-    fn = extract_with_salting if salted else extract
-    result = fn(todo, lexicon_words, config)
+    result = extract_with_salting(todo, lexicon_words, config)
     try:
         n_written = write_parquet_counted(result, output_path)
     finally:

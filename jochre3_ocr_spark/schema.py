@@ -40,51 +40,6 @@ DOCS_SCHEMA = T.StructType(
     ]
 )
 
-# Pipeline output: rewritten spans + assembled text formats + per-doc metrics.
-# `text` / `processed_text` mirror OutputFormat.Text / OutputFormat.ProcessedText
-# (core/output/OutputFormat.scala; core/model/Alto.scala:12-13).
-SPANS_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("spans", T.ArrayType(SPAN_STRUCT, False), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("processed_text", T.StringType(), True),
-        T.StructField("alternatives_json", T.StringType(), True),
-        T.StructField("n_spans", T.IntegerType(), True),
-        T.StructField("n_words", T.IntegerType(), True),
-        # per-page mean word confidence (Jochre.scala:365-386 → Page PC)
-        T.StructField("mean_confidence", T.DoubleType(), True),
-        # page-level language after votes (FullSegmentationGuesser:336-360)
-        T.StructField("language", T.StringType(), True),
-        T.StructField("status", T.StringType(), True),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
-# Checkpoint/metrics row written per task partition — enables anti-join resume
-# (our addition per BASELINE.json north_rule; reference has no resume).
-CHECKPOINT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("n_spans", T.IntegerType(), True),
-    ]
-)
-
-# Layout-oracle boxes (FIXTURES.md §4): a deterministic stand-in for the YOLO
-# DLA server (core/segmentation/YoloPredictor.scala:60-178).
-BOX_STRUCT = T.StructType(
-    [
-        T.StructField("label", T.StringType(), False),
-        T.StructField("left", T.IntegerType(), False),
-        T.StructField("top", T.IntegerType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("conf", T.DoubleType(), False),
-    ]
-)
-
 
 @dataclass(frozen=True)
 class PipelineConfig:

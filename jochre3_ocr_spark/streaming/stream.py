@@ -14,12 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
-from jochre3_ocr_spark.plans.pipeline import (
-    PipelineConfig,
-    _RAW_OUT_DDL,
-    _make_extract_fn,
-    _prune_to_json,
-)
+from jochre3_ocr_spark.plans.pipeline import PipelineConfig, extract
 from jochre3_ocr_spark.schema import DOCS_SCHEMA
 
 
@@ -38,9 +33,6 @@ def stream_extract(
     ``await_termination``). Re-running picks up only NEW files — the
     checkpoint's file log is the source of truth.
     """
-    config = config or PipelineConfig()
-    lexicon_bc = spark.sparkContext.broadcast(list(lexicon_words))
-
     # The docs dir may carry EITHER spans encoding: the array<struct>
     # DOCS_SCHEMA shape (docs_to_arrow / write_docs_parquet) or the
     # pre-encoded (doc_id, spans_json, n_in_spans) shape docs_df emits
@@ -74,7 +66,7 @@ def stream_extract(
     )
     if "spans" in docs.columns and "spans_json" in docs.columns:
         # mixed-shape dir: per FILE only one encoding is populated —
-        # coalesce row-wise so the fast path below sees valid JSON for
+        # coalesce row-wise so extract's JSON fast path sees valid JSON for
         # every row regardless of which producer wrote its file
         docs = docs.select(
             "doc_id",
@@ -85,8 +77,9 @@ def stream_extract(
                 F.col("n_in_spans").cast("int"), F.size("spans")
             ).alias("n_in_spans"),
         )
-    pruned = _prune_to_json(docs).drop("n_in_spans")
-    raw = pruned.mapInPandas(_make_extract_fn(lexicon_bc, config), schema=_RAW_OUT_DDL)
+    # the batch kernel stage as is: its small-input spread passes a
+    # streaming frame through untouched
+    raw = extract(docs, lexicon_words, config)
 
     query = (
         raw.writeStream.format("parquet")

@@ -22,6 +22,10 @@ Results go to stdout as JSON lines; BENCH.md records the round-5 run.
 
 Usage:  python scripts/soak_dedup.py [--n-total 1000000] [--budget 600]
         (run from the repo root; needs ~8 GB driver heap for phase 3/4)
+
+Every phase runs Spark as ``local[N]`` with N = ``os.cpu_count()`` and N
+shuffle partitions; the driver heap is ``$SPARK_DRIVER_MEMORY`` (default
+8g, as ``get_spark``).  Work files go to ``$SOAK_WORK``.
 """
 
 from __future__ import annotations
@@ -36,6 +40,9 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.environ.get("SOAK_WORK", "/root/tmpwork/dedup_soak")
+CPUS = os.cpu_count() or 4
+MASTER = f"local[{CPUS}]"
+DRIVER_MEMORY = os.environ.get("SPARK_DRIVER_MEMORY", "8g")
 
 
 def sample_rss_max(root_pid_box: dict, stop: threading.Event, out: dict):
@@ -94,7 +101,7 @@ def main() -> int:
 
     # ---- phase 1: generate
     t0 = time.time()
-    spark = get_spark("soak-gen", master="local[32]", shuffle_partitions=32)
+    spark = get_spark("soak-gen", master=MASTER, shuffle_partitions=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     from pyspark.sql import functions as F
 
@@ -156,8 +163,8 @@ def main() -> int:
     t0 = time.time()
     child = subprocess.Popen(
         [
-            "spark-submit", "--master", "local[32]",
-            "--driver-memory", "8g", "--py-files", engine_zip,
+            "spark-submit", "--master", MASTER,
+            "--driver-memory", DRIVER_MEMORY, "--py-files", engine_zip,
             "job.py", "--corpus-op", "dedup-verdicts",
             "--report-hot-buckets",
             "--input", corpus_path, "--output", out_path,
@@ -190,8 +197,7 @@ def main() -> int:
         return 1
 
     # verify the exact expected structure
-    spark = get_spark("soak-verify", master="local[32]",
-                      shuffle_partitions=32)
+    spark = get_spark("soak-verify", master=MASTER, shuffle_partitions=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     out = spark.read.parquet(out_path)
     big = {
@@ -231,8 +237,8 @@ def main() -> int:
         "from jochre3_ocr_spark.plans.pipeline import get_spark\n"
         "from jochre3_ocr_spark.operators.dedup import (\n"
         "    connected_components, minhash_lsh_candidates)\n"
-        "spark = get_spark('soak-uncapped', master='local[32]',"
-        " shuffle_partitions=32)\n"
+        "spark = get_spark('soak-uncapped', master=%r,"
+        " shuffle_partitions=%d)\n"
         "spark.sparkContext.setLogLevel('ERROR')\n"
         "docs = spark.read.parquet(%r).select("
         "F.col('doc_id').cast('string').alias('doc_id'), 'text')\n"
@@ -240,7 +246,8 @@ def main() -> int:
         "    minhash_lsh_candidates(docs, max_bucket=None))\n"
         "out = docs.join(labels, 'doc_id', 'left').select(\n"
         "    'doc_id', F.coalesce('cluster_id', 'doc_id'))\n"
-        "print('UNCAPPED_DONE', out.count())\n" % (REPO, corpus_path)
+        "print('UNCAPPED_DONE', out.count())\n"
+        % (REPO, MASTER, CPUS, corpus_path)
     )
     stop = threading.Event()
     rss_u: dict = {}

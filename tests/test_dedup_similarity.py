@@ -173,7 +173,7 @@ def test_kmeans_ivf_on_separated_clusters(spark):
         assign_cells,
         cosine_topk,
         ivf_kmeans_topk,
-        kmeans_centroids,
+        kmeans_centroids_sampled,
     )
 
     # 4 orthogonal cluster directions in 8-d, 12 points each, tiny jitter
@@ -187,7 +187,7 @@ def test_kmeans_ivf_on_separated_clusters(spark):
             rows.append((c * 12 + j, [x / n for x in v]))
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
 
-    cents = kmeans_centroids(df, k=4, iters=4)
+    cents = kmeans_centroids_sampled(df, k=4, iters=4)
     assign = assign_cells(df, cents)
     # each cell holds exactly one cluster
     got = assign.groupBy("cell").count().collect()

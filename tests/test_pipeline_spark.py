@@ -172,6 +172,39 @@ def test_hostile_span_json_yields_one_row_per_doc(spark, oracle, tmp_path, with_
         assert got == expected, path
 
 
+def test_ocr_documents_null_id_and_text_yield_one_row_per_doc(spark):
+    """The vision path over a NULL ``doc_id`` and a NULL ``text``: one
+    row per input doc. Page building runs inside the per-doc quarantine,
+    so the NULL id is an error row (not a failed job), and every other
+    doc's row is the one it gets without the NULL-id doc beside it."""
+    words = lexicon_words()
+    schema = "doc_id string, text string"
+    good = [
+        ("7", " ".join(words[:9])),
+        ("doc-a", " ".join(words[9:23])),
+        ("null-text", None),
+    ]
+    ref = {
+        r["doc_id"]: r.asDict()
+        for r in pipeline.ocr_documents(
+            spark.createDataFrame(good, schema), words
+        ).collect()
+    }
+    assert set(ref) == {d for d, _ in good}
+    assert all(r["status"] == "ok" for r in ref.values()), ref
+
+    rows = pipeline.ocr_documents(
+        spark.createDataFrame(good + [(None, " ".join(words[:5]))], schema),
+        words,
+    ).collect()
+    assert len(rows) == len(good) + 1
+    null_id = [r for r in rows if r["doc_id"] is None]
+    assert len(null_id) == 1
+    assert null_id[0]["status"] == "error"
+    assert null_id[0]["error"].startswith("AttributeError"), null_id[0]["error"]
+    assert {r["doc_id"]: r.asDict() for r in rows if r["doc_id"] is not None} == ref
+
+
 #: word texts and media refs that stress the span JSON: quotes,
 #: backslashes, control characters and the reassembly splice's own
 #: pattern (the kernel may rewrite word texts; media refs pass through)
