@@ -381,7 +381,7 @@ def _capped_bucket_pairs(
     )
     staged = ranked.withColumn(
         "heads",
-        F.array_sort(
+        F.sort_array(
             F.collect_list(
                 F.when(F.col("rk") <= max_bucket, F.col("_e"))
             ).over(wf)

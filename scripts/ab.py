@@ -3,7 +3,7 @@
 
     python scripts/ab.py --base REV --workload extract_job --seeds 501-510
     python scripts/ab.py --base REV --head REV2 --workload dedup_adversarial \\
-        --seeds 601,602,603 --out /path/to/results
+        --seeds 601,602,603,604 --out /path/to/results
 
 BASE is a committed revision, exported with ``git archive`` into
 ``OUT/base-src`` (a plain copy: nothing is registered in the repository,
@@ -14,9 +14,14 @@ names a revision, which is exported the same way.
 For every seed, one ``perfbench/run.py --workload W --seed S`` run per
 side, each a fresh driver process; the side that goes first alternates
 from seed to seed so that a drift of the machine over the session falls
-on both sides alike.  Result records go to ``OUT/base`` and ``OUT/head``,
-then ``perfbench/run.py --compare OUT/base OUT/head`` prints per-metric
-quartiles, pairs won and the verdicts under ``BENCHMARK.json``'s bounds.
+on both sides alike.  ``--seeds`` must name an even number of seeds, so
+that each side runs second equally often: within a pair the side that
+runs second tends to read faster (it did on 5 of 6 ``extract_job``
+pairs, whichever revision it was), and an odd count hands that edge to
+one side in the medians and the pairs won.  Result records go to
+``OUT/base`` and ``OUT/head``, then ``perfbench/run.py --compare
+OUT/base OUT/head`` prints per-metric quartiles, pairs won and the
+verdicts under ``BENCHMARK.json``'s bounds.
 Run it on an otherwise idle machine: the load average is printed before
 every run.
 """
@@ -83,6 +88,10 @@ def main(argv=None) -> int:
     p.add_argument("--out", default=os.path.join(
         REPO, "ab_results", time.strftime("%Y%m%d-%H%M%S")))
     args = p.parse_args(argv)
+    seeds = _seeds(args.seeds)
+    if len(seeds) % 2:
+        p.error(f"--seeds names {len(seeds)} seeds; name an even number "
+                "so each side runs second equally often")
 
     out = os.path.abspath(args.out)
     sides = {"base": os.path.join(out, "base-src")}
@@ -96,7 +105,7 @@ def main(argv=None) -> int:
     print(f"base {commits['base']}  head {commits['head']}  -> {out}", flush=True)
 
     try:
-        for i, seed in enumerate(_seeds(args.seeds)):
+        for i, seed in enumerate(seeds):
             order = ("base", "head") if i % 2 == 0 else ("head", "base")
             for side in order:
                 load = os.getloadavg()[0]

@@ -320,6 +320,51 @@ def test_run_job_returns_completed_docs(spark, docs_df, tmp_path):
     assert spark.read.parquet(outp).count() == N_DOCS
 
 
+def test_run_job_writes_zstd_and_resumes_over_snappy(spark, docs_df, tmp_path):
+    """get_spark commits every parquet table as zstd. An output started
+    under snappy resumes into the same table: the new data files and the
+    metrics table are ZSTD, the old files stay SNAPPY, and the read-back
+    has one row per input doc."""
+    import pyarrow.parquet as pq
+
+    def codecs(path):
+        md = pq.ParquetFile(path).metadata
+        assert md.num_row_groups > 0, path
+        return {
+            md.row_group(g).column(c).compression
+            for g in range(md.num_row_groups)
+            for c in range(md.num_columns)
+        }
+
+    half_inp = str(tmp_path / "half.parquet")
+    inp = str(tmp_path / "docs.parquet")
+    outp = str(tmp_path / "out.parquet")
+    mp = str(tmp_path / "metrics.parquet")
+    docs_df.write.parquet(inp)
+    spark.read.parquet(inp).orderBy("doc_id").limit(N_DOCS // 2).write.parquet(half_inp)
+    words = lexicon_words()
+    key = "spark.sql.parquet.compression.codec"
+    session_codec = spark.conf.get(key)
+    spark.conf.set(key, "snappy")
+    try:
+        pipeline.run_job(spark, half_inp, outp, words)
+    finally:
+        # the session is shared; unset would fall back to snappy
+        spark.conf.set(key, session_codec)
+    old = set(glob.glob(os.path.join(outp, "part-*.parquet")))
+    assert old
+    pipeline.run_job(spark, inp, outp, words, metrics_path=mp)
+    new = set(glob.glob(os.path.join(outp, "part-*.parquet"))) - old
+    assert new
+    assert all(codecs(f) == {"SNAPPY"} for f in old)
+    assert all(codecs(f) == {"ZSTD"} for f in new)
+    metrics = glob.glob(os.path.join(mp, "part-*.parquet"))
+    assert metrics and all(codecs(f) == {"ZSTD"} for f in metrics)
+    out = spark.read.parquet(outp)
+    assert out.count() == N_DOCS
+    assert out.select("doc_id").distinct().count() == N_DOCS
+
+
 def test_run_job_launches_no_job_after_its_write(spark, docs_df, tmp_path, monkeypatch):
     """The completed-doc count comes from the write itself: no Spark job
     runs after the output write returns (the count used to re-read and
