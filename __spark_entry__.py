@@ -1,20 +1,22 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract (PySpark target).
 
 ``entry(spark)`` runs the flagship extraction over sf0.001;
 ``queries()`` exposes every implemented operator from SURVEY.md §2 plus
 the training-data-pipeline operators (dedup / similarity / text
-analysis); ``oracle_sql()`` gives the DuckDB-dialect equivalent for
-every SQL-expressible query (extraction queries over the synthesized
-Yiddish corpus are rows-only checks).
+analysis), each entry running the package operator itself;
+``oracle_sql()`` gives an independent DuckDB-dialect equivalent for
+every query. Only the TPC-H/events queries, ``embedding_centroids`` and
+``eval_text_metrics`` (no package counterpart) are Spark SQL strings.
 
-Column aliases are kept identical between the Spark SQL and the DuckDB
-SQL; double aggregates are rounded on both sides so value-hashes match
+Column names are kept identical between each query and its DuckDB twin;
+double aggregates are rounded on both sides so value-hashes match
 despite float summation-order differences.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -49,15 +51,13 @@ def _sql(statement: str):
         _register(spark, sf_dir)
         stmt = statement
         if "/*+ REBALANCE */" in stmt:
-            # The REBALANCE hint spreads the compact documents scan
-            # before the row-cost-bound shingle/token fan-out — but
-            # AQE's BYTE-based coalescing folds the ~2 MB table back to
-            # ONE partition, serializing the whole md5/aggregate stage
-            # on a single core (measured: simhash 1.9 s → 1.2 s after
-            # the fix at sf0.1/local[32]). An explicit user count is
-            # exempt from AQE coalescing; derive it from the session
-            # (cores locally, shuffle.partitions on a sized cluster) —
-            # never a constant.
+            # eval_text_metrics marks its row-cost-bound levenshtein
+            # projection with REBALANCE, but AQE's BYTE-based coalescing
+            # folds the small pairs frame back to ONE partition. An
+            # explicit user count is exempt from AQE coalescing (sf0.1,
+            # 4 CPUs, min of 3: 2.4-2.6 s against 4.6-5.5 s without the
+            # rewrite); derive it from the session (cores locally,
+            # shuffle.partitions on a sized cluster) — never a constant.
             n = max(
                 spark.sparkContext.defaultParallelism,
                 int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
@@ -66,6 +66,16 @@ def _sql(statement: str):
                 "/*+ REBALANCE */", f"/*+ REPARTITION({n}) */"
             )
         return spark.sql(stmt)
+
+    return run
+
+
+def _on(table: str, op: Callable[[DataFrame], DataFrame]):
+    """A ``queries()`` entry that runs package operator ``op`` over the
+    cached ``table`` view."""
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _register(spark, sf_dir)
+        return op(spark.table(table))
 
     return run
 
@@ -406,50 +416,15 @@ _Q_EVENTS_DUCK = _Q_EVENTS_SPARK.replace(
 # --------------------------------------------------------------------------
 # Training-data pipeline operators over documents / embeddings
 # --------------------------------------------------------------------------
-_Q_DEDUP_EXACT_SPARK = """
+_Q_DEDUP_EXACT_DUCK = """
 SELECT prefix_hash,
        count(*)                      AS n_docs,
-       min(CAST(doc_id AS STRING))   AS keeper
+       min(CAST(doc_id AS VARCHAR))  AS keeper
 FROM (SELECT doc_id, md5(substr(text, 1, 40)) AS prefix_hash FROM documents) t
 GROUP BY prefix_hash
 HAVING count(*) >= 2
 """
-_Q_DEDUP_EXACT_DUCK = _Q_DEDUP_EXACT_SPARK.replace("AS STRING", "AS VARCHAR")
 
-_Q_NGRAM_JACCARD_SPARK = """
-WITH toks AS (
-  SELECT /*+ REBALANCE */ CAST(doc_id AS STRING) AS doc_id,
-         filter(split(text, ' '), x -> x <> '') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, shingle
-  FROM toks
-  LATERAL VIEW explode(
-    array_distinct(
-      transform(sequence(0, size(t) - 3),
-                i -> concat_ws(' ', t[i], t[i+1], t[i+2]))
-    )
-  ) x AS shingle
-  WHERE size(t) >= 3
-),
-counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
--- doc-frequency cap: stop-phrase shingles are quadratic hot keys at scale
-rare AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 50),
-pairs AS (
-  SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS common
-  FROM sh a
-  JOIN rare r ON a.shingle = r.shingle
-  JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT p.doc1, p.doc2, p.common,
-       round(p.common / (ca.n + cb.n - p.common), 4) AS jaccard
-FROM pairs p
-JOIN counts ca ON p.doc1 = ca.doc_id
-JOIN counts cb ON p.doc2 = cb.doc_id
-WHERE p.common >= 3
-"""
 _Q_NGRAM_JACCARD_DUCK = """
 WITH toks AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
@@ -483,41 +458,6 @@ JOIN counts cb ON p.doc2 = cb.doc_id
 WHERE p.common >= 3
 """
 
-_Q_MINHASH_SPARK = """
-WITH toks AS (
-  SELECT /*+ REBALANCE */ CAST(doc_id AS STRING) AS doc_id,
-         filter(split(text, ' '), x -> x <> '') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, shingle
-  FROM toks
-  LATERAL VIEW explode(
-    array_distinct(
-      transform(sequence(0, size(t) - 3),
-                i -> concat_ws(' ', t[i], t[i+1], t[i+2]))
-    )
-  ) x AS shingle
-  WHERE size(t) >= 3
-),
--- wide single-aggregation form: one groupBy(doc_id) with 8 min buffers
--- instead of groupBy(doc_id, s) + groupBy(doc_id) — the map-side partial
--- agg collapses to one row per doc before the shuffle and an Exchange
--- disappears; per-seed md5 inputs and the seed-order concat are
--- bit-identical to the exploded construction the oracle replays
-mh AS (
-  SELECT doc_id,
-         min(md5('0:' || shingle)) AS m0, min(md5('1:' || shingle)) AS m1,
-         min(md5('2:' || shingle)) AS m2, min(md5('3:' || shingle)) AS m3,
-         min(md5('4:' || shingle)) AS m4, min(md5('5:' || shingle)) AS m5,
-         min(md5('6:' || shingle)) AS m6, min(md5('7:' || shingle)) AS m7
-  FROM sh
-  GROUP BY doc_id
-)
-SELECT doc_id,
-       md5(concat_ws(',', m0, m1, m2, m3, m4, m5, m6, m7)) AS signature
-FROM mh
-"""
 _Q_MINHASH_DUCK = """
 WITH toks AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
@@ -543,119 +483,11 @@ FROM mh
 GROUP BY doc_id
 """
 
-# SimHash near-dup pairs (operators/dedup.simhash_neardup_pairs): the
-# production shape — 64-bit signature, 4×16-bit bands (pigeonhole:
-# hamming ≤ 1 ⇒ ≥3 identical bands; 65 536 buckets/band instead of the
-# old 4-bit banding's 16), bucket-join then bit_count(xor) verify, with
-# the same hot-bucket guard as _Q_LSH_* (cap 3: all pairs among a
-# bucket's first 3 docs; tail docs link to ALL 3 heads so the Hamming
-# verify gets 3 chances per tail doc, not 1). Band
-# values are aggregated straight from the per-bit votes — never by
-# shifting the signed 64-bit signature.
-
-def _simhash_vote_cols_sql(bits: int = 64) -> str:
-    """The per-bit vote aggregates, generated once and shared by BOTH
-    Spark simhash twins (the bit rule lives in exactly one place — a
-    single-digit typo in a hand-maintained 64-arm copy would silently
-    skew one bit of one twin; see operators/dedup._bit_condition for
-    the library form of the same rule)."""
-    lines = []
-    for b in range(bits):
-        digs = ("'8','9','a','b','c','d','e','f'" if b < 32
-                else "'4','5','6','7','c','d','e','f'")
-        lines.append(
-            f"    sum(CASE WHEN substr(md5(token), {b % 32 + 1}, 1) "
-            f"IN ({digs}) THEN 1 ELSE -1 END) AS v{b}"
-        )
-    return ",\n".join(lines)
-
-
-def _simhash_sig_sql(bits: int = 64) -> str:
-    """Signed-BIGINT signature from the vote columns (bit 63 assembled
-    as -2^63, two's complement)."""
-    terms = []
-    for b in range(bits):
-        const = ("(CAST(-9223372036854775807 AS BIGINT) - 1)"
-                 if b == 63 else str(1 << b))
-        terms.append(
-            f"CASE WHEN v{b} >= 0 THEN {const} ELSE CAST(0 AS BIGINT) END"
-        )
-    return "CAST(" + "\n     + ".join(terms) + " AS BIGINT)"
-
-
-def _simhash_band_sql(k: int, band_bits: int = 16) -> str:
-    terms = [
-        f"CASE WHEN v{k * band_bits + j} >= 0 THEN {1 << j} ELSE 0 END"
-        for j in range(band_bits)
-    ]
-    return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-
-_SIMHASH_VOTES_CTE = """WITH toks AS (
-  SELECT /*+ REBALANCE */ CAST(doc_id AS STRING) AS doc_id, token
-  FROM documents
-  LATERAL VIEW explode(array_distinct(filter(split(text, ' '), x -> x <> '')))
-    x AS token
-),
-votes AS (
-  SELECT doc_id,
-%s
-  FROM toks GROUP BY doc_id
-)""" % _simhash_vote_cols_sql()
-
-_Q_SIMHASH_ND_SPARK = _SIMHASH_VOTES_CTE + """,
-sigs AS (
-  SELECT doc_id,
-         %s AS simhash,
-         %s AS bv0,
-         %s AS bv1,
-         %s AS bv2,
-         %s AS bv3
-  FROM votes
-),
-bands AS (
-  SELECT doc_id, simhash,
-         stack(4, 0, bv0, 1, bv1, 2, bv2, 3, bv3) AS (band, band_val)
-  FROM sigs
-),
-ranked AS (
-  SELECT doc_id, band, band_val, simhash,
-         row_number() OVER (PARTITION BY band, band_val
-                            ORDER BY doc_id) AS rk
-  FROM bands
-),
--- single-pass capped pairs (the dedup._capped_bucket_pairs round-6
--- rewrite, SQL form): the cap bounds the head set, so the per-bucket
--- head list is a <=3 array attached to every row by a full-frame
--- window over the SAME partitioning (no new Exchange), and the pairs
--- fan out as an array expression — the old heads self-join +
--- heads x tails join evaluated the whole votes subtree four times.
--- Heads sort ascending by doc_id (unique per bucket), reproducing the
--- a.doc_id < b.doc_id join's orientation exactly; tail rows pair with
--- every head (the Hamming-verified tail_link_all_heads form).
-staged AS (
-  SELECT doc_id, simhash, rk,
-         sort_array(collect_list(CASE WHEN rk <= 3 THEN
-             named_struct('d', doc_id, 's', simhash) END)
-           OVER (PARTITION BY band, band_val)) AS heads
-  FROM ranked
-),
-cand AS (
-  SELECT DISTINCT p.doc1 AS doc1, p.doc2 AS doc2, p.s1 AS s1, p.s2 AS s2
-  FROM staged
-  LATERAL VIEW explode(
-    CASE WHEN rk <= 3 THEN
-      transform(slice(heads, rk + 1, 3), h -> named_struct(
-        'doc1', doc_id, 'doc2', h.d, 's1', simhash, 's2', h.s))
-    ELSE
-      transform(heads, h -> named_struct(
-        'doc1', h.d, 'doc2', doc_id, 's1', h.s, 's2', simhash))
-    END) x AS p
-)
-SELECT doc1, doc2, CAST(bit_count(s1 ^ s2) AS INT) AS hamming
-FROM cand WHERE bit_count(s1 ^ s2) <= 1
-""" % (_simhash_sig_sql(), _simhash_band_sql(0), _simhash_band_sql(1),
-       _simhash_band_sql(2), _simhash_band_sql(3))
+# dedup.simhash_neardup_pairs(max_hamming=1, bits=64, n_bands=4,
+# max_bucket=3): 4×16-bit bands aggregated from the per-bit votes (never
+# by shifting the signed signature), capped buckets in their join form —
+# all pairs among a bucket's first 3 docs, and every tail doc paired with
+# each of those 3 heads — then the bit_count(xor) verify.
 _Q_SIMHASH_ND_DUCK = """
 WITH toks AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
@@ -713,81 +545,10 @@ SELECT doc1, doc2, CAST(bit_count(xor(s1, s2)) AS INT) AS hamming
 FROM cand WHERE bit_count(xor(s1, s2)) <= 1
 """
 
-# MinHash LSH banding (operators/dedup.minhash_lsh_candidates): 8 min-hashes
-# in 4 bands of 2; docs sharing any band hash become candidate pairs —
-# the bucketed (non-all-pairs) 100 TB dedup shape, WITH the hot-bucket
-# guard (max_bucket=3 here so the cap is exercised at driver SF): buckets
-# larger than the cap emit all pairs among their first 3 docs plus one
-# star-link pair per tail doc to the bucket minimum, bounding a bucket of
-# b docs at 3 + (b-3) pairs instead of b²/2 — a giant duplicate group can
-# no longer push b² rows through one band_hash shuffle key
-# (dedup._capped_bucket_pairs; components downstream are unchanged).
-_Q_LSH_SPARK = """
-WITH toks AS (
-  SELECT /*+ REBALANCE */ CAST(doc_id AS STRING) AS doc_id,
-         filter(split(text, ' '), x -> x <> '') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, shingle
-  FROM toks
-  LATERAL VIEW explode(
-    array_distinct(
-      transform(sequence(0, size(t) - 3),
-                i -> concat_ws(' ', t[i], t[i+1], t[i+2]))
-    )
-  ) x AS shingle
-  WHERE size(t) >= 3
-),
--- wide single-aggregation banding (same rewrite as _Q_MINHASH_SPARK and
--- dedup._minhash_bands): one groupBy(doc_id) computes all 8 per-seed
--- mins, then the 4 band rows fan out through a zero-shuffle posexplode —
--- two Exchanges fewer, band hashes bit-identical (seed-order concat)
-mh AS (
-  SELECT doc_id,
-         min(md5('0:' || shingle)) AS m0, min(md5('1:' || shingle)) AS m1,
-         min(md5('2:' || shingle)) AS m2, min(md5('3:' || shingle)) AS m3,
-         min(md5('4:' || shingle)) AS m4, min(md5('5:' || shingle)) AS m5,
-         min(md5('6:' || shingle)) AS m6, min(md5('7:' || shingle)) AS m7
-  FROM sh
-  GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, band, band_hash
-  FROM mh
-  LATERAL VIEW posexplode(array(
-    md5(concat_ws(',', m0, m1)), md5(concat_ws(',', m2, m3)),
-    md5(concat_ws(',', m4, m5)), md5(concat_ws(',', m6, m7))
-  )) x AS band, band_hash
-),
-ranked AS (
-  SELECT doc_id, band, band_hash,
-         row_number() OVER (PARTITION BY band, band_hash ORDER BY doc_id)
-           AS rk
-  FROM bands
-),
--- single-pass capped pairs (the dedup._capped_bucket_pairs round-6
--- rewrite, SQL form; see _Q_SIMHASH_ND_SPARK): head list bounded by
--- the cap rides a full-frame window over the same partitioning, pairs
--- fan out as an array expression — no self-joins, the bands subtree
--- is evaluated once instead of four times. Tail rows star-link to
--- heads[0] (= rk 1, the bucket minimum), as the old rk = 1 join did.
-staged AS (
-  SELECT doc_id, rk,
-         sort_array(collect_list(CASE WHEN rk <= 3 THEN doc_id END)
-           OVER (PARTITION BY band, band_hash)) AS heads
-  FROM ranked
-)
-SELECT DISTINCT p.doc1 AS doc1, p.doc2 AS doc2
-FROM staged
-LATERAL VIEW explode(
-  CASE WHEN rk <= 3 THEN
-    transform(slice(heads, rk + 1, 3),
-              h -> named_struct('doc1', doc_id, 'doc2', h))
-  ELSE
-    array(named_struct('doc1', heads[0], 'doc2', doc_id))
-  END) x AS p
-"""
+# dedup.minhash_lsh_candidates(max_bucket=3): 8 min-hashes in 4 bands of
+# 2, docs sharing any band hash become candidate pairs; buckets over the
+# cap emit all pairs among their first 3 docs plus one star-link pair per
+# tail doc to the bucket minimum (the cap is exercised at driver SF).
 _Q_LSH_DUCK = """
 WITH toks AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
@@ -834,21 +595,11 @@ SELECT DISTINCT doc1, doc2 FROM (
 )
 """
 
-# 64-bit production fingerprint (Manku et al., WWW'07): bit b's per-token
-# vote comes from md5 hex digit b%32 — its high bit (>=8) for b<32, its
-# second bit (&4) for b>=32. Bit 63 is assembled as -2^63 (two's
-# complement) so the signature fits a signed BIGINT in both engines.
-# The SPARK twin uses the wide-aggregate form (ONE row and ONE md5 per
-# token, 64 conditional-sum aggregates — the token×bits explode costs
-# 64 md5s per token and 64× the shuffle rows; measured 7.4 s vs ~2 s at
-# sf0.1, BENCH.md round 4). The DuckDB twin keeps the per-bit CTE —
-# same values, and the two dissimilar formulations agreeing is itself
-# oracle strength.
-_Q_SIMHASH_SPARK = _SIMHASH_VOTES_CTE + """
-SELECT doc_id,
-       %s AS simhash
-FROM votes
-""" % _simhash_sig_sql()
+# dedup.simhash: 64-bit fingerprint (Manku et al., WWW'07) replayed as a
+# per-bit CTE — bit b's per-token vote is md5 hex digit b%32, its high
+# bit (>=8) for b<32 and its second bit (&4) for b>=32; bit 63 is
+# assembled as -2^63 (two's complement). The operator aggregates 64 wide
+# votes per doc instead, so the two formulations check each other.
 _Q_SIMHASH_DUCK = """
 WITH toks AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
@@ -876,32 +627,6 @@ FROM bits
 GROUP BY doc_id
 """
 
-_Q_ANN_SPARK = """
-WITH q AS (
-  SELECT vec_id AS qid, pos, CAST(val AS DOUBLE) AS v
-  FROM embeddings LATERAL VIEW posexplode(embedding) x AS pos, val
-  WHERE vec_id < 5
-),
-c AS (
-  SELECT vec_id AS cid, pos, CAST(val AS DOUBLE) AS v
-  FROM embeddings LATERAL VIEW posexplode(embedding) x AS pos, val
-),
-dots AS (
-  SELECT q.qid, c.cid,
-         sum(q.v * c.v) AS dot,
-         sqrt(sum(q.v * q.v)) AS nq,
-         sqrt(sum(c.v * c.v)) AS nc
-  FROM q JOIN c ON q.pos = c.pos
-  GROUP BY q.qid, c.cid
-)
-SELECT qid, cid, rank FROM (
-  SELECT qid, cid,
-         row_number() OVER (
-           PARTITION BY qid ORDER BY dot / (nq * nc) DESC, cid
-         ) AS rank
-  FROM dots WHERE qid <> cid
-) t WHERE rank <= 5
-"""
 _Q_ANN_DUCK = """
 WITH q AS (
   SELECT vec_id AS qid,
@@ -938,12 +663,6 @@ FROM embeddings LATERAL VIEW posexplode(embedding) x AS pos, val
 GROUP BY label, pos
 """
 _Q_CENTROIDS_DUCK = """
-SELECT label,
-       CAST(generate_subscripts(embedding, 1) AS INTEGER) AS dim,
-       CAST(unnest(embedding) AS DOUBLE) AS v
-FROM embeddings
-"""
-_Q_CENTROIDS_DUCK = """
 WITH e AS (
   SELECT label,
          generate_subscripts(embedding, 1) AS dim,
@@ -954,20 +673,6 @@ SELECT label, CAST(dim AS INTEGER) AS dim, round(avg(v), 4) + 0.0 AS centroid
 FROM e GROUP BY label, dim
 """
 
-_Q_QUALITY_SPARK = """
-WITH toks AS (
-  SELECT CAST(doc_id AS STRING) AS doc_id, lang, text,
-         filter(split(text, ' '), x -> x <> '') AS t
-  FROM documents
-)
-SELECT doc_id, lang,
-       size(t) AS n_tokens,
-       round(length(replace(text, ' ', '')) / size(t), 4) AS avg_token_len,
-       round(size(filter(t, x -> x IN ('the', 'a'))) / size(t), 4)
-         AS stopword_ratio,
-       round(size(array_distinct(t)) / size(t), 4) AS distinct_ratio
-FROM toks
-"""
 _Q_QUALITY_DUCK = """
 WITH toks AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, lang, text,
@@ -983,13 +688,6 @@ SELECT doc_id, lang,
 FROM toks
 """
 
-_Q_FINGERPRINT_SPARK = """
-SELECT CAST(doc_id AS STRING) AS doc_id,
-       md5(text) AS exact_fp,
-       md5(array_join(array_sort(array_distinct(
-           filter(split(text, ' '), x -> x <> ''))), ' ')) AS bag_fp
-FROM documents
-"""
 _Q_FINGERPRINT_DUCK = """
 SELECT CAST(doc_id AS VARCHAR) AS doc_id,
        md5(text) AS exact_fp,
@@ -1214,27 +912,6 @@ FROM pairs p JOIN cos c ON p.doc_id = c.doc_id
 
 
 
-_Q_LANGID_SPARK = """
-WITH toks AS (
-  SELECT CAST(doc_id AS STRING) AS doc_id, lang,
-         filter(split(text, ' '), x -> x <> '') AS t
-  FROM documents
-),
-counts AS (
-  SELECT doc_id, lang,
-         size(filter(t, x -> x IN ('the', 'a', 'of'))) AS c_en,
-         size(filter(t, x -> x IN ('der', 'die', 'und'))) AS c_de,
-         size(filter(t, x -> x IN ('le', 'la', 'et'))) AS c_fr,
-         size(filter(t, x -> x IN ('el', 'los', 'y'))) AS c_es
-  FROM toks
-)
-SELECT doc_id, lang AS true_lang,
-       CASE greatest(c_en, c_de, c_fr, c_es)
-            WHEN c_en THEN 'en' WHEN c_de THEN 'de'
-            WHEN c_fr THEN 'fr' ELSE 'es' END AS predicted_lang,
-       c_en, c_de, c_fr, c_es
-FROM counts
-"""
 _Q_LANGID_DUCK = """
 WITH toks AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, lang,
@@ -1336,47 +1013,9 @@ FROM d
 
 
 
-# IVF-style ANN: coarse quantize every vector to its nearest of the first
-# 8 embeddings (the "centroids"), probe only the query's cell — the scale
-# path next to brute-force ann_cosine_topk. Portable SQL on both engines.
-_Q_IVF_SPARK = """
-WITH e AS (
-  SELECT vec_id, pos, CAST(val AS DOUBLE) AS v
-  FROM embeddings LATERAL VIEW posexplode(embedding) x AS pos, val
-),
-cent AS (SELECT vec_id AS cid, pos, v FROM e WHERE vec_id < 8),
-dots AS (
-  SELECT e.vec_id, c.cid,
-         sum(e.v * c.v) / (sqrt(sum(e.v * e.v)) * sqrt(sum(c.v * c.v))) AS cos
-  FROM e JOIN cent c ON e.pos = c.pos
-  GROUP BY e.vec_id, c.cid
-),
-assign AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rn
-    FROM dots
-  ) t WHERE rn = 1
-),
-q AS (SELECT vec_id AS qid, pos, CAST(val AS DOUBLE) AS v
-      FROM embeddings LATERAL VIEW posexplode(embedding) x AS pos, val
-      WHERE vec_id < 5),
-c AS (SELECT vec_id AS cid2, pos, CAST(val AS DOUBLE) AS v
-      FROM embeddings LATERAL VIEW posexplode(embedding) x AS pos, val),
-pair AS (
-  SELECT q.qid, c.cid2 AS cid,
-         sum(q.v * c.v) / (sqrt(sum(q.v * q.v)) * sqrt(sum(c.v * c.v))) AS cos
-  FROM q JOIN c ON q.pos = c.pos
-  JOIN assign aq ON aq.vec_id = q.qid
-  JOIN assign ac ON ac.vec_id = c.cid2 AND ac.cell = aq.cell
-  GROUP BY q.qid, c.cid2
-)
-SELECT qid, cid, rank FROM (
-  SELECT qid, cid,
-         row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rank
-  FROM pair WHERE qid <> cid
-) t WHERE rank <= 3
-"""
+# similarity.ivf_topk: coarse quantize every vector to its nearest of the
+# first 8 embeddings (the "centroids"), probe only the query's cell — the
+# scale path next to brute-force ann_cosine_topk.
 _Q_IVF_DUCK = """
 WITH e AS (
   SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
@@ -1475,21 +1114,6 @@ FROM assign s LEFT JOIN comp ON s.vec_id = comp.node
 
 
 # embedding-cosine near-duplicate pairs over a label-blocked candidate set
-_Q_EMB_NEARDUP_SPARK = """
-WITH e AS (
-  SELECT vec_id, label, pos, CAST(val AS DOUBLE) AS v
-  FROM embeddings LATERAL VIEW posexplode(embedding) x AS pos, val
-),
-pair AS (
-  SELECT a.vec_id AS v1, b.vec_id AS v2,
-         sum(a.v * b.v) / (sqrt(sum(a.v * a.v)) * sqrt(sum(b.v * b.v))) AS cos
-  FROM e a JOIN e b
-    ON a.pos = b.pos AND a.label = b.label AND a.vec_id < b.vec_id
-  GROUP BY a.vec_id, b.vec_id
-)
-SELECT v1, v2, round(cos, 4) AS cosine
-FROM pair WHERE cos > 0.3
-"""
 _Q_EMB_NEARDUP_DUCK = """
 WITH e AS (
   SELECT vec_id, label, generate_subscripts(embedding, 1) AS pos,
@@ -4654,6 +4278,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    from jochre3_ocr_spark.operators import dedup, similarity, text_metrics
+
     return {
         "extract_processed_text": _extract_processed_text,
         "extract_span_stats": _extract_span_stats,
@@ -4671,25 +4297,42 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_percentiles": _sql(_Q_PERCENTILES_SPARK),
         "q_events_hourly": _sql(_Q_EVENTS_SPARK),
         "q_events_sessions": _sql(_Q_SESSIONS_SPARK),
-        "dedup_exact": _sql(_Q_DEDUP_EXACT_SPARK),
-        "dedup_ngram_jaccard": _sql(_Q_NGRAM_JACCARD_SPARK),
-        "dedup_minhash_signature": _sql(_Q_MINHASH_SPARK),
-        "dedup_simhash": _sql(_Q_SIMHASH_SPARK),
-        "ann_cosine_topk": _sql(_Q_ANN_SPARK),
+        "dedup_exact": _on(
+            "documents",
+            lambda d: dedup.exact_dedup(d, prefix=40).withColumnRenamed(
+                "text_hash", "prefix_hash"
+            ),
+        ),
+        "dedup_ngram_jaccard": _on(
+            "documents", partial(dedup.ngram_jaccard_pairs, max_df=50)
+        ),
+        "dedup_minhash_signature": _on("documents", dedup.minhash_signatures),
+        "dedup_simhash": _on("documents", dedup.simhash),
+        "ann_cosine_topk": _on(
+            "embeddings",
+            partial(similarity.cosine_topk, query_filter="vec_id < 5", k=5),
+        ),
         "embedding_centroids": _sql(_Q_CENTROIDS_SPARK),
-        "text_quality": _sql(_Q_QUALITY_SPARK),
-        "doc_fingerprint": _sql(_Q_FINGERPRINT_SPARK),
-        "token_stats_by_source": _sql(_Q_TOKEN_STATS),
+        "text_quality": _on("documents", text_metrics.quality_features),
+        "doc_fingerprint": _on("documents", text_metrics.fingerprints),
+        "token_stats_by_source": _on("documents", text_metrics.token_stats),
         "eval_text_metrics": _sql(_Q_EVAL_SPARK),
-        "lang_id_heuristic": _sql(_Q_LANGID_SPARK),
+        "lang_id_heuristic": _on("documents", text_metrics.language_id),
         "ocr_layout_end_to_end": _ocr_layout_end_to_end,
         "media_image_features": _media_features,
         "skew_eval_stats": _skew_eval_stats,
-        "ann_ivf_topk": _sql(_Q_IVF_SPARK),
-        "dedup_embedding_neardup": _sql(_Q_EMB_NEARDUP_SPARK),
+        "ann_ivf_topk": _on(
+            "embeddings",
+            partial(similarity.ivf_topk, query_filter="vec_id < 5", k=3, n_cells=8),
+        ),
+        "dedup_embedding_neardup": _on(
+            "embeddings", similarity.cosine_neardup_pairs
+        ),
         "dehyphenate_corpus": _dehyphenate_corpus,
         "word_frequency_corpus": _word_frequency_corpus,
-        "dedup_minhash_lsh": _sql(_Q_LSH_SPARK),
+        "dedup_minhash_lsh": _on(
+            "documents", partial(dedup.minhash_lsh_candidates, max_bucket=3)
+        ),
         "dedup_duplicate_clusters": _dedup_clusters,
         "dedup_clusters_full": _dedup_clusters_full,
         "dedup_leakage_splits": _dedup_leakage_splits,
@@ -4703,7 +4346,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_sample": _corpus_sample,
         "interleaved_chunks": _interleaved_chunks,
         "corpus_filter_verdicts": _corpus_filter_verdicts,
-        "dedup_simhash_neardup": _sql(_Q_SIMHASH_ND_SPARK),
+        "dedup_simhash_neardup": _on(
+            "documents",
+            partial(
+                dedup.simhash_neardup_pairs,
+                max_hamming=1, bits=64, n_bands=4, max_bucket=3,
+            ),
+        ),
         "pdf_page_scan": _pdf_page_scan,
         "token_counts_bpe": _token_counts_bpe,
         "ann_ivf_kmeans_topk": _ann_ivf_kmeans_topk,

@@ -76,14 +76,6 @@ def replace_punctuation(s: str) -> str:
     )
 
 
-_DIACRITICS = re.compile("[ִַָּֿׂ]")
-
-
-def strip_diacritics(s: str) -> str:
-    """YivoTransliterator.stripDiactritics (:84-86)."""
-    return _DIACRITICS.sub("", replace_with_decomposed(s))
-
-
 # --- loshn-koydesh dictionary (curated subset; see module docstring) --------
 # orthographic spelling → comma-separated phonetic respellings (first = most
 # common), exactly the reference resource format

@@ -18,7 +18,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from jochre3_ocr_spark.operators import transforms as T
 
@@ -31,46 +31,6 @@ FEATURE_DDL = (
     "media_ref string, media_type string, width int, height int, "
     "ink_ratio double, mean_intensity double, skew_deg double, status string"
 )
-
-
-def synthesize_media_df(
-    spark: SparkSession, n: int, seed: int = 42, partitions: int | None = None
-) -> DataFrame:
-    """Deterministic media table: synthetic grayscale 'page' images with
-    known skew, encoded with the .npy codec."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import random
-
-        for batch in batches:
-            rows = []
-            for i in batch["id"]:
-                rng = random.Random((seed << 16) ^ int(i))
-                img = make_text_image(
-                    n_lines=rng.randint(3, 6),
-                    skew_deg=rng.uniform(-3, 3),
-                    seed=int(i),
-                )
-                rows.append(
-                    {
-                        "media_ref": f"img://media/{int(i)}",
-                        "media_type": "image/npy",
-                        "content": T.encode_image(img),
-                        "width": img.shape[1],
-                        "height": img.shape[0],
-                        "n_frames": 1,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_ref media_type content width height n_frames".split()
-                ][0],
-            )
-
-    return spark.range(n, numPartitions=partitions).mapInPandas(
-        gen, schema=MEDIA_SCHEMA_DDL
-    )
 
 
 def make_text_image(

@@ -1,6 +1,7 @@
 """Similarity search over an embedding column (array<float>) —
-first-class library API (SQL twins in __spark_entry__ for the DuckDB
-oracle; tests assert equality).
+first-class library API. ``__spark_entry__.queries()`` runs these
+operators and checks them against independent DuckDB ``oracle_sql()``
+twins.
 
 * brute-force cosine top-k — the exact baseline: posexplode both sides,
   join on position, aggregate dot/norms (all JVM; at scale, the

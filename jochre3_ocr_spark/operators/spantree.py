@@ -266,36 +266,6 @@ class Document:
         )
 
 
-def synthesize_word_geometry(
-    texts: list[str], line_index: int, left_to_right: bool = False
-) -> list[tuple[Rect, list[Glyph]]]:
-    """Deterministic per-line layout: glyph boxes laid out in reading
-    order (RTL by default, matching Yiddish)."""
-    top = line_index * LINE_H
-    out = []
-    cursor = PAGE_RIGHT if not left_to_right else 0
-    for text in texts:
-        chars = string_to_chars(text)
-        glyphs = []
-        for ch in chars:
-            if left_to_right:
-                rect = Rect(cursor, top, GLYPH_W, GLYPH_H)
-                cursor += GLYPH_W
-            else:
-                cursor -= GLYPH_W
-                rect = Rect(cursor, top, GLYPH_W, GLYPH_H)
-            glyphs.append(Glyph(ch, rect, 1.0))
-        if glyphs:
-            rect = glyphs[0].rect
-            for g in glyphs[1:]:
-                rect = rect.union(g.rect)
-        else:
-            rect = Rect(cursor, top, 0, GLYPH_H)
-        out.append((rect, glyphs))
-        cursor = cursor - SPACE_W if not left_to_right else cursor + SPACE_W
-    return out
-
-
 ZERO_RECT = Rect(0, 0, 0, 0)
 
 

@@ -1,6 +1,7 @@
 """Text-analysis operators over a document DataFrame — first-class
-library API (SQL twins in __spark_entry__ carry the DuckDB oracle;
-tests assert row-for-row equality). All pure column expressions.
+library API. ``__spark_entry__.queries()`` runs these operators and
+checks them against independent DuckDB ``oracle_sql()`` twins. All pure
+column expressions.
 
 * quality scoring — token counts, average token length, stopword and
   distinct-token ratios (the boilerplate/quality features a training

@@ -22,16 +22,6 @@ _SIG = b"\x89PNG\r\n\x1a\n"
 _CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
-def _paeth_select(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    """Vectorized Paeth predictor over int16/int32 arrays."""
-    p = a.astype(np.int32) + b.astype(np.int32) - c.astype(np.int32)
-    pa = np.abs(p - a)
-    pb = np.abs(p - b)
-    pc = np.abs(p - c)
-    out = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
-    return out.astype(np.uint8)
-
-
 def _unfilter(raw: np.ndarray, height: int, width: int, bpp: int) -> np.ndarray:
     """Undo per-scanline filtering. raw is (height, 1 + width*bpp) uint8."""
     stride = width * bpp

@@ -78,20 +78,6 @@ def write_text(df: DataFrame, path: str, column: str = "processed_text") -> None
     ).write.mode("overwrite").text(path)
 
 
-def iter_pdf_pages(content: bytes, dpi: int = 300, renderer=None):
-    """PDF page stream (PDFToImageConverter.scala:26-74): yields
-    (page_number, ndarray) at the DPI. Page counting/windowing is real
-    (sources/pdf.py parses the PDF object graph); rasterisation uses
-    pypdfium2 when importable, else an injected renderer — see
-    sources/pdf.pdf_pages for the Spark page-per-row slot."""
-    from jochre3_ocr_spark.sources import pdf as _pdf
-
-    render = renderer or _pdf.default_renderer()
-    n = _pdf.count_pdf_pages(content)
-    for page_no in range(1, n + 1):
-        yield page_no, render(content, page_no - 1, dpi)
-
-
 def fetch_images(urls_df: DataFrame, fetcher=None) -> DataFrame:
     """URL image fetch (ImageUtils.getImageFromUrl, core/utils/
     ImageUtils.scala:150-159): rows (doc_id, url) → (doc_id, url,

@@ -6,9 +6,9 @@ names, no integer/float dtype-kind mismatch, and order-insensitive cell
 equality where floats compare by their shortest ``repr`` (no rounding
 tolerance).
 
-tests/test_entry_oracle.py runs a tolerant form (floats to 9
-significant digits) at the smallest scale factor; this sweep is the
-larger-SF check that changed queries pass before they land.
+tests/test_entry_oracle.py runs the same ``compare`` at the smallest
+scale factor; this sweep is the larger-SF check that changed queries
+pass before they land.
 
 Usage:
     python scripts/strict_sweep.py --sf-dir DIR [--only NAME ...] [--cpus N]
@@ -60,6 +60,9 @@ def compare(sdf, ddf) -> str | None:
     drows = [tuple(r) for r in ddf.itertuples(index=False)]
     if len(srows) != len(drows):
         return f"row count {len(srows)} != {len(drows)}"
+    # a DuckDB HUGEINT (sum of INTEGER) surfaces as float64 in pandas and
+    # hash-mismatches even when values are equal: CAST to BIGINT in the
+    # oracle SQL when this fires
     spark_types = dict(sdf.dtypes)
     for c in ddf.columns:
         dk, sk = ddf[c].dtype.kind, spark_types.get(c, "?")

@@ -1,13 +1,21 @@
 """Replicates the driver's correctness gate locally: run every
 queries() entry on Spark and its oracle_sql() on DuckDB at sf0.001 and
-compare row count, column names, and order-insensitive values."""
+compare them strictly with ``scripts/strict_sweep.compare`` — row count,
+column names, integer/float dtype kinds, and order-insensitive values
+with floats compared by their shortest repr."""
 
-import math
+import os
+import sys
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts")
+)
+from strict_sweep import compare  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -21,66 +29,14 @@ def _duck(sql: str):
     return con.execute(sql).fetch_df()
 
 
-def _norm_cell(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if v == 0.0:
-            v = 0.0  # normalize -0.0
-        return f"{v:.9g}"
-    return str(v)
-
-
-def _norm_rows(cols, rows):
-    cols = list(cols)
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = sorted(
-        tuple(_norm_cell(r[i]) for i in order) for r in rows
-    )
-    return sorted(cols), out
-
-
 QUERY_NAMES = sorted(set(entry_mod.oracle_sql()) & set(entry_mod.queries()))
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, name):
-    q = entry_mod.queries()[name]
-    sdf = q(spark, SF_DIR)
-    srows = [tuple(r) for r in sdf.collect()]
-    scols = sdf.columns
-
-    ddf = _duck(entry_mod.oracle_sql()[name])
-    drows = [tuple(r) for r in ddf.itertuples(index=False)]
-    dcols = list(ddf.columns)
-
-    assert len(srows) == len(drows), f"{name}: row count {len(srows)} != {len(drows)}"
-
-    # dtype-kind parity: a DuckDB HUGEINT (sum of INTEGER) surfaces as
-    # float64 in pandas and hash-mismatches the driver even when values
-    # are equal (round-1 artifact on token_stats/sessions) — cast to
-    # BIGINT in the oracle SQL when this fires.
-    spark_types = dict(sdf.dtypes)
-    for c in dcols:
-        dk = ddf[c].dtype.kind
-        sk = spark_types.get(c, "?")
-        s_int = sk in ("bigint", "int", "smallint", "tinyint")
-        s_float = sk in ("double", "float")
-        assert not (dk == "f" and s_int) and not (dk == "i" and s_float), (
-            f"{name}.{c}: spark dtype {sk} vs duckdb pandas kind {dk} — "
-            f"add an explicit CAST in the oracle SQL"
-        )
-
-    s_cols, s_norm = _norm_rows(scols, srows)
-    d_cols, d_norm = _norm_rows(dcols, drows)
-    assert s_cols == d_cols, f"{name}: columns {s_cols} != {d_cols}"
-    mism = [i for i, (a, b) in enumerate(zip(s_norm, d_norm)) if a != b]
-    assert not mism, (
-        f"{name}: {len(mism)} mismatched rows; first: "
-        f"{s_norm[mism[0]]} != {d_norm[mism[0]]}"
-    )
+    sdf = entry_mod.queries()[name](spark, SF_DIR)
+    err = compare(sdf, _duck(entry_mod.oracle_sql()[name]))
+    assert err is None, f"{name}: {err}"
 
 
 def test_entry_smoke(spark):
