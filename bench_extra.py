@@ -9,8 +9,9 @@ Usage:
   python bench_extra.py --explain dedup_simhash            # dump plans/r06/<q>.txt
   SPARK_GRAFT_REPEATS=3 ... (min-of-N, default 3)
 
-Each query is timed with the noop sink (computes every column, discards
-the result) and labelled via setJobDescription. Prints one JSON line:
+Each query runs once untimed as a warm-up, then is timed with the noop
+sink (computes every column, discards the result) and labelled via
+setJobDescription. Prints one JSON line:
 {"queries": {name: min_sec}, "samples": {...}, "load_before"/"load_after"}.
 """
 
@@ -103,6 +104,10 @@ def main() -> None:
                     "formatted"))
             with open(os.path.join(explain_dir, f"{name}.txt"), "w") as f:
                 f.write(plan)
+        # one untimed warm-up per query: the first run pays session,
+        # Python-worker and JIT warm-up, not query cost
+        spark.sparkContext.setJobDescription(f"bench_extra:{name}:warmup")
+        run_query(name).write.format("noop").mode("overwrite").save()
         ss: list[float] = []
         for _ in range(max(1, repeats)):
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")

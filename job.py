@@ -205,11 +205,6 @@ def main(argv=None) -> int:
                    "substring-*)")
     p.add_argument("--benchmark", default=None,
                    help="eval-set parquet for --corpus-op decontaminate")
-    p.add_argument("--report-hot-buckets", action="store_true",
-                   help="dedup-verdicts: print a stderr JSON line when "
-                   "any LSH band bucket (over the pre-collapsed "
-                   "representatives) exceeds the cap — costs one extra "
-                   "banding pass")
     p.add_argument("--max-tokens", type=int, default=128,
                    help="chunk window (--corpus-op chunk)")
     p.add_argument("--overlap", type=int, default=16,
@@ -402,50 +397,28 @@ def main(argv=None) -> int:
             )
         elif args.corpus_op == "dedup-verdicts":
             from jochre3_ocr_spark.operators.dedup import (
-                _collapse_reps,
                 dedup_corpus,
-                lsh_bucket_stats,
-                simhash_bucket_stats,
+                hot_bucket_summary,
             )
 
-            if args.report_hot_buckets:
-                # detailed observability (opt-in: costs one extra LSH
-                # banding pass): machine-readable cap activity over the
-                # frame the pipeline actually bands — the pre-collapsed
-                # representatives, so a report means a REAL residual hot
-                # bucket, not an exact-dup group the collapse absorbed
-                from pyspark.sql import functions as F
-
-                min_tokens = 3 if args.dedup_method == "minhash" else 1
-                _, banded = _collapse_reps(docs, "doc_id", "text", min_tokens)
-                cap = args.max_bucket or None
-                if args.dedup_method == "minhash":
-                    stats = lsh_bucket_stats(banded, max_bucket=cap)
-                else:
-                    stats = simhash_bucket_stats(banded, max_bucket=cap)
-                hot = stats.agg(
-                    F.max("bucket_size").alias("mx"),
-                    F.sum("pairs_uncapped").alias("pu"),
-                    F.sum("pairs_capped").alias("pc"),
-                ).collect()[0]
-                if hot["mx"] is not None:
+            cap = args.max_bucket or None
+            if cap is not None:
+                # the operational path always reports cap activity as one
+                # machine-readable stderr line (ADVICE r4 — the simhash
+                # cap is not output-invariant, so a silently-hot bucket
+                # must be visible); one stats pass over the pre-collapsed
+                # representatives the pipeline bands
+                hot = hot_bucket_summary(
+                    docs, method=args.dedup_method, max_bucket=cap
+                )
+                if hot["n_hot"]:
                     print(json.dumps({
                         "dedup_hot_buckets": True,
-                        "max_bucket_size": int(hot["mx"]),
-                        "pairs_uncapped": int(hot["pu"] or 0),
-                        "pairs_after_cap": int(hot["pc"] or 0),
+                        "max_bucket_size": int(hot["max_bucket_size"]),
+                        "pairs_uncapped": int(hot["pairs_uncapped"]),
+                        "pairs_after_cap": int(hot["pairs_capped"]),
                     }), file=sys.stderr)
-            # warn_hot_buckets: the operational path always gets the
-            # one-line cap warning (ADVICE r4 — the simhash cap is not
-            # output-invariant, so a silently-hot bucket must be visible);
-            # the detailed stderr report above SUPERSEDES it, so don't
-            # pay the banding+stats pass twice when both are requested
-            out = dedup_corpus(
-                docs,
-                method=args.dedup_method,
-                max_bucket=args.max_bucket or None,
-                warn_hot_buckets=not args.report_hot_buckets,
-            )
+            out = dedup_corpus(docs, method=args.dedup_method, max_bucket=cap)
         elif args.corpus_op == "html-extract":
             from jochre3_ocr_spark.operators.html_extract import (
                 html_extract,

@@ -79,6 +79,9 @@ def _pair_counts(vocab: DataFrame) -> DataFrame:
     )
 
 
+#: one learned merge per row
+_MERGES_DDL = "rnk int, left string, right string, merged string, cnt bigint"
+
 #: vocabulary size (distinct segmented words) up to which BPE training
 #: runs on the driver — one take(cap+1) job instead of 2-3 Spark jobs
 #: per merge round. The same bounded-collect class as the CC/PageRank
@@ -132,7 +135,8 @@ def train_bpe(
     time, ordered by rnk.  Ties break on (cnt desc, left asc, right
     asc).  Stops early if no pair remains (every word fully merged).
     """
-    spark = df.sparkSession
+    from jochre3_ocr_spark.plans.pipeline import _driver_fast_path, _driver_frame
+
     # Train over the DISTINCT-WORD frequency table, not every word
     # instance (the textbook word-dict optimization): pair counts are
     # occurrence-weighted sums, bit-identical to counting instances,
@@ -146,18 +150,17 @@ def train_bpe(
         .groupBy("__w")
         .agg(F.count(F.lit(1)).alias("__n"))
     )
-    # size-gated driver fast path: ONE take(cap+1) both answers "is the
-    # vocab small?" and delivers it; the per-round count/argmax/replace
+    # size-gated driver fast path: the per-round count/argmax/replace
     # runs in Python, merge-for-merge identical (_train_bpe_driver).
     # Above the cap the distributed rounds below run exactly as before.
-    head = vocab.take(_BPE_DRIVER_VOCAB_CAP + 1)
-    if len(head) <= _BPE_DRIVER_VOCAB_CAP:
-        return spark.createDataFrame(
-            _train_bpe_driver(
-                [(r["__w"], int(r["__n"])) for r in head], n_merges
-            ),
-            "rnk int, left string, right string, merged string, cnt bigint",
-        )
+    fast = _driver_fast_path(
+        vocab,
+        _BPE_DRIVER_VOCAB_CAP,
+        lambda rows: _train_bpe_driver(rows, n_merges),
+        _MERGES_DDL,
+    )
+    if fast is not None:
+        return fast
     merges: list[tuple[int, str, str, str, int]] = []
     for rnk in range(1, n_merges + 1):
         # lazy checkpoint: the argmax job below materializes it, so each
@@ -179,9 +182,7 @@ def train_bpe(
         vocab = vocab.select(
             F.replace("__w", pat, repl).alias("__w"), "__n"
         )
-    return spark.createDataFrame(
-        merges, "rnk int, left string, right string, merged string, cnt bigint"
-    )
+    return _driver_frame(df.sparkSession, merges, _MERGES_DDL)
 
 
 def apply_bpe(

@@ -19,6 +19,8 @@ no RNG.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
@@ -526,9 +528,17 @@ def lsh_bucket_stats(
     multi-doc bucket and ``pairs_capped == pairs_uncapped`` — nothing is
     dropped, the row is pure bucket-size telemetry."""
     bands = _minhash_bands(df, id_col, text_col, n, num_hashes, band_size)
-    sizes = bands.groupBy("band", "band_hash").agg(
-        F.count("*").alias("bucket_size")
-    )
+    return _bucket_stats(bands, ["band", "band_hash"], max_bucket, 1)
+
+
+def _bucket_stats(
+    bands: DataFrame, keys: list[str], max_bucket: int | None, tail_links
+) -> DataFrame:
+    """The body of both bucket-stats reports: one row per bucket over
+    the cap (every multi-doc bucket when uncapped) with its all-pairs
+    count and the pairs the cap keeps — cap·(cap−1)/2 head pairs plus
+    ``tail_links`` links per tail doc."""
+    sizes = bands.groupBy(*keys).agg(F.count("*").alias("bucket_size"))
     uncapped = (
         F.col("bucket_size") * (F.col("bucket_size") - 1) / 2
     ).cast("long")
@@ -538,16 +548,12 @@ def lsh_bucket_stats(
             .withColumn("pairs_uncapped", uncapped)
             .withColumn("pairs_capped", F.col("pairs_uncapped"))
         )
+    cap = F.lit(max_bucket)
+    capped = cap * (cap - 1) / 2 + (F.col("bucket_size") - cap) * tail_links
     return (
-        sizes.filter(F.col("bucket_size") > F.lit(max_bucket))
+        sizes.filter(F.col("bucket_size") > cap)
         .withColumn("pairs_uncapped", uncapped)
-        .withColumn(
-            "pairs_capped",
-            (
-                F.lit(max_bucket) * (F.lit(max_bucket) - 1) / 2
-                + (F.col("bucket_size") - F.lit(max_bucket))
-            ).cast("long"),
-        )
+        .withColumn("pairs_capped", capped.cast("long"))
     )
 
 
@@ -682,30 +688,7 @@ def simhash_bucket_stats(
     (tail_link_all_heads): cap·(cap−1)/2 head pairs plus cap links per
     tail doc."""
     bands = _simhash_bands(df, id_col, text_col, bits, n_bands)
-    sizes = bands.groupBy("band", "band_val").agg(
-        F.count("*").alias("bucket_size")
-    )
-    uncapped = (
-        F.col("bucket_size") * (F.col("bucket_size") - 1) / 2
-    ).cast("long")
-    if max_bucket is None:
-        return (
-            sizes.filter(F.col("bucket_size") > 1)
-            .withColumn("pairs_uncapped", uncapped)
-            .withColumn("pairs_capped", F.col("pairs_uncapped"))
-        )
-    return (
-        sizes.filter(F.col("bucket_size") > F.lit(max_bucket))
-        .withColumn("pairs_uncapped", uncapped)
-        .withColumn(
-            "pairs_capped",
-            (
-                F.lit(max_bucket) * (F.lit(max_bucket) - 1) / 2
-                + (F.col("bucket_size") - F.lit(max_bucket))
-                * F.lit(max_bucket)
-            ).cast("long"),
-        )
-    )
+    return _bucket_stats(bands, ["band", "band_val"], max_bucket, max_bucket)
 
 
 def simhash_neardup_pairs(
@@ -827,6 +810,8 @@ def connected_components(
       returned. Lineage is truncated per round (localCheckpoint) so the
       plan does not grow with iterations.
     """
+    from jochre3_ocr_spark.plans.pipeline import _driver_fast_path
+
     # materialize the pair source ONCE before symmetrizing: the union
     # reads it twice, and an un-checkpointed candidate generator (LSH)
     # would re-run per branch
@@ -835,32 +820,24 @@ def connected_components(
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .localCheckpoint(eager=True)
     )
-    # every distributed round costs a fixed ~0.5 s of job/shuffle
-    # overhead regardless of edge count, so a pair table under the cap
-    # resolves faster as ONE bounded driver union-find. take(cap+1) both
-    # answers "is it small?" and, when yes, already holds the full edge
-    # list (one job, no separate count).
-    head = pairs.take(_CC_DRIVER_MAX_PAIRS + 1)
-    if len(head) <= _CC_DRIVER_MAX_PAIRS:
-        return _cc_driver(pairs.sparkSession, pairs.schema, head)
-    return _cc_star(pairs, max_iters)
+    t = pairs.schema["a"].dataType.simpleString()
+    fast = _driver_fast_path(
+        pairs, _CC_DRIVER_MAX_PAIRS, _cc_driver, f"doc_id {t}, cluster_id {t}"
+    )
+    return fast if fast is not None else _cc_star(pairs, max_iters)
 
 
 #: driver union-find cap: below this many candidate pairs the graph is
 #: a fixed-cost problem, not a scale problem. 100k pairs ≈ 10 MB of
-#: string ids on the driver; at corpus scale the take() probe returns
-#: cap+1 rows from the first partitions and star runs.
+#: string ids on the driver.
 _CC_DRIVER_MAX_PAIRS = 100_000
 
 
-def _cc_driver(spark, pair_schema, rows) -> DataFrame:
-    """Union-find over a collected (bounded) pair list. Python string
-    comparison is code-point order == Spark's UTF8 binary order (UTF-8
-    preserves code-point ordering), so min-per-component labels are
-    identical to the star route's."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
+def _cc_driver(rows) -> list[tuple]:
+    """Union-find over a collected (bounded) pair list → (doc_id,
+    cluster_id) rows. Python string comparison is code-point order ==
+    Spark's UTF8 binary order (UTF-8 preserves code-point ordering), so
+    min-per-component labels are identical to the star route's."""
     parent: dict = {}
 
     def find(x):
@@ -885,30 +862,7 @@ def _cc_driver(spark, pair_schema, rows) -> DataFrame:
         m = comp_min.get(r)
         if m is None or node < m:
             comp_min[r] = node
-    # a pandas frame crosses to the JVM as Arrow batches (with
-    # spark.sql.execution.arrow.pyspark.enabled, set by get_spark); a
-    # list of tuples becomes a pickled Python RDD whose first action
-    # forks a Python worker per core just to unpickle the rows (~60 MB
-    # RSS each, measured)
-    out = pd.DataFrame(
-        [(n, comp_min[find(n)]) for n in parent],
-        columns=["doc_id", "cluster_id"],
-    )
-    dtype = pair_schema["a"].dataType
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", dtype),
-            T.StructField("cluster_id", dtype),
-        ]
-    )
-    # createDataFrame is RDD-backed — no size stats, so a downstream
-    # join (e.g. the members left join in _cluster_verdicts) plans a
-    # SortMergeJoin and shuffles the CORPUS side against this ≤2·cap-row
-    # frame. The frame is bounded by construction (≤ ~200k ids ≈ 20 MB),
-    # so mark it broadcastable: consumers get a BroadcastHashJoin with
-    # zero exchange on the corpus side. Window consumers ignore the
-    # hint; rows are unchanged.
-    return F.broadcast(spark.createDataFrame(out, schema))
+    return [(n, comp_min[find(n)]) for n in parent]
 
 
 def _cc_star(pairs: DataFrame, max_iters: int) -> DataFrame:
@@ -973,10 +927,9 @@ def _collapse_reps(
     min_tokens: int,
 ) -> tuple[DataFrame, DataFrame]:
     """(members, reps) for :func:`_cluster_verdicts`. ``reps`` is
-    (doc_id, text), the frame candidate generation runs on — callers
-    also run bucket-stats observability over it (``warn_hot_buckets``,
-    ``job.py``). ``members`` is (doc_id, rep, linked), one row per
-    corpus doc: the doc takes ``rep``'s component label when ``linked``,
+    (doc_id, text), the frame candidate generation and
+    :func:`hot_bucket_summary` band. ``members`` is (doc_id, rep,
+    linked), one row per corpus doc: the doc takes ``rep``'s component label when ``linked``,
     and is its own singleton otherwise.
 
     Each distinct text collapses to ONE representative, its minimum
@@ -1112,15 +1065,16 @@ def dedup_corpus(
     → one verdict row per corpus document, exact members labelled by key
     from their representative (:func:`_collapse_reps`).
 
-    ``warn_hot_buckets=True`` additionally runs the matching bucket-stats
-    report (:func:`lsh_bucket_stats` / :func:`simhash_bucket_stats`) over
-    the SAME representative frame the candidate generator sees and emits
-    a ``warnings.warn`` when any bucket exceeds ``max_bucket`` — this
-    costs one extra Spark job, so it is opt-in for the library call, but
-    the operational entry point (``job.py --corpus-op dedup-verdicts``)
-    turns it on: for simhash the cap is NOT output-invariant (bounded
-    recall loss, SCALE.md §9), and a silently-capped hot bucket is
-    exactly the condition an operator needs to see.
+    ``warn_hot_buckets=True`` additionally runs
+    :func:`hot_bucket_summary` over the same representatives the
+    candidate generator sees and emits a ``warnings.warn`` when any
+    bucket exceeds ``max_bucket`` — this costs one extra Spark job, so
+    it is opt-in for the library call. The operational entry point
+    (``job.py --corpus-op dedup-verdicts``) always prints the same
+    summary as a stderr JSON line instead: for simhash the cap is NOT
+    output-invariant (bounded recall loss, SCALE.md §9), and a
+    silently-capped hot bucket is exactly the condition an operator
+    needs to see.
 
     Returns (doc_id, cluster_id, cluster_size, is_canonical, keep) over
     the FULL corpus domain (singletons included), where ``keep`` is the
@@ -1140,8 +1094,29 @@ def dedup_corpus(
         df, id_col, text_col, n if method == "minhash" else 1
     )
     if warn_hot_buckets and max_bucket is not None:
-        _warn_hot_buckets(reps, method, n, num_hashes, band_size,
-                          bits, n_bands, max_bucket)
+        hot = hot_bucket_summary(df, id_col, text_col, method, n,
+                                 num_hashes, band_size, bits, n_bands,
+                                 max_bucket)
+        if hot["n_hot"]:
+            invariance = (
+                "cluster-invariant (star-links preserve connectivity)"
+                if method == "minhash"
+                else "NOT output-invariant: a tail doc far from all "
+                f"{max_bucket} heads loses its pair (SCALE.md §9 recall "
+                "curve)"
+            )
+            warnings.warn(
+                f"dedup_corpus[{method}]: {hot['n_hot']} band bucket(s) "
+                f"exceed max_bucket={max_bucket} after exact pre-collapse "
+                f"(largest {hot['max_bucket_size']} docs, "
+                f"{hot['pairs_uncapped'] - hot['pairs_capped']} candidate "
+                f"pairs avoided by the cap). The cap here is {invariance}. "
+                "A bucket ≫ cap is a giant near-duplicate group — a "
+                "data-quality signal worth inspecting via "
+                f"{'lsh' if method == 'minhash' else 'simhash'}"
+                "_bucket_stats.",
+                stacklevel=2,
+            )
     out = _cluster_verdicts(members, candidate_fn(reps))
     return out.withColumn("keep", F.col("is_canonical"))
 
@@ -1244,53 +1219,41 @@ def incremental_dedup_verdicts(
     )
 
 
-def _warn_hot_buckets(
-    rep_rows: DataFrame,
-    method: str,
-    n: int,
-    num_hashes: int,
-    band_size: int,
-    bits: int,
-    n_bands: int,
-    max_bucket: int,
-) -> None:
-    """One bounded agg over the bucket-stats frame → ``warnings.warn``
-    if any post-collapse bucket exceeds the cap. The summary row is a
-    3-column aggregate (never the per-bucket rows), so the driver-side
-    cost is O(1) regardless of corpus size."""
-    import warnings
-
+def hot_bucket_summary(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    method: str = "minhash",
+    n: int = 3,
+    num_hashes: int = 8,
+    band_size: int = 2,
+    bits: int = 64,
+    n_bands: int = 4,
+    max_bucket: int = 64,
+):
+    """One Row (n_hot, max_bucket_size, pairs_uncapped, pairs_capped):
+    the bucket-stats report of ``method`` over the buckets above
+    ``max_bucket``, folded in one Spark job. It bands the exact-collapsed
+    representatives, as :func:`dedup_corpus` does, so a hot bucket is a
+    residual near-duplicate group, not an exact group the collapse
+    absorbed."""
+    _, reps = _collapse_reps(
+        df, id_col, text_col, n if method == "minhash" else 1
+    )
     if method == "minhash":
         stats = lsh_bucket_stats(
-            rep_rows, "doc_id", "text", n, num_hashes, band_size, max_bucket
+            reps, "doc_id", "text", n, num_hashes, band_size, max_bucket
         )
-        invariance = "cluster-invariant (star-links preserve connectivity)"
     else:
         stats = simhash_bucket_stats(
-            rep_rows, "doc_id", "text", bits, n_bands, max_bucket
+            reps, "doc_id", "text", bits, n_bands, max_bucket
         )
-        invariance = (
-            "NOT output-invariant: a tail doc far from all "
-            f"{max_bucket} heads loses its pair (SCALE.md §9 recall curve)"
-        )
-    row = stats.agg(
+    return stats.agg(
         F.count("*").alias("n_hot"),
-        F.max("bucket_size").alias("max_size"),
-        F.sum(F.col("pairs_uncapped") - F.col("pairs_capped")).alias(
-            "pairs_avoided"
-        ),
+        F.max("bucket_size").alias("max_bucket_size"),
+        F.sum("pairs_uncapped").alias("pairs_uncapped"),
+        F.sum("pairs_capped").alias("pairs_capped"),
     ).collect()[0]
-    if row["n_hot"]:
-        warnings.warn(
-            f"dedup_corpus[{method}]: {row['n_hot']} band bucket(s) exceed "
-            f"max_bucket={max_bucket} after exact pre-collapse (largest "
-            f"{row['max_size']} docs, {row['pairs_avoided']} candidate "
-            f"pairs avoided by the cap). The cap here is {invariance}. "
-            f"A bucket ≫ cap is a giant near-duplicate group — a "
-            f"data-quality signal worth inspecting via "
-            f"{'lsh' if method == 'minhash' else 'simhash'}_bucket_stats.",
-            stacklevel=3,
-        )
 
 
 def leakage_safe_splits(

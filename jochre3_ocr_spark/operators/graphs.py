@@ -179,14 +179,12 @@ _PAGERANK_DRIVER_MAX_EDGES = 100_000
 
 
 def _pagerank_driver(
-    spark, edge_schema, rows, iters, damping_num, damping_den, scale
-) -> DataFrame:
-    """Exact integer PageRank over a collected (bounded) edge list —
+    edges, iters, damping_num, damping_den, scale
+) -> list[tuple]:
+    """Exact integer PageRank over a collected (bounded) list of
+    (src, dst) edges → (node, rank, out_deg, in_deg) rows —
     bit-identical to the distributed rounds: same dedup/self-loop
-    semantics (rows are already deduped), same floors, no float."""
-    from pyspark.sql import types as T
-
-    edges = [(r[0], r[1]) for r in rows]
+    semantics (edges are already deduped), same floors, no float."""
     outdeg: dict = {}
     indeg: dict = {}
     nodes: set = set()
@@ -205,18 +203,9 @@ def _pagerank_driver(
             n: base + (damping_num * inc.get(n, 0)) // damping_den
             for n in nodes
         }
-    out = [
+    return [
         (n, rank[n], outdeg.get(n, 0), indeg.get(n, 0)) for n in nodes
     ]
-    schema = T.StructType(
-        [
-            T.StructField("node", edge_schema["src"].dataType),
-            T.StructField("rank", T.LongType()),
-            T.StructField("out_deg", T.IntegerType()),
-            T.StructField("in_deg", T.IntegerType()),
-        ]
-    )
-    return spark.createDataFrame(out, schema)
 
 
 def pagerank(
@@ -244,6 +233,8 @@ def pagerank(
     to keep the lineage flat (the connected-components lesson,
     ``dedup.py``).  Returns ``(node, rank, out_deg, in_deg)``.
     """
+    from jochre3_ocr_spark.plans.pipeline import _driver_fast_path
+
     e = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
@@ -252,21 +243,20 @@ def pagerank(
     if num_partitions:
         e = e.repartition(num_partitions, "src")
     e = e.localCheckpoint(eager=False)
-    # small-graph fast path (the CC driver-union-find pattern): every
-    # distributed round costs a join + shuffle of fixed ~0.5 s overhead,
-    # so a deduped edge list under the cap resolves faster as one
-    # bounded collect + exact integer arithmetic on the driver — the
+    # small-graph fast path (the CC driver-union-find pattern): the
     # semantics above are pure non-negative integer ops (DIV == Python
-    # // for non-negatives), so ranks are bit-identical. take(cap+1)
-    # answers "is it small?" and already holds the edges when yes; at
-    # soak scale it returns cap+1 rows from the first partitions and
-    # the rounds run exactly as before.
-    head = e.take(_PAGERANK_DRIVER_MAX_EDGES + 1)
-    if len(head) <= _PAGERANK_DRIVER_MAX_EDGES:
-        return _pagerank_driver(
-            edges.sparkSession, e.schema, head, iters,
-            damping_num, damping_den, scale,
-        )
+    # // for non-negatives), so driver ranks are bit-identical
+    t = e.schema["src"].dataType.simpleString()
+    fast = _driver_fast_path(
+        e,
+        _PAGERANK_DRIVER_MAX_EDGES,
+        lambda rows: _pagerank_driver(
+            rows, iters, damping_num, damping_den, scale
+        ),
+        f"node {t}, rank bigint, out_deg int, in_deg int",
+    )
+    if fast is not None:
+        return fast
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
     indeg = e.groupBy(F.col("dst").alias("node")).agg(
         F.count(F.lit(1)).alias("in_deg")

@@ -477,13 +477,15 @@ def mixture_plan(
     broadcast min — no collect, no corpus re-scan; the actual sampling
     stays in ``deterministic_sample`` (hash-threshold, shuffle-free).
     """
-    spark = df.sparkSession
+    from jochre3_ocr_spark.plans.pipeline import _driver_frame
+
     counts = df.groupBy(by).agg(F.count(F.lit(1)).alias("n_docs"))
-    wdf = spark.createDataFrame(
+    wdf = _driver_frame(
+        df.sparkSession,
         [(k, float(v)) for k, v in sorted(weights.items())],
         f"{by} string, target_weight double",
     )
-    joined = counts.join(F.broadcast(wdf), by, "left").withColumn(
+    joined = counts.join(wdf, by, "left").withColumn(
         "target_weight", F.coalesce("target_weight", F.lit(0.0))
     )
     scale = joined.where(F.col("target_weight") > 0).agg(

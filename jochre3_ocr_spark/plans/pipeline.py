@@ -43,6 +43,7 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 from pyspark.errors import AnalysisException
 
 from jochre3_ocr_spark.schema import PipelineConfig
@@ -642,6 +643,32 @@ def _spread_small_input(df: DataFrame) -> DataFrame:
     if size > slots * (64 << 20):
         return df
     return df.repartition(slots)
+
+
+def _driver_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Driver-side rows → a broadcast-hinted DataFrame of schema ``ddl``.
+    Through pandas the rows cross to the JVM as Arrow and plan as a
+    ``LocalRelation`` with size statistics; a row list would become a
+    pickled Python RDD that starts a Python worker per core (~60 MB RSS
+    each). Driver-sized, so broadcast even above the auto threshold."""
+    schema = StructType.fromDDL(ddl)
+    pdf = pd.DataFrame(rows, columns=schema.names)
+    return F.broadcast(spark.createDataFrame(pdf, schema))
+
+
+def _driver_fast_path(df: DataFrame, cap: int, solve, ddl: str):
+    """Every distributed round of an iterative operator costs ~0.5 s of
+    fixed job overhead, so up to ``cap`` rows resolve faster as ONE
+    ``take(cap + 1)`` — which both answers "is it small?" and holds the
+    rows — plus a pure-Python ``solve(rows) -> rows``. Returns their
+    :func:`_driver_frame`, or None (no job for a cap of 0) when the
+    caller must run its distributed rounds."""
+    if cap < 1:
+        return None
+    rows = df.take(cap + 1)
+    if len(rows) > cap:
+        return None
+    return _driver_frame(df.sparkSession, solve(rows), ddl)
 
 
 # ------------------------------------------------------- vision-path OCR

@@ -166,7 +166,6 @@ def main() -> int:
             "spark-submit", "--master", MASTER,
             "--driver-memory", DRIVER_MEMORY, "--py-files", engine_zip,
             "job.py", "--corpus-op", "dedup-verdicts",
-            "--report-hot-buckets",
             "--input", corpus_path, "--output", out_path,
         ],
         cwd=REPO, stdout=subprocess.PIPE, stderr=subprocess.PIPE,

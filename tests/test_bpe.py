@@ -78,12 +78,20 @@ def test_driver_fast_path_matches_distributed(spark, monkeypatch):
         [("1", "ab cd"), ("2", "cd ab"), ("3", "xy")],
         "doc_id string, text string",
     )
-    for frame, n in ((docs, 3), (tiny, 4), (tiny, 16)):
-        fast = [tuple(r) for r in B.train_bpe(frame, n_merges=n)
-                .orderBy("rnk").collect()]
+    # degenerate: no word at all (NULL text) and only empty words
+    blank = [
+        spark.createDataFrame(rows, "doc_id string, text string")
+        for rows in ([("1", None), ("2", None)], [("1", ""), ("2", "")])
+    ]
+    cases = [(docs, 3, True), (tiny, 4, True), (tiny, 16, True)]
+    cases += [(frame, 3, False) for frame in blank]
+    for frame, n, learns in cases:
+        fast_df = B.train_bpe(frame, n_merges=n)
+        fast = [tuple(r) for r in fast_df.orderBy("rnk").collect()]
         monkeypatch.setattr(B, "_BPE_DRIVER_VOCAB_CAP", 0)
-        slow = [tuple(r) for r in B.train_bpe(frame, n_merges=n)
-                .orderBy("rnk").collect()]
+        slow_df = B.train_bpe(frame, n_merges=n)
+        slow = [tuple(r) for r in slow_df.orderBy("rnk").collect()]
         monkeypatch.setattr(B, "_BPE_DRIVER_VOCAB_CAP", 100_000)
         assert fast == slow
-        assert len(fast) > 0
+        assert fast_df.schema.simpleString() == slow_df.schema.simpleString()
+        assert (len(fast) > 0) == learns

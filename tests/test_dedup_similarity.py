@@ -4,7 +4,6 @@ checked against DuckDB by tests/test_entry_oracle.py."""
 
 import pytest
 
-import __spark_entry__ as E
 from jochre3_ocr_spark.operators import dedup
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -66,14 +65,6 @@ def test_lsh_candidates_superset_of_high_jaccard(spark, documents):
     for r in cand:
         assert r["doc1"] < r["doc2"]
         assert r["doc1"] in ids and r["doc2"] in ids
-
-
-def test_bpe_token_counts_matches_sql(spark, documents):
-    from jochre3_ocr_spark.operators.text_metrics import bpe_token_counts
-
-    api = bpe_token_counts(documents)
-    sql = E.queries()["token_counts_bpe"](spark, SF_DIR)
-    assert rows(api) == rows(sql)
 
 
 def test_kmeans_ivf_on_separated_clusters(spark):
@@ -705,6 +696,26 @@ def test_dedup_corpus_warn_hot_buckets(spark):
     ]
 
 
+def test_hot_bucket_summary_matches_bucket_stats(spark):
+    """hot_bucket_summary is the bucket-stats report over the collapsed
+    representatives, folded to one row: on a near-duplicate family (no
+    exact duplicates) it equals simhash_bucket_stats' rows summed; an
+    exact group the collapse absorbs reports no hot bucket."""
+    shared = " ".join(f"s{j:02d}" for j in range(30))
+    near = spark.createDataFrame(
+        [(f"n{i:03d}", f"{shared} t{i}") for i in range(40)],
+        "doc_id string, text string",
+    )
+    hot = dedup.hot_bucket_summary(near, method="simhash", max_bucket=5)
+    stats = dedup.simhash_bucket_stats(near, max_bucket=5).collect()
+    assert hot["n_hot"] == len(stats) > 0
+    assert hot["max_bucket_size"] == max(r.bucket_size for r in stats)
+    assert hot["pairs_uncapped"] == sum(r.pairs_uncapped for r in stats)
+    assert hot["pairs_capped"] == sum(r.pairs_capped for r in stats)
+    exact = _hot_bucket_corpus(spark)
+    assert dedup.hot_bucket_summary(exact, max_bucket=5)["n_hot"] == 0
+
+
 def test_connected_components_default_matches_star_per_graph(
     spark, monkeypatch
 ):
@@ -739,7 +750,7 @@ def test_connected_components_driver_fast_path_matches_distributed(
     """The small-graph driver union-find (round-6 CC fixed-cost
     optimization) returns EXACTLY the star route's labels on a seeded
     random graph with self-loops, cliques, chains and singleton-by-
-    self-pair nodes."""
+    self-pair nodes, and on an empty pair list (no rows, same schema)."""
     import random
 
     from jochre3_ocr_spark.operators import dedup
@@ -750,10 +761,15 @@ def test_connected_components_driver_fast_path_matches_distributed(
     edges += [(f"x{i}", f"x{i}") for i in range(4)]  # self-pairs
     edges += [(f"ch{i:02d}", f"ch{i + 1:02d}") for i in range(12)]
     pairs = spark.createDataFrame(edges, "doc1 string, doc2 string")
+    empty = spark.createDataFrame([], "doc1 string, doc2 string")
 
     fast = _cc_rows(pairs)
+    fast_empty = dedup.connected_components(empty)
     monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_PAIRS", 0)
     assert _cc_rows(pairs) == fast
+    slow_empty = dedup.connected_components(empty)
+    assert fast_empty.collect() == slow_empty.collect() == []
+    assert fast_empty.schema.simpleString() == slow_empty.schema.simpleString()
 
 
 def _adversarial_tail_family(n=400):

@@ -149,7 +149,8 @@ def test_pagerank_driver_fast_path_matches_distributed(spark, monkeypatch):
     CC union-find) must be BIT-identical to the distributed rounds —
     same dedup/self-loop handling, same integer floors — on a seeded
     random graph with hubs, dangling nodes, self-loops and duplicate
-    edges; and the cap gate must fall back to the distributed path."""
+    edges, and on a self-loop-only graph (no rows, same schema); and the
+    cap gate must fall back to the distributed path."""
     import random
 
     from jochre3_ocr_spark.operators import graphs as G
@@ -163,8 +164,13 @@ def test_pagerank_driver_fast_path_matches_distributed(spark, monkeypatch):
     edges += [("n05", "n07")] * 4                       # duplicates
     edges += [("dangling_src", "sink")]                 # dangling sink
     df = spark.createDataFrame(edges, "src string, dst string")
+    loops = spark.createDataFrame([("a", "a"), ("b", "b")], df.schema)
 
     fast = sorted(tuple(r) for r in G.pagerank(df, iters=3).collect())
+    fast_loops = G.pagerank(loops, iters=3)
     monkeypatch.setattr(G, "_PAGERANK_DRIVER_MAX_EDGES", 0)
     dist = sorted(tuple(r) for r in G.pagerank(df, iters=3).collect())
     assert fast == dist
+    dist_loops = G.pagerank(loops, iters=3)
+    assert fast_loops.collect() == dist_loops.collect() == []
+    assert fast_loops.schema.simpleString() == dist_loops.schema.simpleString()

@@ -421,3 +421,49 @@ def test_nb_predict_broadcasts_model_tables(spark):
     plan = _plan(nb_classify(docs, docs))
     assert plan.count("BroadcastHashJoin") >= 2
     assert "SortMergeJoin [w" not in plan
+
+
+def _leaves(df) -> list[tuple[str, list[str]]]:
+    """(node name, output column names) of every leaf of the analyzed
+    plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    out = []
+    while leaves.hasNext():
+        node = leaves.next()
+        cols = node.output().iterator()
+        names = []
+        while cols.hasNext():
+            names.append(cols.next().name())
+        out.append((node.nodeName(), names))
+    return out
+
+
+def test_driver_built_frames_are_arrow_local_relations(spark):
+    """Rows solved on the driver reach the JVM as Arrow batches: the
+    driver-built leaf is a LocalRelation (with real size statistics),
+    not the LogicalRDD of a pickled Python row list — the whole
+    broadcast-hinted result for pagerank and train_bpe, the weights
+    table for mixture_plan."""
+    from jochre3_ocr_spark.operators.bpe import train_bpe
+    from jochre3_ocr_spark.operators.graphs import pagerank
+    from jochre3_ocr_spark.operators.text_metrics import mixture_plan
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string"
+    )
+    ranks, merges = pagerank(edges), train_bpe(_text_docs(spark))
+    assert _leaves(ranks) == [
+        ("LocalRelation", ["node", "rank", "out_deg", "in_deg"])
+    ]
+    assert _leaves(merges) == [
+        ("LocalRelation", ["rnk", "left", "right", "merged", "cnt"])
+    ]
+    for df in (ranks, merges):  # broadcast-hinted for any consumer join
+        root = df._jdf.queryExecution().analyzed()
+        assert root.nodeName() == "ResolvedHint"
+    docs = spark.createDataFrame(
+        [(1, "a"), (2, "b")], "doc_id bigint, source string"
+    )
+    assert ("LocalRelation", ["source", "target_weight"]) in _leaves(
+        mixture_plan(docs, {"a": 0.5, "b": 0.5})
+    )
