@@ -51,19 +51,15 @@ def _sql(statement: str):
         _register(spark, sf_dir)
         stmt = statement
         if "/*+ REBALANCE */" in stmt:
+            from jochre3_ocr_spark.plans.pipeline import _spread_count
+
             # eval_text_metrics marks its row-cost-bound levenshtein
-            # projection with REBALANCE, but AQE's BYTE-based coalescing
-            # folds the small pairs frame back to ONE partition. An
-            # explicit user count is exempt from AQE coalescing (sf0.1,
-            # 4 CPUs, min of 3: 2.4-2.6 s against 4.6-5.5 s without the
-            # rewrite); derive it from the session (cores locally,
-            # shuffle.partitions on a sized cluster) — never a constant.
-            n = max(
-                spark.sparkContext.defaultParallelism,
-                int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-            )
+            # projection with REBALANCE, which AQE folds back to ONE
+            # partition; the explicit count is exempt (sf0.1, 4 CPUs,
+            # min of 3: 2.4-2.6 s against 4.6-5.5 s without it)
             stmt = stmt.replace(
-                "/*+ REBALANCE */", f"/*+ REPARTITION({n}) */"
+                "/*+ REBALANCE */",
+                f"/*+ REPARTITION({_spread_count(spark)}) */",
             )
         return spark.sql(stmt)
 

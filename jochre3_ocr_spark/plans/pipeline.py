@@ -14,10 +14,10 @@ Design notes for 100 TB / 1000 executors:
 * the normal path is embarrassingly parallel: one Arrow batch in, one
   out, whole job pipelined with no exchange;
 * span arrays cross the JVM↔Python boundary as JSON strings
-  (``to_json`` / ``from_json``, both JVM whole-stage codegen).
-  Arrow conversion of array<struct> columns to pandas dict objects
-  measured ~10× slower than JSON round-tripping at this span density
-  (~200 spans/doc) — the hot boundary is the engine's main cost;
+  (``to_json`` / ``from_json``, both JVM whole-stage codegen). In the
+  kernel stage's loop the span-JSON encode is 11 % and the decode
+  6.5 %; pyarrow encodes 3–4× and decodes column-wise 2–3× faster, so
+  at most ~15 % of the loop is at stake (CLAUDE.md, ROADMAP);
 * the giant-doc path implements the north_rule's salted repartition —
   a 200-page document becomes ~N chunk rows spread across executors;
   correctness of reassembly relies on block independence (content joins
@@ -108,9 +108,18 @@ def get_spark(
         # every parquet table the engine commits: span JSON repeats its
         # four keys in every span, and zstd halves the committed bytes
         # against the snappy default (6.7 → 3.4 KB per extract_job doc)
-        # at the same write time. Iceberg tables keep the codec of
-        # their own table properties.
+        # at the same write time. A committed corpus is written once and
+        # read by resume, lineage, metrics and finalize, so the level is
+        # 9, not parquet's 3. extract_job output, B/doc, same rows
+        # rewritten on 4 CPUs: level 3 3 296, 6 2 943, 9 2 821, 10 2 783;
+        # reading spans_json takes the same time at every level, and
+        # writing the 28 MB output 0.21 → 0.34 s. Writer memory at 9
+        # (SCALE.md §8): extract_giants peak RSS within 0.1 GiB of level
+        # 3, and a killed 20k-doc job resumes exactly. Dictionary pages
+        # stay on (off: extract output no smaller, dedup input +8 %).
+        # Iceberg tables keep the codec of their own table properties.
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.hadoop.parquet.compression.codec.zstd.level", "9")
         # task-granular atomic commits (v2): a killed job leaves only
         # fully-committed task files, which the resume anti-join then
         # skips — v1's job-level commit can resurrect a dead attempt's
@@ -234,10 +243,11 @@ def _kernel_stage(df: DataFrame, lexicon_bc, row_fn) -> DataFrame:
     payload, lexicon)`` returns one kernel output dict with its spans as
     tuples. The stage owns the rest: the worker's lexicon (shipped by
     ``lexicon_bc``), one per-doc quarantine around the whole of
-    ``row_fn`` — decode and page building included, so a NULL or
-    malformed input becomes an error row, never a failed task (SURVEY.md
-    §3.4) — the ``spans_json`` encode and the output batch. A
-    ``chunk_id`` column rides onto every row, error rows included."""
+    ``row_fn`` and the ``spans_json`` encode — decode, page building and
+    encode included, so a NULL or malformed input, or a span field of
+    the wrong JSON type, becomes an error row, never a failed task
+    (SURVEY.md §3.4) — and the output batch. A ``chunk_id`` column rides
+    onto every row, error rows included."""
     payload = df.columns[-1]
     carry = "chunk_id" in df.columns
 
@@ -250,9 +260,10 @@ def _kernel_stage(df: DataFrame, lexicon_bc, row_fn) -> DataFrame:
             for doc_id, value in zip(batch["doc_id"], batch[payload]):
                 try:
                     out = row_fn(doc_id, value, lexicon)
+                    out["spans_json"] = _tuples_to_json(out.pop("spans"))
                 except Exception as exc:  # noqa: BLE001 — quarantine anything
                     out = error_row(doc_id, exc)
-                out["spans_json"] = _tuples_to_json(out.pop("spans"))
+                    out["spans_json"] = _tuples_to_json(out.pop("spans"))
                 rows.append(out)
             out_batch = pd.DataFrame(rows, columns=_OUT_FIELDS)
             if carry:
@@ -482,18 +493,13 @@ def extract_with_salting(
 
     chunks = giant.mapInPandas(_split_chunks, schema=_CHUNK_DDL)
     # spread chunks of the same giant doc across executors (the salt).
-    # The partition COUNT must be explicit: chunk rows are ~100 KB of
-    # span JSON but cost ~40 ms of kernel each — row-cost-bound, not
-    # byte-bound — and without a user-specified count AQE's byte-based
-    # coalescing folds the whole salt shuffle into ONE partition
-    # (measured at sf0.1: 90 chunks → 1 task → the entire giant branch
-    # serialized, 3.4 s of kernel on one core). repartition(n, cols) is
-    # a user-specified shuffle AQE will not re-coalesce.
-    n_salt = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        spark.sparkContext.defaultParallelism,
+    # Chunk rows are ~100 KB of span JSON but cost ~40 ms of kernel
+    # each; without an explicit count the salt shuffle folds into ONE
+    # partition (measured at sf0.1: 90 chunks → 1 task → 3.4 s of
+    # kernel on one core).
+    chunks = chunks.repartition(
+        _spread_count(spark), F.col("doc_id"), F.col("chunk_id")
     )
-    chunks = chunks.repartition(n_salt, F.col("doc_id"), F.col("chunk_id"))
     chunk_out = _kernel_stage(chunks, lexicon_bc, row)
     raw_giant = chunk_out.groupBy("doc_id").applyInPandas(
         _reassemble, schema=_RAW_OUT_DDL
@@ -579,6 +585,19 @@ def _first_wide_node(df: DataFrame):
             return None
         node = children.head()
     return node
+
+
+def _spread_count(spark: SparkSession) -> int:
+    """The partition count of a shuffle that feeds a row-cost-bound
+    stage. AQE's byte-based coalescing folds a byte-small frame into
+    one partition however costly its rows; an explicit count
+    (``repartition(n, ...)``, ``REPARTITION(n)``) is exempt. Derived
+    from the session — cores locally, shuffle.partitions on a sized
+    cluster — never a constant."""
+    return max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+    )
 
 
 def _spread_small_input(df: DataFrame) -> DataFrame:

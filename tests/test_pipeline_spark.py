@@ -20,8 +20,7 @@ from jochre3_ocr_spark.sources.corpus import (
 N_DOCS = 40
 
 
-@pytest.fixture(scope="module")
-def docs_df(spark):
+def _docs_frame(spark, n):
     rows = [
         (
             d["doc_id"],
@@ -30,9 +29,14 @@ def docs_df(spark):
                 for k, t, m, o in d["spans"]
             ],
         )
-        for d in generate_docs(N_DOCS)
+        for d in generate_docs(n)
     ]
-    return spark.createDataFrame(rows, schema=DOCS_SCHEMA).cache()
+    return spark.createDataFrame(rows, schema=DOCS_SCHEMA)
+
+
+@pytest.fixture(scope="module")
+def docs_df(spark):
+    return _docs_frame(spark, N_DOCS).cache()
 
 
 @pytest.fixture(scope="module")
@@ -103,11 +107,17 @@ def test_extract_with_salting_matches_oracle(docs_df, oracle):
     assert_matches_oracle(out.collect(), oracle)
 
 
+_BAD_MEDIA_REF = '[{"kind": "media", "text": null, "media_ref": 123, "offset": 0}]'
+
 #: hostile span JSON: (doc_id, spans_json, n_in_spans)
 _HOSTILE = [
     ("bad_null", None, None),
     ("bad_malformed", '[{"kind": "word", "text": ', 5),
     ("bad_malformed_giant", "not json at all", 100_000),
+    # valid JSON whose media_ref is a number: the kernel passes it, and
+    # the span-JSON encode of its output raises
+    ("bad_media_ref", _BAD_MEDIA_REF, 1),
+    ("bad_media_ref_giant", _BAD_MEDIA_REF, 100_000),
 ]
 
 
@@ -129,9 +139,10 @@ def _hostile_runs(spark, tmp_path, df):
 
 @pytest.mark.parametrize("with_count", [True, False])
 def test_hostile_span_json_yields_one_row_per_doc(spark, oracle, tmp_path, with_count):
-    """A NULL or malformed ``spans_json`` is exactly one per-doc error row
-    on every extraction path: the decode runs inside the per-doc
-    quarantine (else one bad doc fails the job), a NULL span count takes
+    """A NULL or malformed ``spans_json``, or a span field of the wrong
+    JSON type, is exactly one per-doc error row on every extraction
+    path: the decode and the encode run inside the per-doc quarantine
+    (else one bad doc fails the job), a NULL span count takes
     the narrow branch (else it passes neither branch filter and the doc
     vanishes), and a malformed doc whose count sends it down the salted
     path passes the chunk split as one chunk."""
@@ -320,11 +331,14 @@ def test_run_job_returns_completed_docs(spark, docs_df, tmp_path):
     assert spark.read.parquet(outp).count() == N_DOCS
 
 
-def test_run_job_writes_zstd_and_resumes_over_snappy(spark, docs_df, tmp_path):
-    """get_spark commits every parquet table as zstd. An output started
-    under snappy resumes into the same table: the new data files and the
-    metrics table are ZSTD, the old files stay SNAPPY, and the read-back
-    has one row per input doc."""
+def test_run_job_writes_zstd_and_resumes_over_snappy(spark, tmp_path):
+    """get_spark commits every parquet table as zstd at level 9. An
+    output started under snappy resumes into the same table: the new
+    data files and the metrics table are ZSTD, the old files stay
+    SNAPPY, and the read-back has one row per input doc. The new files
+    are at least 10 % smaller than the same rows written at parquet's
+    default zstd level 3 (with enough docs per file that the footers,
+    which no level shrinks, do not dominate)."""
     import pyarrow.parquet as pq
 
     def codecs(path):
@@ -340,8 +354,9 @@ def test_run_job_writes_zstd_and_resumes_over_snappy(spark, docs_df, tmp_path):
     inp = str(tmp_path / "docs.parquet")
     outp = str(tmp_path / "out.parquet")
     mp = str(tmp_path / "metrics.parquet")
-    docs_df.write.parquet(inp)
-    spark.read.parquet(inp).orderBy("doc_id").limit(N_DOCS // 2).write.parquet(half_inp)
+    n_docs = 8 * N_DOCS
+    _docs_frame(spark, n_docs).write.parquet(inp)
+    spark.read.parquet(inp).orderBy("doc_id").limit(n_docs // 2).write.parquet(half_inp)
     words = lexicon_words()
     key = "spark.sql.parquet.compression.codec"
     session_codec = spark.conf.get(key)
@@ -361,8 +376,22 @@ def test_run_job_writes_zstd_and_resumes_over_snappy(spark, docs_df, tmp_path):
     metrics = glob.glob(os.path.join(mp, "part-*.parquet"))
     assert metrics and all(codecs(f) == {"ZSTD"} for f in metrics)
     out = spark.read.parquet(outp)
-    assert out.count() == N_DOCS
-    assert out.select("doc_id").distinct().count() == N_DOCS
+    assert out.count() == n_docs
+    assert out.select("doc_id").distinct().count() == n_docs
+    # each new file rewritten alone, so both sides hold the same rows
+    # per file and only the level differs
+    level3 = 0
+    for i, f in enumerate(sorted(new)):
+        dest = str(tmp_path / f"level3_{i}.parquet")
+        spark.read.parquet(f).coalesce(1).write.option(
+            "parquet.compression.codec.zstd.level", "3"
+        ).parquet(dest)
+        level3 += sum(
+            os.path.getsize(g)
+            for g in glob.glob(os.path.join(dest, "part-*.parquet"))
+        )
+    level9 = sum(os.path.getsize(f) for f in new)
+    assert level9 <= 0.9 * level3, (level9, level3)
 
 
 def test_run_job_launches_no_job_after_its_write(spark, docs_df, tmp_path, monkeypatch):
